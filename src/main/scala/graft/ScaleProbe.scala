@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.util.SmallInput.distributed
+
 /** Scaling probe (not part of the driver contract): multiplies the sf0.1
   * fact table N× via union to measure how the flagship aggregation and a
   * fact⋈fact join scale with input volume on local[32]. Near-linear rows/s
@@ -109,8 +111,8 @@ object ScaleProbe {
       val li = Seq.fill(m)(li0).reduce(_ unionAll _)
       val n = li.count()
       val t0 = System.nanoTime()
-      // driverCap = 0: the probe measures the DISTRIBUTED rank chain
-      graft.queries.Aggs.percentilesOf(li, Seq(0.25, 0.5, 0.75), driverCap = 0L).collect()
+      // the probe measures the DISTRIBUTED rank chain
+      distributed(graft.queries.Aggs.percentilesOf(li, Seq(0.25, 0.5, 0.75))).collect()
       val tPct = (System.nanoTime() - t0) / 1e9
       println(f"""{"probe":"percentiles","mult":$m,"rows":$n,"sec":$tPct%.2f}""")
     }
@@ -142,8 +144,8 @@ object ScaleProbe {
         .select($"id".as("src"),
           when($"id" % 1000 === 999, $"id" - 999).otherwise($"id" + 1).as("dst"))
       val t0 = System.nanoTime()
-      val comps = graft.operators.Components
-        .connectedComponents(edges, maxIter = 30, driverEdgeCap = 0L)
+      val comps = distributed(graft.operators.Components
+        .connectedComponents(edges, maxIter = 30))
       val nComp = comps.agg(countDistinct($"component")).collect()(0).getLong(0)
       val t = (System.nanoTime() - t0) / 1e9
       require(nComp == nEdges / 1000, s"expected ${nEdges / 1000} components, got $nComp")
@@ -424,24 +426,24 @@ object ScaleProbe {
         }.reduce(_ unionAll _)
         oneWay.union(oneWay.select($"dst".as("src"), $"src".as("dst")))
       }
-      graft.operators.Graph.pagerank(graphOf(1), 1, driverCap = 0L).count() // warm
+      distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count() // warm
       Seq(1, 4, 16).foreach { m =>
         val edges = graphOf(m)
         val n = edges.count()
         val t0 = System.nanoTime()
-        graft.operators.Graph.pagerank(edges, 5, driverCap = 0L)
+        distributed(graft.operators.Graph.pagerank(edges, 5))
           .agg(sum($"rank")).collect()
         val t = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"pagerank","mult":$m,"edges":$n,"sec":$t%.2f}""")
       }
       val base = {
         val t0 = System.nanoTime()
-        graft.operators.Graph.pagerank(graphOf(1), 1, driverCap = 0L).count()
+        distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count()
         (System.nanoTime() - t0) / 1e9
       }
       Seq(3, 6).foreach { iters =>
         val t0 = System.nanoTime()
-        graft.operators.Graph.pagerank(graphOf(1), iters, driverCap = 0L).count()
+        distributed(graft.operators.Graph.pagerank(graphOf(1), iters)).count()
         val t = (System.nanoTime() - t0) / 1e9
         val marginal = (t - base) / (iters - 1)
         println(f"""{"probe":"pagerank_iters","iters":$iters,"sec":$t%.2f,"first_iter_sec":$base%.2f,"marginal_iter_sec":$marginal%.2f}""")
@@ -466,7 +468,7 @@ object ScaleProbe {
         }.reduce(_ unionAll _)
         oneWay.union(oneWay.select($"dst".as("src"), $"src".as("dst")))
       }
-      graft.operators.Graph.pagerank(graphOf(1), 1, driverCap = 0L).count() // warm
+      distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count() // warm
       Seq(1, 16, 64).foreach { m =>
         // NOT checkpointed here: pagerank persists (and releases) its own
         // degree-annotated copy; pinning a second 75M-row copy in the
@@ -475,7 +477,7 @@ object ScaleProbe {
         val n = edges.count()
         val times = Seq(true, false).map { bc =>
           val t0 = System.nanoTime()
-          val mass = graft.operators.Graph.pagerank(edges, 3, broadcastRanks = bc, driverCap = 0L)
+          val mass = distributed(graft.operators.Graph.pagerank(edges, 3, broadcastRanks = bc))
             .agg(sum($"rank")).collect()(0).getLong(0)
           ((System.nanoTime() - t0) / 1e9, mass)
         }
@@ -508,12 +510,12 @@ object ScaleProbe {
         }.reduce(_ unionAll _)
         oneWay.unionAll(oneWay.select($"dst".as("src"), $"src".as("dst"), $"w"))
       }
-      graft.operators.Graph.pagerankWeighted(graphOf(1), 1, driverCap = 0L).count() // warm
+      distributed(graft.operators.Graph.pagerankWeighted(graphOf(1), 1)).count() // warm
       Seq(1, 4, 16).foreach { m =>
         val edges = graphOf(m)
         val n = edges.count()
         val t0 = System.nanoTime()
-        graft.operators.Graph.pagerankWeighted(edges, 5, driverCap = 0L)
+        distributed(graft.operators.Graph.pagerankWeighted(edges, 5))
           .agg(sum($"rank")).collect()
         val t = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"weighted_pagerank","mult":$m,"edges":$n,"sec":$t%.2f}""")
@@ -530,7 +532,7 @@ object ScaleProbe {
         val n = edges.count()
         val srcs = Seq(hubId).toDF("node")
         val t0 = System.nanoTime()
-        val reached = graft.operators.Graph.ssspWeighted(edges, srcs, 4, driverCap = 0L).count()
+        val reached = distributed(graft.operators.Graph.ssspWeighted(edges, srcs, 4)).count()
         val t = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"sssp_hub","mult":$m,"edges":$n,"hub_degree":$hubDeg,"reached":$reached,"sec":$t%.2f}""")
       }
@@ -554,10 +556,10 @@ object ScaleProbe {
         e0.select(($"a" + lit(i.toLong * 1000000000L)).as("a"),
           ($"b" + lit(i.toLong * 1000000000L)).as("b"))
       }.reduce(_ unionAll _)
-      graft.operators.Graph.triangleCount(edgesOf(1), driverCap = 0L).collect() // warm
+      distributed(graft.operators.Graph.triangleCount(edgesOf(1))).collect() // warm
       Seq(1, 4, 16).foreach { m =>
         val t0 = System.nanoTime()
-        val r = graft.operators.Graph.triangleCount(edgesOf(m), driverCap = 0L).collect().head
+        val r = distributed(graft.operators.Graph.triangleCount(edgesOf(m))).collect().head
         val t = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"triangles","mult":$m,"edges":${r.getLong(1)},"tris":${r.getLong(2)},"sec":$t%.2f}""")
       }
@@ -583,15 +585,14 @@ object ScaleProbe {
       def time(f: => Unit): Double = {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
-      graft.operators.Graph.jaccardTopK(hubOf(1), 50, 2L, 256, driverCap = 0L).collect() // warm
+      distributed(graft.operators.Graph.jaccardTopK(hubOf(1), 50, 2L, 256)).collect() // warm
       Seq(1, 4, 16).foreach { m =>
         val g = hubOf(m).localCheckpoint()
         val hubDeg = m * 500
-        val tCap = time(graft.operators.Graph.jaccardTopK(g, 50, 2L, 256, driverCap = 0L).collect())
+        val tCap = time(distributed(graft.operators.Graph.jaccardTopK(g, 50, 2L, 256)).collect())
         val tApx = time(graft.operators.Graph.jaccardTopKApprox(g, 50).collect())
         val tExact = time(
-          graft.operators.Graph.jaccardTopK(g, 50, 2L, Int.MaxValue,
-            driverCap = 0L).collect())
+          distributed(graft.operators.Graph.jaccardTopK(g, 50, 2L, Int.MaxValue)).collect())
         println(f"""{"probe":"jaccard_hub","mult":$m,"hub_degree":$hubDeg,"capped_sec":$tCap%.2f,"approx_sec":$tApx%.2f,"exact_sec":$tExact%.2f}""")
       }
     }
@@ -660,14 +661,14 @@ object ScaleProbe {
         val t0 = System.nanoTime(); val r = f
         ((System.nanoTime() - t0) / 1e9, r)
       }
-      graft.operators.Graph.kcorePeel(hubGraph(1), 3, 4, driverCap = 0L).count() // warm
+      distributed(graft.operators.Graph.kcorePeel(hubGraph(1), 3, 4)).count() // warm
       Seq(1, 4, 16).foreach { m =>
         val g = hubGraph(m).localCheckpoint()
         val n = g.count()
         val (tBc, survBc) = time(
-          graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = true, driverCap = 0L).count())
+          distributed(graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = true)).count())
         val (tSh, survSh) = time(
-          graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = false, driverCap = 0L).count())
+          distributed(graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = false)).count())
         assert(survBc == survSh,
           s"broadcast and shuffle peels must agree at mult=$m: $survBc vs $survSh")
         graft.util.Frames.releaseCheckpoint(g)
@@ -760,14 +761,14 @@ object ScaleProbe {
         // (entries + hops·beam·degree candidate scores per probe), so
         // search wall must stay ~FLAT while the corpus grows 16×
         // (entries are replica-0 ids — present at every mult)
-        val tSearch = time(graft.operators.Ann.graphAnnSearch(
+        val tSearch = time(distributed(graft.operators.Ann.graphAnnSearch(
           probes, c, index,
           c.filter(org.apache.spark.sql.functions.col("cand_id")
               .isin(Seq(5L, 128L, 256L, 384L): _*))
             .crossJoin(probes.select(org.apache.spark.sql.functions.col("probe_id")))
             .select(org.apache.spark.sql.functions.col("probe_id"),
               org.apache.spark.sql.functions.col("cand_id")),
-          16, 4, 3, driverCap = 0L).count())
+          16, 4, 3)).count())
         println(f"""{"probe":"ann_descent","mult":$m,"vectors":$n,"descent_sec":$tDesc%.2f,"exact_sec":$tExact%.2f,"search_sec":$tSearch%.2f}""")
       }
     }
@@ -893,11 +894,11 @@ object ScaleProbe {
         val c = corpusOf(m)
         val n = c.count()
         val tp0 = System.nanoTime()
-        val edges = graft.operators.Cluster.epsPairs(c, 0.3, driverCap = 0L).count()
+        val edges = distributed(graft.operators.Cluster.epsPairs(c, 0.3)).count()
         val tp = (System.nanoTime() - tp0) / 1e9
         val t0 = System.nanoTime()
-        // driverCap = 0: the probe measures the DISTRIBUTED tail
-        val out = graft.operators.Cluster.dbscan(c, 0.3, 8, driverCap = 0L)
+        // the probe measures the DISTRIBUTED tail
+        val out = distributed(graft.operators.Cluster.dbscan(c, 0.3, 8))
           .filter($"role" =!= "noise").count()
         val t = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"dbscan","mult":$m,"vectors":$n,"eps_edges":$edges,"clustered":$out,"pair_sec":$tp%.2f,"total_sec":$t%.2f}""")
@@ -905,7 +906,7 @@ object ScaleProbe {
     }
 
     // DBSCAN ANN candidate route (round 19 — verdict r18 #3): the
-    // over-`epsAnnCap` eps-pair generator. Same sign-flip replicas as
+    // over-`EpsAnnCap` eps-pair generator. Same sign-flip replicas as
     // the dbscan arm; at each size the arm measures the route's pair
     // stage (kmeans cells + routed candidate join + exact verify)
     // against the exact n² BNLJ where the product is still affordable
@@ -933,8 +934,9 @@ object ScaleProbe {
         val (exactEdges, te) =
           if (m <= 4) {
             val t0 = System.nanoTime()
-            val ex = graft.operators.Cluster
-              .epsPairs(c, 0.3, driverCap = 0L).count()
+            // the exact n² tier itself, never epsPairs' size routing:
+            // the comparator must not fall into the ANN route it rates
+            val ex = graft.operators.Cluster.epsPairsExact(c, 0.3).count()
             (ex, (System.nanoTime() - t0) / 1e9)
           } else (-1L, -1.0)
         val recall =
@@ -1275,15 +1277,15 @@ object ScaleProbe {
         val ed = edOf(m).localCheckpoint()
         val nE = ed.count()
         val t0 = System.nanoTime()
-        // driverCap = 0: the probe measures the DISTRIBUTED arms
-        val nB = graft.operators.Graph.hyperBall(ed, 3, 12,
-          broadcastState = true, driverCap = 0L).count()
+        // the probe measures the DISTRIBUTED arms
+        val nB = distributed(graft.operators.Graph.hyperBall(ed, 3, 12,
+          broadcastState = true)).count()
         val tBc = (System.nanoTime() - t0) / 1e9
         // the shuffle arm only at the small mult (its claim is equality
         // + viability, not speed; the broadcast arm is the local pick)
         val tSh = if (m == 1) {
           val t1 = System.nanoTime()
-          graft.operators.Graph.hyperBall(ed, 3, 12, driverCap = 0L).count()
+          distributed(graft.operators.Graph.hyperBall(ed, 3, 12)).count()
           (System.nanoTime() - t1) / 1e9
         } else -1.0
         println(f"""{"probe":"hyperball","mult":$m,"edges":$nE,"nodes":$nB,"bcast_sec":$tBc%.2f,"shuffle_sec":$tSh%.2f,"Medges_per_sec":${3 * nE / tBc / 1e6}%.1f}""")
@@ -1306,7 +1308,7 @@ object ScaleProbe {
         val ed = edOf(m).localCheckpoint()
         val nE = ed.count()
         val t0 = System.nanoTime()
-        val out = graft.operators.Graph.ktrussPeel(ed, 4, 3, driverCap = 0L).count()
+        val out = distributed(graft.operators.Graph.ktrussPeel(ed, 4, 3)).count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"ktruss","mult":$m,"edges":$nE,"truss_edges":$out,"sec":$sec%.2f,"Medges_per_sec":${4 * nE / sec / 1e6}%.1f}""")
       }
@@ -1322,10 +1324,9 @@ object ScaleProbe {
         val docs = replicateDocs(m).localCheckpoint()
         val n = docs.count()
         val t0 = System.nanoTime()
-        // driverCap = 0: the probe measures the DISTRIBUTED tier
-        val out = graft.operators.Dedup.containmentVerify(docs,
-          graft.operators.Dedup.containmentCandidates(docs, driverCap = 0L),
-          5000L, driverCap = 0L).count()
+        // the probe measures the DISTRIBUTED tier
+        val out = distributed(graft.operators.Dedup.containmentVerify(docs,
+          graft.operators.Dedup.containmentCandidates(docs), 5000L)).count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"containment","mult":$m,"docs":$n,"pairs":$out,"sec":$sec%.2f,"kdocs_per_sec":${n / sec / 1e3}%.1f}""")
       }
@@ -1390,11 +1391,10 @@ object ScaleProbe {
           .filter($"s" % 53 === 0)
         val nS = sources.count()
         val t0 = System.nanoTime()
-        // driverCap = 0: the probe's claim is the DISTRIBUTED arm's
+        // distributed only: the probe's claim is the DISTRIBUTED arm's
         // scaling line (the driver arm would otherwise serve the small
         // multiplicities and put an arm-switch cliff mid-line)
-        val out = graft.operators.Graph.betweennessBounded(ed, sources, 3,
-            driverCap = 0L)
+        val out = distributed(graft.operators.Graph.betweennessBounded(ed, sources, 3))
           .count()
         val sec = (System.nanoTime() - t0) / 1e9
         println(f"""{"probe":"betweenness","mult":$m,"edges":$nE,"sources":$nS,"ranked":$out,"sec":$sec%.2f,"Medges_per_sec":${nE / sec / 1e6}%.2f}""")

@@ -72,9 +72,7 @@ object Tables {
                "supplier" | "embeddings" => math.min(8, p)
           case _ => 1
         }
-        val spread =
-          !sys.props.get("graft.poolRepartition").contains("false")
-        (if (spread && raw.rdd.getNumPartitions < target)
+        (if (raw.rdd.getNumPartitions < target)
            raw.repartition(target)
          else raw).persist()
       })

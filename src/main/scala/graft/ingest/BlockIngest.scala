@@ -142,8 +142,14 @@ object BlockIngest {
     * (`evm_consumer.rs:46-50`): value/gas_price/gas → "0", nonce → 0;
     * to_address stays nullable (contract creation). */
   def normalizeTxs(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("chain_name"), col("number").try_cast(LongType).as("block_number"),
+    txsOf(parsed.select(col("chain_name"),
+      col("number").try_cast(LongType).as("block_number"), col("transactions")))
+
+  /** The transactions projection over (chain_name, block_number,
+    * transactions) rows — parsed messages or normalized blocks. */
+  private def txsOf(blocks: DataFrame): DataFrame =
+    blocks
+      .select(col("chain_name"), col("block_number"),
         explode(col("transactions")).as("tx"))
       .select(
         col("chain_name"),
@@ -176,43 +182,25 @@ object BlockIngest {
   def dedupTxs(txs: DataFrame): DataFrame =
     txs.dropDuplicates("chain_name", "block_number", "tx_hash")
 
-  /** normalizeTxs + the parent block hash carried through for canonical
-    * filtering (dropped again before the DDL-shaped write). */
-  private def normalizeTxsKeyed(parsed: DataFrame): DataFrame =
-    parsed
-      .select(col("chain_name"), col("number").try_cast(LongType).as("block_number"),
-        col("hash").as("parent_block_hash"), explode(col("transactions")).as("tx"))
-      .select(
-        col("chain_name"),
-        col("block_number"),
-        col("parent_block_hash"),
-        col("tx.hash").as("tx_hash"),
-        col("tx.from").as("from_address"),
-        col("tx.to").as("to_address"),
-        coalesce(col("tx.value"), lit("0")).as("value"),
-        coalesce(col("tx.gas_price"), lit("0")).as("gas_price"),
-        coalesce(col("tx.gas"), lit("0")).as("gas"),
-        coalesce(col("tx.input"), lit("0x")).as("input"),
-        coalesce(col("tx.nonce").try_cast(LongType), lit(0L)).as("nonce"))
-
   /** A14 sink: parent-before-child (fixes §0.2.4), dedup-on-write (fixes
     * §0.2.5), partitioned by chain for pruning. Child rows are restricted
     * to CANONICAL parents — a reorg that replaces a block must not leave
     * its orphaned transactions behind (the FK intent of
-    * `0001_initial.sql:39`). Parquet append = the idempotent-upsert
-    * surface (compact with keepCanonical). */
+    * `0001_initial.sql:39`): they are exploded from the canonical blocks
+    * themselves, so no join against the messages is needed. The blocks
+    * are persisted for the two writes: recomputed, the transactions write
+    * would read the queue again and shuffle every block's transactions
+    * array through the dedup and the canonical window a second time.
+    * Parquet append = the idempotent-upsert surface (compact with
+    * keepCanonical). */
   def writeBronze(parsed: DataFrame, outDir: String): Unit = {
-    val blocks = keepCanonical(dedupBlocks(normalizeBlocks(parsed)))
-    blocks.write.mode("append").partitionBy("chain_name")
-      .parquet(s"$outDir/blocks")
-    val canon = blocks.select(col("chain_name"), col("block_number"),
-      col("hash").as("parent_block_hash"))
-    val txs = dedupTxs(
-      normalizeTxsKeyed(parsed)
-        .join(canon, Seq("chain_name", "block_number", "parent_block_hash"), "left_semi")
-        .drop("parent_block_hash"))
-    txs.write.mode("append").partitionBy("chain_name")
-      .parquet(s"$outDir/transactions")
+    val blocks = keepCanonical(dedupBlocks(normalizeBlocks(parsed))).persist()
+    try {
+      blocks.write.mode("append").partitionBy("chain_name")
+        .parquet(s"$outDir/blocks")
+      dedupTxs(txsOf(blocks)).write.mode("append").partitionBy("chain_name")
+        .parquet(s"$outDir/transactions")
+    } finally blocks.unpersist(blocking = false)
   }
 
   // ------------------------------------------------------------------ logs

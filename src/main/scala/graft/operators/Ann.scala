@@ -727,9 +727,6 @@ object Ann {
       entries: Seq[Long], beam: Int, hops: Int, k: Int): DataFrame = {
     require(entries.nonEmpty,
       s"need a nonempty entry set, got $entries")
-    // (no driverCap here: Scala forbids defaults on two overloads — the
-    // DataFrame-entries form below carries it; forced-distributed
-    // callers build the entry frame and call that form directly)
     graphAnnSearch(probes, corpus, edges,
       corpus.filter(col("cand_id").isin(entries: _*))
         .crossJoin(probes.select(col("probe_id")))
@@ -747,12 +744,11 @@ object Ann {
     * entries start each probe inside its own nearest cells, so hops
     * spend on refinement, not on crossing the corpus. */
   def graphAnnSearch(probes: DataFrame, corpus: DataFrame, edges: DataFrame,
-      entries: DataFrame, beam: Int, hops: Int, k: Int,
-      driverCap: Long = graft.util.Caps.cap(8192L)): DataFrame = {
+      entries: DataFrame, beam: Int, hops: Int, k: Int): DataFrame = {
     require(beam >= 1 && hops >= 0 && k >= 1,
       s"need beam >= 1, hops >= 0, k >= 1, got $beam $hops $k")
     // Driver arm (optimization round — the silhouetteOf/epsPairs
-    // discipline for the search loop): under `driverCap` VECTORS
+    // discipline for the search loop): under the pair cap of VECTORS
     // (corpus + probes; edge list under 128×cap rows) the whole
     // entry-scoring / fallback / hop-expansion / rerank chain runs in
     // memory with the frame chain's exact arithmetic — graft_cosine's
@@ -763,8 +759,8 @@ object Ann {
     // (join + window + checkpoint) stage chain, not data. Over cap the
     // chain below runs unchanged — per-probe work is parameter-bounded
     // either way; the arm only relocates it.
-    if (driverCap > 0) driverAnnSearch(probes, corpus, edges, entries,
-      beam, hops, k, driverCap).foreach(return _)
+    driverAnnSearch(probes, corpus, edges, entries,
+      beam, hops, k).foreach(return _)
     val ed = edges.localCheckpoint()
     val p = broadcast(probes.select(col("probe_id"), col("pv")))
     def score(cands: DataFrame): DataFrame = corpus
@@ -829,19 +825,18 @@ object Ann {
   /** The in-memory arm behind [[graphAnnSearch]] — None when any input
     * exceeds its cap (the caller falls through to the frame chain). */
   private def driverAnnSearch(probes: DataFrame, corpus: DataFrame,
-      edges: DataFrame, entries: DataFrame, beam: Int, hops: Int, k: Int,
-      driverCap: Long): Option[DataFrame] = {
-    val capI = driverCap.toInt
-    val pTake = probes.select(col("probe_id"), col("pv")).limit(capI + 1).collect()
-    if (pTake.length > driverCap) return None
-    val cTake = corpus.select(col("cand_id"), col("cv")).limit(capI + 1).collect()
-    if (cTake.length > driverCap) return None
-    val eCap = 128 * capI
-    val eTake = edges.select(col("src"), col("dst")).limit(eCap + 1).collect()
-    if (eTake.length > eCap) return None
-    val nTake = entries.select(col("probe_id"), col("cand_id"))
-      .limit(eCap + 1).collect()
-    if (nTake.length > eCap) return None
+      edges: DataFrame, entries: DataFrame, beam: Int,
+      hops: Int, k: Int): Option[DataFrame] = {
+    import graft.util.SmallInput
+    val pTake = SmallInput.take(probes.select(col("probe_id"), col("pv")),
+      SmallInput.PairCap).getOrElse(return None)
+    val cTake = SmallInput.take(corpus.select(col("cand_id"), col("cv")),
+      SmallInput.PairCap).getOrElse(return None)
+    val eCap = 128 * SmallInput.PairCap
+    val eTake = SmallInput.take(edges.select(col("src"), col("dst")), eCap)
+      .getOrElse(return None)
+    val nTake = SmallInput.take(entries.select(col("probe_id"),
+      col("cand_id")), eCap).getOrElse(return None)
     val cvs = new java.util.HashMap[Long, Array[Float]]
     cTake.foreach(r => cvs.put(r.getAs[Number](0).longValue,
       r.getAs[scala.collection.Seq[Float]](1).toArray))
@@ -1295,7 +1290,7 @@ object Ann {
     * kmIters) ride the codebook memo — other parameterizations compute
     * fresh. */
   private[graft] def kmeansFrame(s: SparkSession, dir: String,
-      k: Int, iters: Int, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      k: Int, iters: Int): DataFrame = {
     import s.implicits._
     val corpus = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val cb =
@@ -1311,9 +1306,8 @@ object Ann {
     // assignment expression + count/join stages the TVF re-analyzed on
     // every rebuild. Over cap / null embeddings: the frame chain below
     // (ClusterSpec pins arm equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val take = corpus.select(col("embedding")).limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap && !take.exists(_.isNullAt(0))) {
+    graft.util.SmallInput.take(corpus.select(col("embedding"))).foreach { take =>
+      if (!take.exists(_.isNullAt(0))) {
         val counts = new Array[Long](k)
         take.foreach { r =>
           val v = r.getSeq[Float](0).map(_.toDouble).toIndexedSeq
@@ -1433,9 +1427,9 @@ object Ann {
     * assignment — factored from [[silhouetteFrame]] so OperatorsSpec can
     * pin hand-computable fixtures independent of the codebook.
     *
-    * Driver arm (optimization round — the graph tier's driverCap
-    * discipline applied to the clustering tier's n² member): under
-    * `driverCap` VECTORS the whole pair pass runs in memory with the
+    * Driver arm (optimization round — the graph tier's small-input
+    * arm applied to the clustering tier's n² member): under the pair
+    * cap of VECTORS the whole pair pass runs in memory with the
     * EXACT per-pair arithmetic of the frame below — the same sequential
     * double accumulation as graft_cosine (nullSafeEval's loop order),
     * Spark's HALF_UP round(·, 4) via BigDecimal, floor(x·10⁴ + 0.5)
@@ -1447,81 +1441,77 @@ object Ann {
     * the real computation cheap instead of relying on pruning. Over cap
     * the distributed pair pass below runs unchanged — n² work needs the
     * cluster once n is real. */
-  private[graft] def silhouetteOf(assigned: DataFrame,
-      driverCap: Long = graft.util.Caps.cap(8192L)): DataFrame = {
-    if (driverCap > 0) {
-      val take = assigned.select(col("vec_id"), col("cluster"), col("embedding"))
-        .limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap) {
-        val n = take.length
-        val ids = new Array[Long](n)
-        // cluster labels stay INT end to end (assignPortable's codebook
-        // ids) — the arm must preserve the column type the distributed
-        // frame emits or the oracle's schema compare breaks
-        val cl = new Array[Int](n)
-        val vs = new Array[Array[Float]](n)
-        var i = 0
-        while (i < n) {
-          val r = take(i)
-          ids(i) = r.getAs[Number](0).longValue
-          cl(i) = r.getAs[Number](1).intValue
-          vs(i) = r.getAs[scala.collection.Seq[Float]](2).toArray
-          i += 1
-        }
-        val sE4 = new Array[Long](n)
-        java.util.stream.IntStream.range(0, n).parallel().forEach { x =>
-          // mean distance cells: per cluster, Σ non-null d and the ALL-row
-          // count (null d rides the count but not the sum — the frame's
-          // sum/count semantics over a null-yielding cosine)
-          val sums = scala.collection.mutable.HashMap.empty[Int, Long]
-          val cnts = scala.collection.mutable.HashMap.empty[Int, Long]
-          val nn = scala.collection.mutable.HashSet.empty[Int]
-          val a = vs(x)
-          var j = 0
-          while (j < n) {
-            if (j != x) {
-              val b = vs(j)
-              val len = math.min(a.length, b.length)
-              var dot = 0.0; var na = 0.0; var nb = 0.0
-              var t = 0
-              while (t < len) {
-                val xv = a(t).toDouble; val yv = b(t).toDouble
-                dot += xv * yv; na += xv * xv; nb += yv * yv
-                t += 1
-              }
-              cnts(cl(j)) = cnts.getOrElse(cl(j), 0L) + 1L
-              if (na != 0.0 && nb != 0.0) {
-                val cos = dot / (math.sqrt(na) * math.sqrt(nb))
-                val r4 = java.math.BigDecimal.valueOf(cos)
-                  .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-                val d = 10000L - math.floor(r4 * 10000.0 + 0.5).toLong
-                sums(cl(j)) = sums.getOrElse(cl(j), 0L) + d
-                nn += cl(j)
-              }
-            }
-            j += 1
-          }
-          var aM: Option[Long] = None
-          var bM: Option[Long] = None
-          cnts.keysIterator.foreach { c =>
-            if (nn(c)) {
-              val m = sums(c) / cnts(c)
-              if (c == cl(x)) aM = Some(m)
-              else if (bM.forall(m < _)) bM = Some(m)
-            }
-          }
-          sE4(x) = (aM, bM) match {
-            case (Some(av), Some(bv)) if math.max(av, bv) != 0L =>
-              if (bv >= av) ((bv - av) * 10000L) / math.max(av, bv)
-              else -(((av - bv) * 10000L) / math.max(av, bv))
-            case _ => 0L
-          }
-        }
-        return assigned.sparkSession
-          .createDataFrame((0 until n).map(i => (ids(i), cl(i), sE4(i))))
-          .toDF("vec_id", "cluster", "s_e4")
-          .orderBy(col("vec_id"))
+  private[graft] def silhouetteOf(assigned: DataFrame): DataFrame = {
+    graft.util.SmallInput.take(assigned.select(col("vec_id"), col("cluster"),
+        col("embedding")), graft.util.SmallInput.PairCap).foreach { take =>
+      val n = take.length
+      val ids = new Array[Long](n)
+      // cluster labels stay INT end to end (assignPortable's codebook
+      // ids) — the arm must preserve the column type the distributed
+      // frame emits or the oracle's schema compare breaks
+      val cl = new Array[Int](n)
+      val vs = new Array[Array[Float]](n)
+      var i = 0
+      while (i < n) {
+        val r = take(i)
+        ids(i) = r.getAs[Number](0).longValue
+        cl(i) = r.getAs[Number](1).intValue
+        vs(i) = r.getAs[scala.collection.Seq[Float]](2).toArray
+        i += 1
       }
+      val sE4 = new Array[Long](n)
+      java.util.stream.IntStream.range(0, n).parallel().forEach { x =>
+        // mean distance cells: per cluster, Σ non-null d and the ALL-row
+        // count (null d rides the count but not the sum — the frame's
+        // sum/count semantics over a null-yielding cosine)
+        val sums = scala.collection.mutable.HashMap.empty[Int, Long]
+        val cnts = scala.collection.mutable.HashMap.empty[Int, Long]
+        val nn = scala.collection.mutable.HashSet.empty[Int]
+        val a = vs(x)
+        var j = 0
+        while (j < n) {
+          if (j != x) {
+            val b = vs(j)
+            val len = math.min(a.length, b.length)
+            var dot = 0.0; var na = 0.0; var nb = 0.0
+            var t = 0
+            while (t < len) {
+              val xv = a(t).toDouble; val yv = b(t).toDouble
+              dot += xv * yv; na += xv * xv; nb += yv * yv
+              t += 1
+            }
+            cnts(cl(j)) = cnts.getOrElse(cl(j), 0L) + 1L
+            if (na != 0.0 && nb != 0.0) {
+              val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+              val r4 = java.math.BigDecimal.valueOf(cos)
+                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+              val d = 10000L - math.floor(r4 * 10000.0 + 0.5).toLong
+              sums(cl(j)) = sums.getOrElse(cl(j), 0L) + d
+              nn += cl(j)
+            }
+          }
+          j += 1
+        }
+        var aM: Option[Long] = None
+        var bM: Option[Long] = None
+        cnts.keysIterator.foreach { c =>
+          if (nn(c)) {
+            val m = sums(c) / cnts(c)
+            if (c == cl(x)) aM = Some(m)
+            else if (bM.forall(m < _)) bM = Some(m)
+          }
+        }
+        sE4(x) = (aM, bM) match {
+          case (Some(av), Some(bv)) if math.max(av, bv) != 0L =>
+            if (bv >= av) ((bv - av) * 10000L) / math.max(av, bv)
+            else -(((av - bv) * 10000L) / math.max(av, bv))
+          case _ => 0L
+        }
+      }
+      return assigned.sparkSession
+        .createDataFrame((0 until n).map(i => (ids(i), cl(i), sE4(i))))
+        .toDF("vec_id", "cluster", "s_e4")
+        .orderBy(col("vec_id"))
     }
     silhouetteOfDistributed(assigned)
   }

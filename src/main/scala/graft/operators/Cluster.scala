@@ -51,7 +51,7 @@ object Cluster {
     * oracle-checkable anchor — embeddings fixtures are ≤ 2k rows); the
     * rest is edge-frame algebra: a degree hash-agg, a broadcast-filtered
     * core subgraph, [[Components.connectedComponents]] (union-find under
-    * `driverEdgeCap`, distributed min-label + pointer-jumping above it),
+    * the row cap, distributed min-label + pointer-jumping above it),
     * and one more broadcast join for border assignment. The symmetrized
     * eps-graph materializes ONCE (localCheckpoint) and feeds all three
     * consumers (degree, core subgraph, border assignment).
@@ -73,11 +73,10 @@ object Cluster {
     * eps. ONE builder for [[dbscan]] and the ScaleProbe `dbscan` arm
     * (the probe must time the operator's own quadratic stage, never a
     * copy). */
-  private[graft] def epsPairs(embs: DataFrame, eps: Double,
-      driverCap: Long = graft.util.Caps.cap(8192L)): DataFrame = {
+  private[graft] def epsPairs(embs: DataFrame, eps: Double): DataFrame = {
     val e = embs.select(col("vec_id"), col("embedding"))
     // Driver arm (optimization round — the silhouetteOf discipline for
-    // the OTHER n² clustering stage): under `driverCap` VECTORS the
+    // the OTHER n² clustering stage): under the pair cap of VECTORS the
     // pair pass runs in memory with the exact per-pair arithmetic of
     // the join condition below — graft_cosine's sequential double
     // loop, Spark's HALF_UP round(·, 4), the ≥ eps compare (a NULL
@@ -86,55 +85,52 @@ object Cluster {
     // (three downstream join/agg consumers). Over cap the broadcast-
     // nested-loop stage below runs unchanged — and at real scale the
     // ANN candidate route replaces it entirely (see [[dbscan]]).
-    if (driverCap > 0) {
-      val take = e.limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap) {
-        val n = take.length
-        val ids = new Array[Long](n)
-        val vs = new Array[Array[Float]](n)
-        var i = 0
-        while (i < n) {
-          ids(i) = take(i).getAs[Number](0).longValue
-          vs(i) = take(i).getAs[scala.collection.Seq[Float]](1).toArray
-          i += 1
-        }
-        val perRow = new Array[Seq[(Long, Long)]](n)
-        java.util.stream.IntStream.range(0, n).parallel().forEach { x =>
-          val a = vs(x)
-          val mine = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var j = x + 1
-          while (j < n) {
-            val b = vs(j)
-            val len = math.min(a.length, b.length)
-            var dot = 0.0; var na = 0.0; var nb = 0.0
-            var t = 0
-            while (t < len) {
-              val xv = a(t).toDouble; val yv = b(t).toDouble
-              dot += xv * yv; na += xv * xv; nb += yv * yv
-              t += 1
-            }
-            if (na != 0.0 && nb != 0.0 && ids(x) != ids(j)) {
-              val r4 = java.math.BigDecimal
-                .valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
-                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-              // u < v on VALUES, not indices — ids carry no order contract
-              if (r4 >= eps)
-                mine += (if (ids(x) < ids(j)) (ids(x), ids(j))
-                  else (ids(j), ids(x)))
-            }
-            j += 1
-          }
-          perRow(x) = mine.toSeq
-        }
-        val pairs: Seq[(Long, Long)] =
-          perRow.iterator.filter(_ != null).flatten.toIndexedSeq
-        val s = embs.sparkSession
-        return s.createDataFrame(s.sparkContext.parallelize(pairs, 8))
-          .toDF("u", "v")
+    graft.util.SmallInput.take(e, graft.util.SmallInput.PairCap).foreach { take =>
+      val n = take.length
+      val ids = new Array[Long](n)
+      val vs = new Array[Array[Float]](n)
+      var i = 0
+      while (i < n) {
+        ids(i) = take(i).getAs[Number](0).longValue
+        vs(i) = take(i).getAs[scala.collection.Seq[Float]](1).toArray
+        i += 1
       }
+      val perRow = new Array[Seq[(Long, Long)]](n)
+      java.util.stream.IntStream.range(0, n).parallel().forEach { x =>
+        val a = vs(x)
+        val mine = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        var j = x + 1
+        while (j < n) {
+          val b = vs(j)
+          val len = math.min(a.length, b.length)
+          var dot = 0.0; var na = 0.0; var nb = 0.0
+          var t = 0
+          while (t < len) {
+            val xv = a(t).toDouble; val yv = b(t).toDouble
+            dot += xv * yv; na += xv * xv; nb += yv * yv
+            t += 1
+          }
+          if (na != 0.0 && nb != 0.0 && ids(x) != ids(j)) {
+            val r4 = java.math.BigDecimal
+              .valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+            // u < v on VALUES, not indices — ids carry no order contract
+            if (r4 >= eps)
+              mine += (if (ids(x) < ids(j)) (ids(x), ids(j))
+                else (ids(j), ids(x)))
+          }
+          j += 1
+        }
+        perRow(x) = mine.toSeq
+      }
+      val pairs: Seq[(Long, Long)] =
+        perRow.iterator.filter(_ != null).flatten.toIndexedSeq
+      val s = embs.sparkSession
+      return s.createDataFrame(s.sparkContext.parallelize(pairs, 8))
+        .toDF("u", "v")
     }
     // AT-SCALE tier (optimization round 19 — verdict r18 #3): above
-    // `graft.epsAnnCap` vectors the n² product is not buildable at any
+    // [[EpsAnnCap]] vectors the n² product is not buildable at any
     // budget, and the documented ANN candidate route IS the over-cap
     // path, not a footnote: IVF cells bound which pairs are scored, the
     // exact kernel verifies every candidate (no false edges — recall is
@@ -142,11 +138,16 @@ object Cluster {
     // never sees this tier: every checked SF is far below the default
     // 16384, so declared results are computed by the exact stages below.
     // The size probe is a limit(cap+1) count over ids — an early-stop
-    // narrow scan, the takePairs contract.
-    val annCap = epsAnnCap
-    if (annCap > 0 && annCap < Int.MaxValue &&
-        e.select(col("vec_id")).limit(annCap.toInt + 1).count() > annCap)
-      return epsPairsAnn(e, eps)
+    // narrow scan.
+    if (e.select(col("vec_id")).limit(EpsAnnCap + 1).count() > EpsAnnCap)
+      epsPairsAnn(e, eps)
+    else epsPairsExact(e, eps)
+  }
+
+  /** The exact eps-graph tier: every pair scored (n² work), no
+    * approximation — the ScaleProbe `dbscan_ann` comparator's baseline. */
+  private[graft] def epsPairsExact(embs: DataFrame, eps: Double): DataFrame = {
+    val e = embs.select(col("vec_id"), col("embedding"))
     // explicit broadcast-nested-loop shape (the EXACT mid-tier): the
     // candidate side is the broadcast build, the probe side REPARTITIONS
     // so the n² kernel work spreads across cores (a single-file parquet
@@ -166,14 +167,10 @@ object Cluster {
   }
 
   /** Vector-count threshold where [[epsPairs]] abandons the exact n²
-    * product for the IVF candidate route — overridable for the
-    * ScaleProbe growth arm (-Dgraft.epsAnnCap). The checked fixtures
-    * (≤ 2k vectors at sf0.1) sit far below the default, so the oracle
-    * always exercises the exact stages. */
-  private[graft] def epsAnnCap: Long =
-    sys.props.get("graft.epsAnnCap")
-      .flatMap(p => scala.util.Try(p.trim.toLong).toOption)
-      .getOrElse(16384L)
+    * product for the IVF candidate route. The checked fixtures (≤ 2k
+    * vectors at sf0.1) sit far below it, so the oracle always exercises
+    * the exact stages. */
+  private[graft] val EpsAnnCap: Int = 16384
 
   /** The IVF candidate route for the eps-graph [[Ann]] codebook cells
     * as the candidate generator; Ester et al.'s neighborhood predicate
@@ -221,8 +218,7 @@ object Cluster {
       .distinct()
   }
 
-  def dbscan(embs: DataFrame, eps: Double, minPts: Int,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+  def dbscan(embs: DataFrame, eps: Double, minPts: Int): DataFrame = {
     require(minPts >= 1, s"minPts must be >= 1, got $minPts")
     val e = embs.select(col("vec_id"), col("embedding"))
     val pairs = epsPairs(e, eps)
@@ -234,72 +230,65 @@ object Cluster {
     // run (the graft_dbscan TVF re-resolves that chain whenever the
     // bench releases its spliced checkpoint). Over cap / null ids: the
     // unchanged chain below (ClusterSpec pins arm equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val capI = driverCap.toInt
-      val pTake = pairs.limit(capI + 1).collect()
-      val vTake =
-        if (pTake.length <= driverCap)
-          e.select(col("vec_id")).limit(capI + 1).collect()
-        else null
-      if (pTake.length <= driverCap && vTake.length <= driverCap &&
-          !pTake.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-          !vTake.exists(_.isNullAt(0))) {
-        import scala.collection.mutable.HashMap
-        val pu = pTake.map(r => (r.getAs[Number](0).longValue,
-          r.getAs[Number](1).longValue))
-        val ids = vTake.map(_.getAs[Number](0).longValue)
-        val deg = HashMap.empty[Long, Long]
-        pu.foreach { case (u, v) =>
-          deg(u) = deg.getOrElse(u, 0L) + 1L
-          deg(v) = deg.getOrElse(v, 0L) + 1L
-        }
-        val isCore = ids.iterator
-          .filter(id => deg.getOrElse(id, 0L) + 1 >= minPts).toSet
-        // min-id union-find over the core-core subgraph (the
-        // Components.connectedComponents contract)
-        val parent = HashMap.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent(c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        pu.foreach { case (u, v) =>
-          if (isCore(u) && isCore(v)) {
-            parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
-            val ru = find(u); val rv = find(v)
-            if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
-          }
-        }
-        // core cluster: component min-id; isolated cores: own id
-        val coreCluster = HashMap.empty[Long, Long]
-        isCore.foreach(id => coreCluster(id) = id)
-        parent.keysIterator.foreach(id => coreCluster(id) = find(id))
-        // border: smallest core-neighbor cluster over the SYMMETRIZED
-        // edge set
-        val border = HashMap.empty[Long, Long]
-        def offer(u: Long, v: Long): Unit =
-          coreCluster.get(v).foreach { c =>
-            val prev = border.get(u)
-            if (prev.isEmpty || c < prev.get) border(u) = c
-          }
-        pu.foreach { case (u, v) => offer(u, v); offer(v, u) }
-        val rows = ids.map { id =>
-          val d = deg.getOrElse(id, 0L)
-          val cc = coreCluster.get(id)
-          val bc = border.get(id)
-          val role =
-            if (cc.isDefined) "core"
-            else if (bc.isDefined) "border"
-            else "noise"
-          (id, d, role, cc.orElse(bc).getOrElse(-1L))
-        }
-        return embs.sparkSession.createDataFrame(rows.toSeq)
-          .toDF("vec_id", "deg", "role", "cluster")
+    for (pTake <- graft.util.SmallInput.take(pairs);
+         vTake <- graft.util.SmallInput.take(e.select(col("vec_id")))
+         if !pTake.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
+           !vTake.exists(_.isNullAt(0))) {
+      import scala.collection.mutable.HashMap
+      val pu = pTake.map(r => (r.getAs[Number](0).longValue,
+        r.getAs[Number](1).longValue))
+      val ids = vTake.map(_.getAs[Number](0).longValue)
+      val deg = HashMap.empty[Long, Long]
+      pu.foreach { case (u, v) =>
+        deg(u) = deg.getOrElse(u, 0L) + 1L
+        deg(v) = deg.getOrElse(v, 0L) + 1L
       }
+      val isCore = ids.iterator
+        .filter(id => deg.getOrElse(id, 0L) + 1 >= minPts).toSet
+      // min-id union-find over the core-core subgraph (the
+      // Components.connectedComponents contract)
+      val parent = HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) {
+          val nxt = parent(c); parent(c) = r; c = nxt
+        }
+        r
+      }
+      pu.foreach { case (u, v) =>
+        if (isCore(u) && isCore(v)) {
+          parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
+          val ru = find(u); val rv = find(v)
+          if (ru != rv) { if (ru < rv) parent(rv) = ru else parent(ru) = rv }
+        }
+      }
+      // core cluster: component min-id; isolated cores: own id
+      val coreCluster = HashMap.empty[Long, Long]
+      isCore.foreach(id => coreCluster(id) = id)
+      parent.keysIterator.foreach(id => coreCluster(id) = find(id))
+      // border: smallest core-neighbor cluster over the SYMMETRIZED
+      // edge set
+      val border = HashMap.empty[Long, Long]
+      def offer(u: Long, v: Long): Unit =
+        coreCluster.get(v).foreach { c =>
+          val prev = border.get(u)
+          if (prev.isEmpty || c < prev.get) border(u) = c
+        }
+      pu.foreach { case (u, v) => offer(u, v); offer(v, u) }
+      val rows = ids.map { id =>
+        val d = deg.getOrElse(id, 0L)
+        val cc = coreCluster.get(id)
+        val bc = border.get(id)
+        val role =
+          if (cc.isDefined) "core"
+          else if (bc.isDefined) "border"
+          else "noise"
+        (id, d, role, cc.orElse(bc).getOrElse(-1L))
+      }
+      return embs.sparkSession.createDataFrame(rows.toSeq)
+        .toDF("vec_id", "deg", "role", "cluster")
     }
     // symmetrize once; three consumers read the materialized blocks
     val sym = pairs.union(pairs.select(col("v").as("u"), col("u").as("v")))

@@ -36,25 +36,23 @@ object Components {
     * Output: (id, component). Nodes absent from `edges` are the caller's
     * singletons — left-join this result and coalesce to the node's own id.
     *
-    * Edge lists at or under `driverEdgeCap` solve with a driver-side
+    * Edge lists at or under the row cap solve with a driver-side
     * union-find in ONE job instead of ~log n iterative jobs: an
     * LSH-verified near-dup edge list is bounded far below corpus size
     * (bucket caps + Jaccard verify), so it is broadcast-scale by the same
     * argument as a k-means codebook, and per-iteration job-scheduling
-    * latency — not data volume — dominates the distributed loop there.
-    * Pass `driverEdgeCap = 0` to force the distributed path. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      driverEdgeCap: Long = graft.util.Caps.cap(1000000L)): DataFrame =
-    run(edges, maxIter, driverEdgeCap)._1
+    * latency — not data volume — dominates the distributed loop there
+    * ([[graft.util.SmallInput]] decides). */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame =
+    run(edges, maxIter)._1
 
   /** Rounds the distributed propagation needed on this edge list — the
     * test hook backing the O(log n) convergence claim. */
   private[operators] def roundsToConverge(edges: DataFrame, maxIter: Int = 64): Int =
-    run(edges, maxIter, driverEdgeCap = 0L)._2
+    graft.util.SmallInput.distributed(run(edges, maxIter))._2
 
-  private def run(edges: DataFrame, maxIter: Int, driverEdgeCap: Long): (DataFrame, Int) = {
+  private def run(edges: DataFrame, maxIter: Int): (DataFrame, Int) = {
     require(maxIter >= 1, s"maxIter must be >= 1, got $maxIter")
-    require(driverEdgeCap < Int.MaxValue, "driverEdgeCap must fit an Int limit")
     // materialize the edge list ONCE, then probe it: collecting at most
     // cap+1 rows from the checkpoint both sizes and fetches the edges (no
     // separate count job), and an over-cap probe wastes only the bounded
@@ -62,13 +60,10 @@ object Components {
     // near-dup edges is the whole minhash/verify chain
     val chk = edges.select(col("src").as("a"), col("dst").as("b"))
       .localCheckpoint()
-    if (driverEdgeCap > 0) {
-      // union-find is direction-agnostic and dedup-tolerant: the raw edge
-      // list suffices, no symmetrize/distinct needed on this path
-      val take = chk.limit(driverEdgeCap.toInt + 1).collect()
-      if (take.length <= driverEdgeCap) {
-        return (unionFind(take, edges.sparkSession), 1)
-      }
+    // union-find is direction-agnostic and dedup-tolerant: the raw edge
+    // list suffices, no symmetrize/distinct needed on this path
+    graft.util.SmallInput.take(chk).foreach { take =>
+      return (unionFind(take, edges.sparkSession), 1)
     }
     // distributed path: symmetrize once (min-propagation needs both
     // directions)

@@ -198,8 +198,7 @@ object Dedup {
     * maxBucketSize (default [[defaultMaxBucketSize]]) are dropped — the
     * 100 TB skew guard is ON unless explicitly opted out. */
   def minhashNearDups(docs: DataFrame, threshold: Double,
-      maxBucketSize: Int = defaultMaxBucketSize,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      maxBucketSize: Int = defaultMaxBucketSize): DataFrame = {
     // Driver arm (optimization round): signatures and band hashes still
     // compute IN SPARK (the graft_minhash kernel + md5 band expressions
     // have one definition); the collect ships the bucket keys and the
@@ -208,69 +207,65 @@ object Dedup {
     // replacing the checkpoint + bucket-size join + self-join + two
     // verify joins. Over cap / null ids: the frame chain below
     // (OperatorsSpec pins arm equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val capI = driverCap.toInt
-      // ONE pass computes gate + tokens + signature + band hashes
-      // (signatures hash the SAME token array the verify reads — one
-      // evaluation of the upstream pipeline instead of the frame
-      // chain's checkpoint + re-reads)
-      val sig = call_function("graft_minhash", col("toks"),
-        lit(minhashSeeds.size))
-      val bhs = array((0 until bandsOf).map { b =>
-        md5(concat(element_at(col("sig"), 2 * b + 1),
-          element_at(col("sig"), 2 * b + 2)))
-      }: _*)
-      val rowsIn = docs
+    // ONE pass computes gate + tokens + signature + band hashes
+    // (signatures hash the SAME token array the verify reads — one
+    // evaluation of the upstream pipeline instead of the frame
+    // chain's checkpoint + re-reads)
+    val sig = call_function("graft_minhash", col("toks"),
+      lit(minhashSeeds.size))
+    val bhs = array((0 until bandsOf).map { b =>
+      md5(concat(element_at(col("sig"), 2 * b + 1),
+        element_at(col("sig"), 2 * b + 2)))
+    }: _*)
+    graft.util.SmallInput.take(docs
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("toks"), sig.as("sig"))
-        .select(col("doc_id"), col("toks"), bhs.as("bhs"))
-        .limit(capI + 1).collect()
-      if (rowsIn.length <= driverCap && !rowsIn.exists(_.isNullAt(0))) {
-        import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
-        val byBucket = HashMap.empty[(Int, String), ArrayBuffer[Long]]
-        val toksOf = HashMap.empty[Long, Set[String]]
-        rowsIn.foreach { r =>
-          val id = r.getAs[Number](0).longValue
-          if (!r.isNullAt(1)) toksOf(id) = r.getSeq[String](1).toSet
-          if (!r.isNullAt(2)) {
-            val hs = r.getSeq[String](2)
-            var b = 0
-            while (b < hs.length) {
-              // null band hash (null text) pairs nothing
-              if (hs(b) != null)
-                byBucket.getOrElseUpdate((b, hs(b)), ArrayBuffer.empty) += id
-              b += 1
-            }
+        .select(col("doc_id"), col("toks"), bhs.as("bhs")))
+      .filter(!_.exists(_.isNullAt(0))).foreach { rowsIn =>
+      import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
+      val byBucket = HashMap.empty[(Int, String), ArrayBuffer[Long]]
+      val toksOf = HashMap.empty[Long, Set[String]]
+      rowsIn.foreach { r =>
+        val id = r.getAs[Number](0).longValue
+        if (!r.isNullAt(1)) toksOf(id) = r.getSeq[String](1).toSet
+        if (!r.isNullAt(2)) {
+          val hs = r.getSeq[String](2)
+          var b = 0
+          while (b < hs.length) {
+            // null band hash (null text) pairs nothing
+            if (hs(b) != null)
+              byBucket.getOrElseUpdate((b, hs(b)), ArrayBuffer.empty) += id
+            b += 1
           }
         }
-        val cand = HashSet.empty[(Long, Long)]
-        byBucket.valuesIterator.foreach { ids =>
-          if (ids.length <= maxBucketSize) {
-            val arr = ids.toArray
-            var i = 0
-            while (i < arr.length) {
-              var j = 0
-              while (j < arr.length) {
-                if (arr(i) < arr(j)) cand += ((arr(i), arr(j)))
-                j += 1
-              }
-              i += 1
-            }
-          }
-        }
-        val rows = cand.iterator.flatMap { case (d1, d2) =>
-          (toksOf.get(d1), toksOf.get(d2)) match {
-            case (Some(t1), Some(t2)) =>
-              val (small, big) = if (t1.size <= t2.size) (t1, t2) else (t2, t1)
-              val inter = small.count(big)
-              val jac = inter.toDouble / (t1.size + t2.size - inter).toDouble
-              if (jac >= threshold) Some((d1, d2, jac)) else None
-            case _ => None
-          }
-        }.toSeq
-        return docs.sparkSession.createDataFrame(rows)
-          .toDF("d1", "d2", "jaccard")
       }
+      val cand = HashSet.empty[(Long, Long)]
+      byBucket.valuesIterator.foreach { ids =>
+        if (ids.length <= maxBucketSize) {
+          val arr = ids.toArray
+          var i = 0
+          while (i < arr.length) {
+            var j = 0
+            while (j < arr.length) {
+              if (arr(i) < arr(j)) cand += ((arr(i), arr(j)))
+              j += 1
+            }
+            i += 1
+          }
+        }
+      }
+      val rows = cand.iterator.flatMap { case (d1, d2) =>
+        (toksOf.get(d1), toksOf.get(d2)) match {
+          case (Some(t1), Some(t2)) =>
+            val (small, big) = if (t1.size <= t2.size) (t1, t2) else (t2, t1)
+            val inter = small.count(big)
+            val jac = inter.toDouble / (t1.size + t2.size - inter).toDouble
+            if (jac >= threshold) Some((d1, d2, jac)) else None
+          case _ => None
+        }
+      }.toSeq
+      return docs.sparkSession.createDataFrame(rows)
+        .toDF("d1", "d2", "jaccard")
     }
     verifyJaccard(docs,
       lshCandidates(lshBuckets(minhashSignatures(docs)), maxBucketSize),
@@ -506,53 +501,51 @@ object Dedup {
     * q_dedup_containment_scale runs this exact algebra under the
     * DuckDB oracle. */
   def containmentCandidates(docs: DataFrame, k: Int = 8,
-      dfCap: Long = 64, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      dfCap: Long = 64): DataFrame = {
     // Driver arm (optimization round): df counts, per-doc rare-k picks
     // ((df, s)-ordered — ties impossible, shingles are doc-distinct),
     // the dfCap'd postings union and the pair join are all exact
     // set/count algebra over the collected (doc, shingles) frame —
     // previously two window passes + a distinct + a join. Over cap:
     // the frame chain below (OperatorsSpec pins arm equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      collectShingles(docs, driverCap).foreach { shArr =>
-        import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
-        val df = HashMap.empty[String, Long]
-        shArr.foreach { case (_, arr) =>
-          arr.foreach(s => df(s) = df.getOrElse(s, 0L) + 1L)
-        }
-        // rare: per doc the k picks by (df asc, s asc)
-        val rareByS = HashMap.empty[String, ArrayBuffer[Long]]
-        shArr.foreach { case (id, arr) =>
-          arr.sortBy(s => (df(s), s)).take(k)
-            .foreach(s => rareByS.getOrElseUpdate(s, ArrayBuffer.empty) += id)
-        }
-        // postings: full lists for df ≤ dfCap shingles, plus each rare
-        // bucket capped at its dfCap lowest doc_ids
-        val postings = HashMap.empty[String, HashSet[Long]]
-        if (dfCap > 0) shArr.foreach { case (id, arr) =>
-          arr.foreach { s =>
-            if (df(s) <= dfCap)
-              postings.getOrElseUpdate(s, HashSet.empty) += id
-          }
-        }
-        rareByS.foreach { case (s, ids) =>
-          val capped = ids.sorted.take(math.min(dfCap, Int.MaxValue).toInt)
-          val p = postings.getOrElseUpdate(s, HashSet.empty)
-          capped.foreach(p += _)
-        }
-        val pairs = HashSet.empty[(Long, Long)]
-        rareByS.foreach { case (s, ids) =>
-          val post = postings.getOrElse(s, HashSet.empty[Long])
-          ids.foreach { a =>
-            post.foreach { b =>
-              if (a != b)
-                pairs += ((math.min(a, b), math.max(a, b)))
-            }
-          }
-        }
-        return docs.sparkSession.createDataFrame(pairs.toSeq)
-          .toDF("d1", "d2")
+    collectShingles(docs).foreach { shArr =>
+      import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
+      val df = HashMap.empty[String, Long]
+      shArr.foreach { case (_, arr) =>
+        arr.foreach(s => df(s) = df.getOrElse(s, 0L) + 1L)
       }
+      // rare: per doc the k picks by (df asc, s asc)
+      val rareByS = HashMap.empty[String, ArrayBuffer[Long]]
+      shArr.foreach { case (id, arr) =>
+        arr.sortBy(s => (df(s), s)).take(k)
+          .foreach(s => rareByS.getOrElseUpdate(s, ArrayBuffer.empty) += id)
+      }
+      // postings: full lists for df ≤ dfCap shingles, plus each rare
+      // bucket capped at its dfCap lowest doc_ids
+      val postings = HashMap.empty[String, HashSet[Long]]
+      if (dfCap > 0) shArr.foreach { case (id, arr) =>
+        arr.foreach { s =>
+          if (df(s) <= dfCap)
+            postings.getOrElseUpdate(s, HashSet.empty) += id
+        }
+      }
+      rareByS.foreach { case (s, ids) =>
+        val capped = ids.sorted.take(math.min(dfCap, Int.MaxValue).toInt)
+        val p = postings.getOrElseUpdate(s, HashSet.empty)
+        capped.foreach(p += _)
+      }
+      val pairs = HashSet.empty[(Long, Long)]
+      rareByS.foreach { case (s, ids) =>
+        val post = postings.getOrElse(s, HashSet.empty[Long])
+        ids.foreach { a =>
+          post.foreach { b =>
+            if (a != b)
+              pairs += ((math.min(a, b), math.max(a, b)))
+          }
+        }
+      }
+      return docs.sparkSession.createDataFrame(pairs.toSeq)
+        .toDF("d1", "d2")
     }
     val sh = docs.select(col("doc_id"), explode(shingles3(col("text"))).as("s"))
     val dfs = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
@@ -591,7 +584,7 @@ object Dedup {
     * ([[containmentCandidates]]); precision is 1 by construction
     * (every emitted pair is exactly verified). */
   def containmentVerify(docs: DataFrame, cands: DataFrame,
-      thresholdE4: Long, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      thresholdE4: Long): DataFrame = {
     // Driver arm (optimization round): the verify is per-pair exact set
     // arithmetic over doc-distinct shingle arrays — shingles3 still
     // computes IN SPARK (the collect ships the arrays, so tokenization
@@ -600,36 +593,30 @@ object Dedup {
     // array_intersect-per-pair join stage (the pair product × shingle
     // width was the CPU cost). Over cap / null ids: the frame chain
     // below (OperatorsSpec pins arm equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val armOut = for {
-        sh <- collectShingles(docs, driverCap)
-        pr <- {
-          val t = cands.select(col("d1"), col("d2"))
-            .limit(driverCap.toInt + 1).collect()
-          if (t.length > driverCap ||
-              t.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-          else Some(t.map(r => (r.getAs[Number](0).longValue,
-            r.getAs[Number](1).longValue)))
+    val armOut = for {
+      sh <- collectShingles(docs)
+      t <- graft.util.SmallInput.take(cands.select(col("d1"), col("d2")))
+      if !t.exists(r => r.isNullAt(0) || r.isNullAt(1))
+      pr = t.map(r => (r.getAs[Number](0).longValue,
+        r.getAs[Number](1).longValue))
+    } yield {
+      val sets = sh.iterator
+        .map { case (id, arr) => id -> arr.toSet }.toMap
+      val rows = pr.iterator.flatMap { case (d1, d2) =>
+        (sets.get(d1), sets.get(d2)) match {
+          case (Some(s1), Some(s2)) if s1.nonEmpty && s2.nonEmpty =>
+            val (small, big) = if (s1.size <= s2.size) (s1, s2) else (s2, s1)
+            val inter = small.count(big).toLong
+            val mn = small.size.toLong
+            val e4 = inter * 10000L / mn
+            if (e4 >= thresholdE4) Some((d1, d2, inter, mn, e4)) else None
+          case _ => None
         }
-      } yield {
-        val sets = sh.iterator
-          .map { case (id, arr) => id -> arr.toSet }.toMap
-        val rows = pr.iterator.flatMap { case (d1, d2) =>
-          (sets.get(d1), sets.get(d2)) match {
-            case (Some(s1), Some(s2)) if s1.nonEmpty && s2.nonEmpty =>
-              val (small, big) = if (s1.size <= s2.size) (s1, s2) else (s2, s1)
-              val inter = small.count(big).toLong
-              val mn = small.size.toLong
-              val e4 = inter * 10000L / mn
-              if (e4 >= thresholdE4) Some((d1, d2, inter, mn, e4)) else None
-            case _ => None
-          }
-        }.toSeq
-        docs.sparkSession.createDataFrame(rows)
-          .toDF("d1", "d2", "inter", "mn", "cont_e4")
-      }
-      armOut.foreach(out => return out)
+      }.toSeq
+      docs.sparkSession.createDataFrame(rows)
+        .toDF("d1", "d2", "inter", "mn", "cont_e4")
     }
+    armOut.foreach(out => return out)
     val withSh = docs
       .select(col("doc_id"), shingles3(col("text")).as("sh"))
       .filter(size(col("sh")) >= 1)
@@ -649,11 +636,12 @@ object Dedup {
     * chains use. None over cap or on a null doc_id; a null/empty
     * shingle array keeps the doc with an empty set (it then pairs with
     * nothing, the frames' inner-join/explode behavior). */
-  private def collectShingles(docs: DataFrame,
-      cap: Long): Option[Array[(Long, Array[String])]] = {
-    val t = docs.select(col("doc_id"), shingles3(col("text")).as("sh"))
-      .limit(cap.toInt + 1).collect()
-    if (t.length > cap || t.exists(_.isNullAt(0))) None
+  private def collectShingles(
+      docs: DataFrame): Option[Array[(Long, Array[String])]] = {
+    val t = graft.util.SmallInput.take(
+      docs.select(col("doc_id"), shingles3(col("text")).as("sh")))
+      .getOrElse(return None)
+    if (t.exists(_.isNullAt(0))) None
     else Some(t.map { r =>
       val sh: Array[String] =
         if (r.isNullAt(1)) Array.empty[String]
@@ -1256,8 +1244,7 @@ object Dedup {
     * closure is the shared Components machinery, survivorship elects
     * the canonical record deterministically. */
   private[graft] def erEntitiesFrom(ids: DataFrame, rep: DataFrame,
-      blocked: Option[DataFrame] = None,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      blocked: Option[DataFrame] = None): DataFrame = {
     val names = ids.select(col("name"), col("n_parts"),
       element_at(split(col("name"), " "), 1).as("adj"),
       element_at(split(col("name"), " "), 2).as("noun"))
@@ -1278,12 +1265,7 @@ object Dedup {
     // canon, count-desc-then-value-asc modal). Over cap or on any null:
     // the unchanged frame chain below (DedupSpec pins arm equality; the
     // store read shares this code path, so q_tvf_entities inherits it).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      erEntitiesDriver(ids, rep, cands, driverCap) match {
-        case Some(out) => return out
-        case None => ()
-      }
-    }
+    erEntitiesDriver(ids, rep, cands).foreach(return _)
     val edges = erScoring(cands, rep)
       .filter(col("score") >= 1500)
       .join(broadcast(ids.select(col("name").as("name_1"),
@@ -1328,21 +1310,21 @@ object Dedup {
     * output is row-identical to the frame chain (DedupSpec pins it).
     * None over the row cap or on any null field. */
   private def erEntitiesDriver(ids: DataFrame, rep: DataFrame,
-      cands: DataFrame, cap: Long): Option[DataFrame] = {
+      cands: DataFrame): Option[DataFrame] = {
     import scala.collection.mutable.{ArrayBuffer, HashMap}
+    import graft.util.SmallInput
     val s = ids.sparkSession
-    val capI = cap.toInt
-    val idRows = ids.select(col("name"), col("nid"), col("n_parts"))
-      .limit(capI + 1).collect()
-    if (idRows.length > cap || idRows.exists(r =>
+    val idRows = SmallInput.take(ids.select(col("name"), col("nid"),
+      col("n_parts"))).getOrElse(return None)
+    if (idRows.exists(r =>
         r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) return None
-    val repRows = rep.select(col("name"), col("p_brand"), col("p_type"),
-        col("p_size")).limit(capI + 1).collect()
-    if (repRows.length > cap || repRows.exists(r =>
+    val repRows = SmallInput.take(rep.select(col("name"), col("p_brand"),
+      col("p_type"), col("p_size"))).getOrElse(return None)
+    if (repRows.exists(r =>
         r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2) || r.isNullAt(3)))
       return None
-    val candRows = cands.limit(capI + 1).collect()
-    if (candRows.length > cap || candRows.exists(r =>
+    val candRows = SmallInput.take(cands).getOrElse(return None)
+    if (candRows.exists(r =>
         r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) return None
     // dims
     val idByName = HashMap.empty[String, (Long, Long)] // name -> (nid, n_parts)

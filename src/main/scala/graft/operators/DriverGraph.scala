@@ -3,19 +3,18 @@ package graft.operators
 import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
 
 /** In-memory fixpoints behind the graph tier's DRIVER ARMS (round 18's
-  * driverEdgeCap discipline, extended in the optimization round to every
+  * union-find arm, extended in the optimization round to every
   * loop operator whose distributed cost was measured to be sequential
   * stage-scheduling latency, not data): when the edge list fits the
   * cap the whole multi-round loop runs as plain integer loops over
   * collected arrays — exactly the recurrence the frame chain executes,
   * all-BIGINT, so the outputs are bit-identical (GraphSpec pins arm
   * equality per operator; the distributed chain stays the over-cap
-  * 100 TB fallback and ScaleProbe keeps measuring it at driverCap = 0).
+  * 100 TB fallback and ScaleProbe keeps measuring it distributed only).
   *
   * Everything here is private to the operators package — the public
-  * surface stays the DataFrame operators, whose `driverCap` parameter
-  * gates entry (cap-gated limit(cap+1).collect(), the
-  * [[Components.connectedComponents]] contract). */
+  * surface stays the DataFrame operators, which enter these arms
+  * through [[graft.util.SmallInput]]. */
 private[operators] object DriverGraph {
 
   /** (src -> out-neighbor list) adjacency over directed edge rows,

@@ -342,13 +342,9 @@ object Freq {
     * to the frame pipeline (FreqSpec pins arm equality). None over the
     * row cap or on a null day/value — the frame pipeline runs then. */
   private[operators] def quantileSketchDriver(s: SparkSession,
-      vals: DataFrame, k: Int, qs: Seq[Int],
-      cap: Long = graft.util.Caps.cap(1000000L)): Option[DataFrame] = {
-    if (cap <= 0) return None
-    val take = vals
-      .select(unix_date(col("day")).as("ed"), col("v"))
-      .limit(cap.toInt + 1).collect()
-    if (take.length > cap) return None
+      vals: DataFrame, k: Int, qs: Seq[Int]): Option[DataFrame] = {
+    val take = graft.util.SmallInput.take(vals
+      .select(unix_date(col("day")).as("ed"), col("v"))).getOrElse(return None)
     val n = take.length
     val eds = new Array[Int](n)
     val vsRaw = new Array[Long](n)
@@ -459,11 +455,10 @@ object Freq {
     * frame chain (FreqSpec pins arm equality). None over the row cap
     * or on a null v — the distributed chain runs then. */
   private[graft] def quantileRollupDriver(s: SparkSession,
-      vals: DataFrame, width: Long, qs: Seq[Int],
-      cap: Long = graft.util.Caps.cap(1000000L)): Option[DataFrame] = {
-    if (cap <= 0) return None
-    val take = vals.select(col("v")).limit(cap.toInt + 1).collect()
-    if (take.length > cap || take.isEmpty) return None
+      vals: DataFrame, width: Long, qs: Seq[Int]): Option[DataFrame] = {
+    val take = graft.util.SmallInput.take(vals.select(col("v")))
+      .getOrElse(return None)
+    if (take.isEmpty) return None
     val n = take.length
     val vs = new Array[Long](n)
     var i = 0

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Tables._
+import graft.util.SmallInput
 
 /** Link-analysis over an edge list — the iterative-graph workload family
   * that [[Components]] (min-label propagation) opened, extended to rank:
@@ -62,23 +63,21 @@ object Graph {
     * @return (node BIGINT, rank BIGINT) — one row per distinct src node.
     */
   def pagerank(edges: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true,
-      driverCap: Long = graft.util.Caps.cap(2000000L)): DataFrame = {
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     val ed = edges.select(col("src"), col("dst"))
     // Driver arm (optimization round — the betweenness/Components
-    // driverEdgeCap discipline generalized to the rank loops): under
-    // `driverCap` the edge list collects once and all `iters` rounds run
+    // small-input arm generalized to the rank loops): under
+    // the cap the edge list collects once and all `iters` rounds run
     // as integer loops — the measured distributed cost was per-round
     // scheduling (5 rounds × join + agg + checkpoint jobs on node-sized
     // frames), not data. Over cap the loop below runs unchanged;
-    // GraphSpec pins arm equality. driverCap = 0 forces distributed.
-    // Default 2M (not the family's 1M): the rank-family graphs are bare
+    // GraphSpec pins arm equality.
+    // Cap 2M (not the family's 1M): the rank-family graphs are bare
     // 2-3 BIGINT columns (2M rows ≈ 48 MB of values), and the sf0.1
     // part↔supplier graph symmetrizes to 1.18M rows — a 1M cap made
     // every rank query pay the probe AND the distributed loop.
-    if (driverCap > 0) takePairs(ed, driverCap).foreach { arr =>
+    SmallInput.takePairs(ed, SmallInput.EdgeCap).foreach { arr =>
       return edges.sparkSession
         .createDataFrame(DriverGraph.pagerank(arr, iters, mass))
         .toDF("node", "rank")
@@ -171,61 +170,6 @@ object Graph {
   private def releaseCheckpoint(df: DataFrame): Unit =
     graft.util.Frames.releaseCheckpoint(df)
 
-  /** Driver-side memo of collected edge arrays, PER QUERY INVOCATION
-    * (re-scoped in optimization round 19 — verdict r18 #2 flagged the
-    * round-18 cross-rep version as bench gaming): within ONE query
-    * invocation several arms may collect the same frame (e.g. a σ pass
-    * and its backward consumer) and the memo serves that plain
-    * common-subexpression reuse; the bench harness clears it via
-    * [[graft.util.Memo.newInvocation]] immediately before every timed
-    * run, so each rep re-executes its own collect — reps measure the
-    * declared computation. Keyed on (session, canonicalized plan, cap);
-    * inactive (pure collect) without -Dgraft.cacheTables — Verify,
-    * tests and ScaleProbe stay cold. */
-  private val collectMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), AnyRef]
-  graft.util.Memo.onNewInvocation(() => collectMemo.clear())
-  private def memoKey(df: DataFrame, cap: Long): Option[(String, String)] =
-    if (java.lang.Boolean.getBoolean("graft.cacheTables")) {
-      val canon = df.queryExecution.analyzed.canonicalized
-      Some((graft.catalog.Tables.sessionKey(df.sparkSession),
-        s"${canon.semanticHash()}|$cap|$canon"))
-    } else None
-
-  /** Cap-gated 2-column BIGINT collect for the driver arms — the
-    * [[Components.connectedComponents]] limit(cap+1) contract: None when
-    * the frame exceeds `cap`, so the caller falls through to its
-    * distributed chain (the 100 TB posture). */
-  private def takePairs(df: DataFrame, cap: Long): Option[Array[(Long, Long)]] = {
-    def compute: Option[Array[(Long, Long)]] = {
-      val take = df.limit(cap.toInt + 1).collect()
-      if (take.length > cap) None
-      else Some(take.map(r => (r.getAs[Number](0).longValue,
-        r.getAs[Number](1).longValue)))
-    }
-    memoKey(df, cap) match {
-      case Some(k) => collectMemo.getOrElseUpdate(k, compute)
-        .asInstanceOf[Option[Array[(Long, Long)]]]
-      case None => compute
-    }
-  }
-
-  /** [[takePairs]] for 3-column BIGINT frames (weighted edges, dist
-    * states). */
-  private def takeTriples(df: DataFrame, cap: Long): Option[Array[(Long, Long, Long)]] = {
-    def compute: Option[Array[(Long, Long, Long)]] = {
-      val take = df.limit(cap.toInt + 1).collect()
-      if (take.length > cap) None
-      else Some(take.map(r => (r.getAs[Number](0).longValue,
-        r.getAs[Number](1).longValue, r.getAs[Number](2).longValue)))
-    }
-    memoKey(df, cap) match {
-      case Some(k) => collectMemo.getOrElseUpdate(k, compute)
-        .asInstanceOf[Option[Array[(Long, Long, Long)]]]
-      case None => compute
-    }
-  }
-
   /** Weighted integer PageRank — [[pagerank]] with edge weights: a
     * node's mass splits across its out-edges IN PROPORTION TO w (the
     * transfer-volume/co-occurrence-count semantics every production
@@ -254,19 +198,16 @@ object Graph {
     *              construction).
     * @return (node BIGINT, rank BIGINT). */
   def pagerankWeighted(edges: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true,
-      driverCap: Long = graft.util.Caps.cap(2000000L)): DataFrame = {
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: [[pagerank]]'s, with the per-edge (rank·w) div wout
     // quotient — bit-identical integers, GraphSpec pins arm equality
-    if (driverCap > 0)
-      takeTriples(edges.select(col("src"), col("dst"), col("w")),
-          driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.pagerankWeighted(arr, iters, mass))
-          .toDF("node", "rank")
-      }
+    SmallInput.takeTriples(edges.select(col("src"), col("dst"), col("w")),
+        SmallInput.EdgeCap).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.pagerankWeighted(arr, iters, mass))
+        .toDF("node", "rank")
+    }
     val edP = edges.select(col("src"), col("dst"), col("w"))
       .repartition(if (broadcastRanks) col("dst") else col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -316,15 +257,13 @@ object Graph {
     * @param sources (node BIGINT) seed set, distinct, non-empty.
     * @return (node, rank) — nodes unreachable from S rank 0. */
   def pagerankPersonalized(edges: DataFrame, sources: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true,
-      driverCap: Long = graft.util.Caps.cap(2000000L)): DataFrame = {
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     val ed = edges.select(col("src"), col("dst"))
     // driver arm: seeds intersect the src domain in-memory (the same
     // present-seeds rule); an all-absent seed set returns None and falls
     // through to the distributed chain's loud require below
-    if (driverCap > 0) takePairs(ed, driverCap).foreach { arr =>
+    SmallInput.takePairs(ed, SmallInput.EdgeCap).foreach { arr =>
       val seeds = sources.select(col("node")).collect()
         .map(_.getAs[Number](0).longValue)
       DriverGraph.pagerankPersonalized(arr, seeds, iters, mass).foreach { out =>
@@ -418,21 +357,18 @@ object Graph {
     * @return (node BIGINT, d BIGINT) for nodes reachable in ≤ rounds
     *         edges. */
   def ssspWeighted(edges: DataFrame, sources: DataFrame, rounds: Int,
-      broadcastFrontier: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastFrontier: Boolean = true): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the ≤ rounds-edge Bellman d_k as one in-memory
     // delta-frontier loop — the frame chain's fixpoint verbatim
     // (GraphSpec pins arm equality); over cap the chain below runs
-    if (driverCap > 0)
-      takeTriples(edges.select(col("src"), col("dst"), col("w")),
-          driverCap).foreach { arr =>
-        val srcs = sources.select(col("node")).collect()
-          .map(_.getAs[Number](0).longValue)
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.ssspWeighted(arr, srcs, rounds))
-          .toDF("node", "d")
-      }
+    SmallInput.takeTriples(edges.select(col("src"), col("dst"), col("w"))).foreach { arr =>
+      val srcs = sources.select(col("node")).collect()
+        .map(_.getAs[Number](0).longValue)
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.ssspWeighted(arr, srcs, rounds))
+        .toDF("node", "d")
+    }
     val ed = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
     // distinct enforced, not assumed: duplicate seeds (e.g. repeated
     // graft_sssp varargs) would ride the anti-join as duplicate rows
@@ -490,19 +426,17 @@ object Graph {
     * @return (node BIGINT, hop INT) for reached nodes only.
     */
   def bfsHops(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      broadcastFrontier: Boolean = true, driverCap: Long = graft.util.Caps.cap(2000000L)): DataFrame = {
+      broadcastFrontier: Boolean = true): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: first-reach BFS in memory (hop stays the frame's
     // Int-typed round index); over cap the delta-frontier chain runs
-    if (driverCap > 0)
-      takePairs(edges.select(col("src"), col("dst")), driverCap).foreach { arr =>
-        val srcs = sources.select(col("node")).collect()
-          .map(_.getAs[Number](0).longValue)
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.bfsHops(arr, srcs, maxHops))
-          .toDF("node", "hop")
-      }
+    SmallInput.takePairs(edges.select(col("src"), col("dst")), SmallInput.EdgeCap).foreach { arr =>
+      val srcs = sources.select(col("node")).collect()
+        .map(_.getAs[Number](0).longValue)
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.bfsHops(arr, srcs, maxHops))
+        .toDF("node", "hop")
+    }
     val ed = edges.select(col("src"), col("dst")).localCheckpoint()
     var dist = sources.select(col("node"), lit(0).as("hop")).localCheckpoint()
     var frontier = dist.select(col("node"))
@@ -778,18 +712,15 @@ object Graph {
     *              distinct.
     * @return single row (n_nodes, n_edges, n_triangles), all BIGINT.
     */
-  def triangleCount(edges: DataFrame,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+  def triangleCount(edges: DataFrame): DataFrame = {
     // driver arm: triangles = Σ per-edge |N(a) ∩ N(b)| / 3 — the same
     // exact count the oriented wedge join totals (orientation-invariant);
     // the Chiba–Nishizeki chain below stays the over-cap path
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        val (nn, ne, nt) = DriverGraph.triangleCensus(arr)
-        return edges.sparkSession.createDataFrame(Seq((nn, ne, nt)))
-          .toDF("n_nodes", "n_edges", "n_triangles")
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      val (nn, ne, nt) = DriverGraph.triangleCensus(arr)
+      return edges.sparkSession.createDataFrame(Seq((nn, ne, nt)))
+        .toDF("n_nodes", "n_edges", "n_triangles")
+    }
     // The edge list feeds THREE consumers (degree count, orientation join,
     // edge tally) and the oriented frame two (wedge sides, closure probe);
     // left lazy, each branch would re-derive them — for a derived edge list
@@ -864,22 +795,19 @@ object Graph {
     * the per-node tally; the O(√m) out-degree cap still bounds the wedge
     * set, and the coefficient is derived from exact integers (tri, d) in
     * one shared double expression. */
-  def localClusteringTopK(edges: DataFrame, k: Int,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+  def localClusteringTopK(edges: DataFrame, k: Int): DataFrame = {
     // driver arm: exact (v, d, n_tri) in memory; the coefficient stays
     // the SAME DataFrame expression below so the double rounding is
     // shared verbatim between arms (GraphSpec pins equality)
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.localTriangles(arr))
-          .toDF("v", "d", "n_tri")
-          .withColumn("coeff",
-            round(lit(2.0) * col("n_tri") / (col("d") * (col("d") - 1)), 6))
-          .orderBy(col("coeff").desc, col("v"))
-          .limit(k)
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.localTriangles(arr))
+        .toDF("v", "d", "n_tri")
+        .withColumn("coeff",
+          round(lit(2.0) * col("n_tri") / (col("d") * (col("d") - 1)), 6))
+        .orderBy(col("coeff").desc, col("v"))
+        .limit(k)
+    }
     val e = edges.select(col("a"), col("b")).localCheckpoint()
     val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -946,20 +874,18 @@ object Graph {
     * @return (node, deg) for surviving nodes — deg is the node's degree
     *         WITHIN the peeled subgraph, ordered by node. */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-      broadcastKeep: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastKeep: Boolean = true): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k/rounds >= 1, got $k $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the peel is the s-core at w ≡ 1 (sum of ones = count)
     // — one in-memory loop replaces rounds × (agg + 2 joins + 2
     // checkpoints); GraphSpec pins arm equality, over cap the chain runs
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.kcorePeelWeighted(
-            arr.map(p => (p._1, p._2, 1L)), k.toLong, rounds))
-          .toDF("node", "deg")
-          .orderBy(col("node"))
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.kcorePeelWeighted(
+          arr.map(p => (p._1, p._2, 1L)), k.toLong, rounds))
+        .toDF("node", "deg")
+        .orderBy(col("node"))
+    }
     var e = edges.select(col("a"), col("b")).localCheckpoint()
     for (_ <- 1 to rounds) {
       // Materialized once per round: node-count-sized (tiny next to the
@@ -997,18 +923,15 @@ object Graph {
     * @return (node, strength) for surviving nodes — strength measured
     *         WITHIN the peeled subgraph, ordered by node. */
   def kcorePeelWeighted(edges: DataFrame, s: Long, rounds: Int,
-      broadcastKeep: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastKeep: Boolean = true): DataFrame = {
     require(s >= 1 && rounds >= 1, s"need s/rounds >= 1, got $s $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the strength peel in memory (see [[kcorePeel]])
-    if (driverCap > 0)
-      takeTriples(edges.select(col("a"), col("b"), col("w")),
-          driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.kcorePeelWeighted(arr, s, rounds))
-          .toDF("node", "strength")
-          .orderBy(col("node"))
-      }
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.kcorePeelWeighted(arr, s, rounds))
+        .toDF("node", "strength")
+        .orderBy(col("node"))
+    }
     def endpoints(f: DataFrame) = f
       .select(explode(array(
         struct(col("a").as("v"), col("w")),
@@ -1102,10 +1025,8 @@ object Graph {
     *         in ≥ 1 triangle, sup recomputed WITHIN the final subgraph
     *         (the same one-more-support-pass the oracle runs), ordered
     *         by (a, b). */
-  def ktrussPeel(edges: DataFrame, k: Int, rounds: Int,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+  def ktrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, s"need k >= 3, rounds >= 1, got $k $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: per-round per-edge support = |N(a) ∩ N(b)| over the
     // current subgraph's neighbor sets — the exact count the oriented
     // wedge join produces (support is orientation-invariant), so the
@@ -1113,13 +1034,12 @@ object Graph {
     // (GraphSpec pins). The distributed Chiba–Nishizeki chain below
     // stays the over-cap path — at 100 TB the wedge join's √m
     // orientation bound is the operator's whole story.
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.ktrussPeel(arr, k, rounds))
-          .toDF("a", "b", "sup")
-          .orderBy(col("a"), col("b"))
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.ktrussPeel(arr, k, rounds))
+        .toDF("a", "b", "sup")
+        .orderBy(col("a"), col("b"))
+    }
     var e = edges.select(col("a"), col("b")).localCheckpoint()
     for (_ <- 1 to rounds) {
       val sup = edgeSupport(e)
@@ -1166,10 +1086,8 @@ object Graph {
     *         t = 0..radius (bs(0) = 1). Harmonic centrality, effective
     *         diameter, HyperANF's N(t) are all arithmetic over bs. */
   def hyperBall(edges: DataFrame, radius: Int, lgK: Int = 12,
-      broadcastState: Boolean = false, layoutOwned: Boolean = false,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastState: Boolean = false, layoutOwned: Boolean = false): DataFrame = {
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // Driver arm (optimization round): the recurrence is register-max
     // HLL union — set-determined, so running the SAME DataSketches
     // library (the one behind hll_sketch_agg/hll_union) over collected
@@ -1181,8 +1099,8 @@ object Graph {
     // hll_union_agg's default union cap is 12, above which the frame
     // path would downsample while the driver would not. Over cap: the
     // unchanged loop below (the 100 TB operator).
-    if (driverCap > 0 && lgK <= 12) {
-      takePairs(edges.select(col("src"), col("dst")), driverCap).foreach { take =>
+    if (lgK <= 12) {
+      SmallInput.takePairs(edges.select(col("src"), col("dst"))).foreach { take =>
         import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
         val ids = new java.util.HashMap[Long, Integer]
         val idList = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1384,30 +1302,33 @@ object Graph {
     * fan-out is 2^radius (measured 2× wall on the first cut of this
     * sharing, which unioned unwrapped levels). */
   private[graft] def sigmaLevels(ed: DataFrame, sources: DataFrame,
-      radius: Int, wrap: (Int, () => DataFrame) => DataFrame,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): IndexedSeq[DataFrame] = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
-    // Driver arm (round 18, the weighted tier's discipline): under
-    // `driverCap` the edge list collects once and ALL levels compute as
+      radius: Int, wrap: (Int, () => DataFrame) => DataFrame): IndexedSeq[DataFrame] = {
+    // Driver arm (round 18, the weighted tier's discipline): under the
+    // cap the edge list collects once and ALL levels compute as
     // one in-memory multi-source BFS — the per-level join/agg/anti-join
     // stages were scheduling latency, not data. LAZY: the probe +
     // collect run only if some level actually builds (a full pool hit
     // stays zero-job); over cap every thunk falls through to the
     // distributed chain below, per-level values identical either way.
     lazy val drv: Option[Array[Array[(Long, Long, Long)]]] =
-      if (driverCap <= 0) None
-      else {
-        val take = ed.select(col("src"), col("dst"))
-          .limit(driverCap.toInt + 1).collect()
-        if (take.length > driverCap) None
-        else {
-          val srcArr = sources.select(col("s")).collect()
-            .map(_.getAs[Number](0).longValue)
-          Some(driverSigmaBfs(take.map(r => (r.getAs[Number](0).longValue,
-            r.getAs[Number](1).longValue)), srcArr, radius))
-        }
+      SmallInput.takePairs(ed.select(col("src"), col("dst"))).map { edArr =>
+        val srcArr = sources.select(col("s")).collect()
+          .map(_.getAs[Number](0).longValue)
+        driverSigmaBfs(edArr, srcArr, radius)
       }
-    def arm(t: Int, dist: () => DataFrame): () => DataFrame = () => drv match {
+    sigmaLevelsOf(ed, sources, radius, wrap, () => drv)
+  }
+
+  /** [[sigmaLevels]]' distributed chain, for a caller that has already
+    * gone distributed (no second probe). */
+  private def sigmaLevelsDistributed(ed: DataFrame, sources: DataFrame,
+      radius: Int, wrap: (Int, () => DataFrame) => DataFrame): IndexedSeq[DataFrame] =
+    sigmaLevelsOf(ed, sources, radius, wrap, () => None)
+
+  private def sigmaLevelsOf(ed: DataFrame, sources: DataFrame,
+      radius: Int, wrap: (Int, () => DataFrame) => DataFrame,
+      drv: () => Option[Array[Array[(Long, Long, Long)]]]): IndexedSeq[DataFrame] = {
+    def arm(t: Int, dist: () => DataFrame): () => DataFrame = () => drv() match {
       case Some(l) =>
         ed.sparkSession.createDataFrame(l(t).toSeq).toDF("s", "v", "sigma")
       case None => dist()
@@ -1552,12 +1473,12 @@ object Graph {
     * chains lazy localCheckpoints with a release handle the caller
     * invokes AFTER materializing its |S|-sized output. */
   private[graft] def wdist107Shared(s: SparkSession, dir: String,
-      rounds: Int, driverCap: Long = graft.util.Caps.cap(1000000L)): (DataFrame, DataFrame, () => Unit) = {
+      rounds: Int): (DataFrame, DataFrame, () => Unit) = {
     val ed = sliceEdgesWeighted(s, dir)
     val sources = ed.select(col("src").as("s")).distinct()
       .filter(col("s") % 107 === 0)
     // Driver arm (optimization round — the betweennessWeightedBounded
-    // driverCap discipline, moved UP to the shared pass): the Bellman
+    // driver arm, moved UP to the shared pass): the Bellman
     // state both weighted-tier queries read is |S|·reach-bounded, and the
     // distributed form's cost was `rounds` sequential broadcast-join +
     // min-aggregate stages on tiny frames. Under the cap the edge frame
@@ -1566,21 +1487,18 @@ object Graph {
     // state ships as a LocalRelation (a PURE plan, so the Memo contract
     // holds and the pool serves both consumers). Over cap: the unchanged
     // frame loop below (GraphSpec pins arm equality on the consumers).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      takeTriples(ed.select(col("src"), col("dst"), col("w")),
-          driverCap).foreach { edArr =>
-        // the sources rule verbatim: distinct src, s % 107 == 0.
-        // NO result memo (optimization round 19 — verdict r18 #2: the
-        // round-18 `graph:wdist107_r*:drv` pool let sibling queries and
-        // later bench reps skip this computation; each invocation now
-        // runs its own Bellman pass — the edge collect above is the only
-        // reuse, and it is invocation-scoped).
-        val srcArr = edArr.iterator.map(_._1)
-          .filter(_ % 107L == 0L).toArray.distinct
-        val dist = s.createDataFrame(driverBellman(edArr, srcArr, rounds).toSeq)
-          .toDF("s", "v", "d")
-        return (sources, dist, () => ())
-      }
+    SmallInput.takeTriples(ed.select(col("src"), col("dst"), col("w"))).foreach { edArr =>
+      // the sources rule verbatim: distinct src, s % 107 == 0.
+      // NO result memo (optimization round 19 — verdict r18 #2: the
+      // round-18 `graph:wdist107_r*:drv` pool let sibling queries and
+      // later bench reps skip this computation; each invocation now
+      // runs its own Bellman pass — the edge collect above is the only
+      // reuse, and it is invocation-scoped).
+      val srcArr = edArr.iterator.map(_._1)
+        .filter(_ % 107L == 0L).toArray.distinct
+      val dist = s.createDataFrame(driverBellman(edArr, srcArr, rounds).toSeq)
+        .toDF("s", "v", "d")
+      return (sources, dist, () => ())
     }
     // Over-cap distributed loop, DELTA-FRONTIER form (optimization round
     // 19 — verdict r18 #6; [[ssspWeighted]]'s idiom keyed on (s, v)):
@@ -1709,28 +1627,21 @@ object Graph {
     * @return (node, b_e4): truncated-Brandes betweenness in e4 units,
     *         one row per node reached at depth ≥ 1 from any source. */
   def betweennessBounded(edges: DataFrame, sources: DataFrame,
-      radius: Int, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      radius: Int): DataFrame = {
     require(radius >= 2, s"radius must be >= 2, got $radius")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
-    // Driver arm (round 18): when the edge list fits `driverCap`, BOTH
+    // Driver arm (round 18): when the edge list fits the cap, BOTH
     // phases run as one in-memory pass — the |S|·n state is the product
     // the sample bound exists to cap, so it is driver-scale by the same
     // contract the distributed arm's broadcasts rely on; per-stage
     // scheduling, not data, was the measured cost. Over cap (the
     // 100 TB posture) the distributed chain below runs unchanged;
-    // GraphSpec pins arm equality. driverCap = 0 forces distributed.
-    if (driverCap > 0) {
-      val take = edges.select(col("src"), col("dst"))
-        .limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap) {
-        val edArr = take.map(r => (r.getAs[Number](0).longValue,
-          r.getAs[Number](1).longValue))
-        val srcArr = sources.select(col("s")).collect()
-          .map(_.getAs[Number](0).longValue)
-        val out = driverBrandesBackward(edArr,
-          driverSigmaBfs(edArr, srcArr, radius), radius)
-        return edges.sparkSession.createDataFrame(out).toDF("node", "b_e4")
-      }
+    // GraphSpec pins arm equality.
+    SmallInput.takePairs(edges.select(col("src"), col("dst"))).foreach { edArr =>
+      val srcArr = sources.select(col("s")).collect()
+        .map(_.getAs[Number](0).longValue)
+      val out = driverBrandesBackward(edArr,
+        driverSigmaBfs(edArr, srcArr, radius), radius)
+      return edges.sparkSession.createDataFrame(out).toDF("node", "b_e4")
     }
     // layout discipline: every join in BOTH phases keys the edge frame
     // on src (forward expansion v = src, backward successor probe
@@ -1739,9 +1650,9 @@ object Graph {
     val ed = edges.select(col("src"), col("dst"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lvls = sigmaLevels(ed, sources, radius,
-      (_, build) => build().localCheckpoint(), driverCap = 0L)
-    val out = brandesBackward(ed, t => lvls(t), radius, driverCap = 0L)
+    val lvls = sigmaLevelsDistributed(ed, sources, radius,
+      (_, build) => build().localCheckpoint())
+    val out = brandesBackwardDistributed(ed, t => lvls(t), radius)
     ed.unpersist()
     // the node-sized result is checkpoint-materialized inside
     // brandesBackward — every |S|·n level frame is dead now (the
@@ -1762,38 +1673,38 @@ object Graph {
     * with every |S|·n backward intermediate already released — callers
     * may free the levels and the edge frame immediately after. */
   private def brandesBackward(ed: DataFrame, lvl: Int => DataFrame,
-      radius: Int, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+      radius: Int): DataFrame = {
     // Driver arm (round 18): the backward phase off ALREADY-MATERIALIZED
     // levels (pool-persisted or checkpointed) is |S|·n state against an
-    // edge frame — under `driverCap` both collect cheaply and the
+    // edge frame — under the cap both collect cheaply and the
     // accumulation runs in-memory (one LocalRelation result, lineage-
     // free like the checkpoint the distributed arm returns); over cap
-    // the frame chain below runs unchanged.
-    if (driverCap > 0) {
-      val capI = driverCap.toInt
-      takePairs(ed.select(col("src"), col("dst")), driverCap).foreach { edArr =>
-        val lvlArrs = new Array[Array[(Long, Long, Long)]](radius + 1)
-        var total = 0L
-        var ok = true
-        var t = 0
-        while (ok && t <= radius) {
-          val rows = lvl(t).select(col("s"), col("v"), col("sigma"))
-            .limit(capI + 1).collect()
-          total += rows.length
-          if (rows.length > driverCap || total > driverCap) ok = false
-          else {
+    // (all levels together) the frame chain runs unchanged.
+    SmallInput.takePairs(ed.select(col("src"), col("dst"))).foreach { edArr =>
+      val lvlArrs = new Array[Array[(Long, Long, Long)]](radius + 1)
+      var total = 0L
+      var ok = true
+      var t = 0
+      while (ok && t <= radius) {
+        SmallInput.take(lvl(t).select(col("s"), col("v"), col("sigma"))) match {
+          case Some(rows) if total + rows.length <= SmallInput.RowCap =>
+            total += rows.length
             lvlArrs(t) = rows.map(r => (r.getAs[Number](0).longValue,
               r.getAs[Number](1).longValue, r.getAs[Number](2).longValue))
             t += 1
-          }
-        }
-        if (ok) {
-          val out = driverBrandesBackward(edArr, lvlArrs, radius)
-          return ed.sparkSession.createDataFrame(out).toDF("node", "b_e4")
+          case _ => ok = false
         }
       }
+      if (ok) {
+        val out = driverBrandesBackward(edArr, lvlArrs, radius)
+        return ed.sparkSession.createDataFrame(out).toDF("node", "b_e4")
+      }
     }
+    brandesBackwardDistributed(ed, lvl, radius)
+  }
+
+  private def brandesBackwardDistributed(ed: DataFrame, lvl: Int => DataFrame,
+      radius: Int): DataFrame = {
     val deltas = new scala.collection.mutable.ArrayBuffer[DataFrame]
     var deltaNext = lvl(radius)
       .select(col("s"), col("v"), lit(0L).as("delta"))
@@ -1958,35 +1869,29 @@ object Graph {
     * @return (node, b_e4) for every node reached at depth ≥ 1. */
   def betweennessWeightedBounded(edges: DataFrame, sources: DataFrame,
       rounds: Int, broadcastState: Boolean = true,
-      distShared: Option[DataFrame] = None,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      distShared: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 2, s"rounds must be >= 2, got $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // Driver arm (round 18 — the [[Components.connectedComponents]]
-    // driverEdgeCap discipline): every frame this operator iterates on
+    // small-input arm): every frame this operator iterates on
     // is sample-bounded — |S|·n state, |S|·m DAG, the edge list itself —
     // and the distributed form's cost was measured to be ~14 SEQUENTIAL
     // tiny stages of scheduling latency, not data (sf0.1: dist 85k rows,
-    // DAG 87k rows — megabytes). Under `driverCap` the edge and dist
+    // DAG 87k rows — megabytes). Under the cap the edge and dist
     // frames collect once and the whole DAG/depth/σ/δ fixpoint runs as
     // plain integer loops in ONE job's worth of work; the identical-
     // semantics distributed path below stays the over-cap fallback
-    // (GraphSpec pins three-arm equality). Pass driverCap = 0 to force
-    // the distributed form.
-    if (driverCap > 0) {
-      takeTriples(edges.select(col("src"), col("dst"), col("w")),
-          driverCap).foreach { edArr =>
-        val distArr: Array[(Long, Long, Long)] = distShared match {
-          case Some(d) =>
-            takeTriples(d, driverCap).orNull
-          case None =>
-            val src = sources.select(col("s")).collect()
-              .map(_.getAs[Number](0).longValue)
-            driverBellman(edArr, src, rounds)
-        }
-        if (distArr != null)
-          return driverSigmaDelta(edArr, distArr, rounds, edges.sparkSession)
+    // (GraphSpec pins three-arm equality).
+    SmallInput.takeTriples(edges.select(col("src"), col("dst"), col("w"))).foreach { edArr =>
+      val distArr: Array[(Long, Long, Long)] = distShared match {
+        case Some(d) =>
+          SmallInput.takeTriples(d).orNull
+        case None =>
+          val src = sources.select(col("s")).collect()
+            .map(_.getAs[Number](0).longValue)
+          driverBellman(edArr, src, rounds)
       }
+      if (distArr != null)
+        return driverSigmaDelta(edArr, distArr, rounds, edges.sparkSession)
     }
     // Broadcast arm (round 18, the labelPropagate/hyperBall discipline):
     // every per-source state frame here — dist/dep/sig/del, all keyed
@@ -2131,8 +2036,8 @@ object Graph {
     * @return (lbl, n_members) — the k largest communities after
     *         `rounds`, ordered by size desc then label. */
   def labelPropagate(edges: DataFrame, rounds: Int, k: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame =
-    labelAssign(edges, rounds, broadcastLabels, driverCap)
+      broadcastLabels: Boolean = true): DataFrame =
+    labelAssign(edges, rounds, broadcastLabels)
       .groupBy(col("lbl")).agg(count(lit(1)).as("n_members"))
       .orderBy(col("n_members").desc, col("lbl"))
       .limit(k)
@@ -2142,10 +2047,10 @@ object Graph {
     * not just the sizes). Checkpointed; consumers that are done with it
     * may hand it to Frames.releaseCheckpoint. */
   def labelAssign(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame =
+      broadcastLabels: Boolean = true): DataFrame =
     labelAssignWeighted(
       edges.select(col("a"), col("b"), lit(1L).as("w")), rounds,
-      broadcastLabels, driverCap)
+      broadcastLabels)
 
   /** WEIGHTED label propagation assignment — each round a node adopts
     * the label with the greatest incident EDGE-WEIGHT sum (ties →
@@ -2159,22 +2064,19 @@ object Graph {
     *
     * @param edges undirected (a, b, w BIGINT), a < b, w ≥ 1. */
   def labelAssignWeighted(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastLabels: Boolean = true): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the synchronous vote loop in memory. RDD-backed (the
     // louvainA1Shared lesson), not a LocalRelation: modularityOf and the
     // TVF consumers join/aggregate against this frame, and a
     // LocalTableScan stream side degrades them to single-partition work.
-    if (driverCap > 0)
-      takeTriples(edges.select(col("a"), col("b"), col("w")),
-          driverCap).foreach { arr =>
-        val s = edges.sparkSession
-        return s.createDataFrame(
-          s.sparkContext.parallelize(
-            DriverGraph.labelAssignWeighted(arr, rounds), 8))
-          .toDF("v", "lbl")
-      }
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+      val s = edges.sparkSession
+      return s.createDataFrame(
+        s.sparkContext.parallelize(
+          DriverGraph.labelAssignWeighted(arr, rounds), 8))
+        .toDF("v", "lbl")
+    }
     val e = edges.select(col("a"), col("b"), col("w")).localCheckpoint()
     val sym = e.unionAll(
       e.select(col("b").as("a"), col("a").as("b"), col("w")))
@@ -2227,10 +2129,10 @@ object Graph {
     * @param edges undirected (a, b), a < b, distinct.
     * @return (v, lbl) community assignment after `rounds`. */
   def louvainAssign(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame =
+      broadcastLabels: Boolean = true): DataFrame =
     louvainAssignWeighted(
       edges.select(col("a"), col("b"), lit(1L).as("w")), rounds,
-      broadcastLabels, driverCap = driverCap)
+      broadcastLabels)
 
   /** WEIGHTED Louvain local-move — [[louvainAssign]] generalized to the
     * standard weighted form (the [[labelAssignWeighted]] relationship):
@@ -2253,33 +2155,29 @@ object Graph {
     *        is today's simple-graph behavior, bit-for-bit. */
   def louvainAssignWeighted(edges: DataFrame, rounds: Int,
       broadcastLabels: Boolean = true,
-      selfLoops: Option[DataFrame] = None,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      selfLoops: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the synchronous local-move loop in memory — the exact
     // integer move score, candidates = neighbor communities ∪ own, ties
     // to the smallest label; self-loop mass folds into strengths and W
     // exactly as the frame chain does. RDD-backed for the same join-
     // consumer reason as [[labelAssignWeighted]]'s arm; the cap covers
     // edges AND the (community-sized) self-loop frame.
-    if (driverCap > 0)
-      takeTriples(edges.select(col("a"), col("b"), col("w")),
-          driverCap).foreach { arr =>
-        val slArr: Option[Seq[(Long, Long)]] = selfLoops match {
-          case None => Some(Seq.empty)
-          case Some(sl) =>
-            takePairs(sl.select(col("v"), col("sw")), driverCap)
-              .map(_.toSeq)
-        }
-        slArr.foreach { sls =>
-          val s = edges.sparkSession
-          return s.createDataFrame(
-            s.sparkContext.parallelize(
-              DriverGraph.louvainAssignWeighted(arr, rounds, sls), 8))
-            .toDF("v", "lbl")
-        }
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+      val slArr: Option[Seq[(Long, Long)]] = selfLoops match {
+        case None => Some(Seq.empty)
+        case Some(sl) =>
+          SmallInput.takePairs(sl.select(col("v"), col("sw")))
+            .map(_.toSeq)
       }
+      slArr.foreach { sls =>
+        val s = edges.sparkSession
+        return s.createDataFrame(
+          s.sparkContext.parallelize(
+            DriverGraph.louvainAssignWeighted(arr, rounds, sls), 8))
+          .toDF("v", "lbl")
+      }
+    }
     val e = edges.select(col("a"), col("b"), col("w")).localCheckpoint()
     val sym = e.unionAll(
       e.select(col("b").as("a"), col("a").as("b"), col("w")))
@@ -2383,29 +2281,26 @@ object Graph {
     * amount of extra phase-1 rounds can do. Returns the node-level
     * (v, lbl) of the LEVEL-2 partition. */
   def louvainMultilevelAssign(edges: DataFrame, rounds: Int,
-      broadcastLabels: Boolean = true,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+      broadcastLabels: Boolean = true): DataFrame = {
     // driver arm (optimization round): the WHOLE two-level chain in one
     // in-memory pass — phase 1 is deterministic, so it equals the
     // pool-shared a1 frame by construction and the arm skips the
     // per-phase collects and the distributed coarsen aggregates
     // (GraphSpec pins multilevel arm equality). RDD-backed: modularityOf
     // consumes this frame in joins.
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        val s = edges.sparkSession
-        return s.createDataFrame(
-          s.sparkContext.parallelize(
-            DriverGraph.louvainMultilevel(arr, rounds), 8))
-          .toDF("v", "lbl")
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      val s = edges.sparkSession
+      return s.createDataFrame(
+        s.sparkContext.parallelize(
+          DriverGraph.louvainMultilevel(arr, rounds), 8))
+        .toDF("v", "lbl")
+    }
     val ew = edges.select(col("a"), col("b"), lit(1L).as("w"))
     val a1 = louvainAssignWeighted(ew, rounds,
-      broadcastLabels, driverCap = driverCap)
+      broadcastLabels)
     val (ce, sl) = louvainCoarsen(ew, a1, broadcastLabels)
     val a2 = louvainAssignWeighted(ce, rounds, broadcastLabels,
-      selfLoops = Some(sl), driverCap = driverCap)
+      selfLoops = Some(sl))
     val out = a1.select(col("v"), col("lbl").as("c1"))
       .join((if (broadcastLabels) broadcast(a2) else a2)
         .select(col("v").as("c1"), col("lbl")), "c1")
@@ -2445,9 +2340,9 @@ object Graph {
     *        (GraphSpec pins arm equality).
     * @return (lbl, n_members, e_in, d_sum, m, q_num), size-desc. */
   def modularityOf(edges: DataFrame, assign: DataFrame, k: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame =
+      broadcastLabels: Boolean = true): DataFrame =
     modularityOfWeighted(edges.select(col("a"), col("b"), lit(1L).as("w")),
-      assign, k, broadcastLabels, driverCap)
+      assign, k, broadcastLabels)
 
   /** WEIGHTED Newman modularity — [[modularityOf]] generalized to the
     * standard weighted form (every count becomes a weight sum: W = Σw,
@@ -2460,24 +2355,21 @@ object Graph {
     *
     * @param edges undirected (a, b, w BIGINT), a < b, w ≥ 1. */
   def modularityOfWeighted(edges: DataFrame, assign: DataFrame, k: Int,
-      broadcastLabels: Boolean = true, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+      broadcastLabels: Boolean = true): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
     // driver arm: the three aggregates in memory over the collected edge
     // and (node-sized) assignment frames — exact integers, no division,
     // so the arms are bit-identical (GraphSpec pins); ordering stays the
     // DataFrame expression below
-    if (driverCap > 0)
-      takeTriples(edges.select(col("a"), col("b"), col("w")),
-          driverCap).foreach { arr =>
-        takePairs(assign.select(col("v"), col("lbl")), driverCap).foreach { asn =>
-          return edges.sparkSession
-            .createDataFrame(DriverGraph.modularityOfWeighted(arr, asn))
-            .toDF("lbl", "n_members", "e_in", "d_sum", "m", "q_num")
-            .orderBy(col("n_members").desc, col("lbl"))
-            .limit(k)
-        }
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+      SmallInput.takePairs(assign.select(col("v"), col("lbl"))).foreach { asn =>
+        return edges.sparkSession
+          .createDataFrame(DriverGraph.modularityOfWeighted(arr, asn))
+          .toDF("lbl", "n_members", "e_in", "d_sum", "m", "q_num")
+          .orderBy(col("n_members").desc, col("lbl"))
+          .limit(k)
       }
+    }
     val e = edges.select(col("a"), col("b"), col("w"))
     val lbl = assign.select(col("v"), col("lbl"))
     def lblJ(df: DataFrame): DataFrame =
@@ -2952,20 +2844,18 @@ object Graph {
     * @param maxDegree apexes with more neighbors than this do not expand.
     */
   def jaccardTopK(edges: DataFrame, k: Int, minCommon: Long = 2L,
-      maxDegree: Int = jaccardMaxDegree, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+      maxDegree: Int = jaccardMaxDegree): DataFrame = {
     // driver arm (optimization round): the wedge pass in memory — same
     // guard (loud pair-pack failure), same capped-apex rule, same exact
     // integers; the packed-key wedge aggregate below stays the over-cap
     // path (GraphSpec pins arm equality)
-    if (driverCap > 0)
-      takePairs(edges.select(col("a"), col("b")), driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(DriverGraph.jaccardTopK(arr, minCommon, maxDegree))
-          .toDF("v1", "v2", "common", "d1", "d2", "jaccard_e4")
-          .orderBy(col("jaccard_e4").desc, col("v1"), col("v2"))
-          .limit(k)
-      }
+    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(DriverGraph.jaccardTopK(arr, minCommon, maxDegree))
+        .toDF("v1", "v2", "common", "d1", "d2", "jaccard_e4")
+        .orderBy(col("jaccard_e4").desc, col("v1"), col("v2"))
+        .limit(k)
+    }
     val adj = jaccardAdjacency(edges, guard = true)
     val deg = adj.select(col("a").as("v"), size(col("ns")).cast("long").as("d"))
     val apex = if (maxDegree == Int.MaxValue) adj
@@ -3049,19 +2939,16 @@ object Graph {
     *              ids must lie in [0, 1e9) (guarded in-plan).
     * @return top-k (v1, v2, common, min_sum, max_sum, ruzicka_e4). */
   def jaccardTopKWeighted(edges: DataFrame, k: Int, minCommon: Long = 2L,
-      maxDegree: Int = jaccardMaxDegree, driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
+      maxDegree: Int = jaccardMaxDegree): DataFrame = {
     // driver arm: see [[jaccardTopK]]'s — min-weight payload per wedge
-    if (driverCap > 0)
-      takeTriples(edges.select(col("a"), col("b"), col("w")),
-          driverCap).foreach { arr =>
-        return edges.sparkSession
-          .createDataFrame(
-            DriverGraph.jaccardTopKWeighted(arr, minCommon, maxDegree))
-          .toDF("v1", "v2", "common", "min_sum", "max_sum", "ruzicka_e4")
-          .orderBy(col("ruzicka_e4").desc, col("v1"), col("v2"))
-          .limit(k)
-      }
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+      return edges.sparkSession
+        .createDataFrame(
+          DriverGraph.jaccardTopKWeighted(arr, minCommon, maxDegree))
+        .toDF("v1", "v2", "common", "min_sum", "max_sum", "ruzicka_e4")
+        .orderBy(col("ruzicka_e4").desc, col("v1"), col("v2"))
+        .limit(k)
+    }
     val e = edges.select(guardId(col("a")).as("a"), guardId(col("b")).as("b"),
       col("w"))
     val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b"), col("w")))
@@ -3159,7 +3046,7 @@ object Graph {
     // union-find driver arm (optimization round — the same output by
     // ComponentsSpec's arm-equality pin; the distributed min-label +
     // pointer-jumping path stays the over-cap 100 TB route and is
-    // measured by ScaleProbe's `components` probe at driverEdgeCap = 0);
+    // measured by ScaleProbe's `components` probe, distributed only);
     // the oracle is a DuckDB recursive CTE propagating labels with the
     // l < dst prune (the component minimum always passes it, larger
     // labels are redundant), so the fixpoint is checked row by row.

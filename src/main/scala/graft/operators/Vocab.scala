@@ -63,21 +63,20 @@ object Vocab {
     * Driver arm (optimization round): the merge loop runs on the
     * WORD-FREQUENCY table by design — vocab-sized — yet the frame loop
     * paid k rounds × (pair-count aggregate + argmax collect + merge-fold
-    * checkpoint) of sequential stage latency. Under `driverCap` the
+    * checkpoint) of sequential stage latency. Under the cap the
     * (w, n) frame collects once and the identical greedy recurrence runs
     * in memory: per-occurrence weighted pair counts, (cnt desc, a, b)
     * argmax, leftmost-overlap merge scan (the mergeOnce fold's
     * consume-and-reset rule). Over cap: the unchanged frame loop
     * (VocabSpec pins arm equality). */
-  def learnMerges(docs: DataFrame, k: Int, minCount: Long = 2L,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): Seq[(String, String)] = {
+  def learnMerges(docs: DataFrame, k: Int,
+      minCount: Long = 2L): Seq[(String, String)] = {
     val wordFreq = docs
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val take = wordFreq.limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap && !take.exists(_.isNullAt(0))) {
+    graft.util.SmallInput.take(wordFreq).foreach { take =>
+      if (!take.exists(_.isNullAt(0))) {
         var words: Array[(Array[String], Long)] = take.map { r =>
           (r.getString(0).map(_.toString).toArray, r.getAs[Number](1).longValue)
         }
@@ -277,8 +276,7 @@ object Vocab {
     * count, then `rounds` Viterbi-segment → re-estimate cycles.
     * @return (piece, cnt, logp_e4) — usage counts of the LAST round,
     *         scored with the post-round Laplace estimate. */
-  def unigramFit(words: DataFrame, rounds: Int,
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
+  def unigramFit(words: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     // Driver arm (optimization round): the whole fit is vocab-sized —
     // seed counts, floor-e4 ln scores (same JVM libm on both arms), the
@@ -288,11 +286,8 @@ object Vocab {
     // loops, replacing per-round join+fold+aggregate stage chains.
     // Over cap / nulls: the frame loop below (VocabSpec pins arm
     // equality).
-    if (driverCap > 0 && driverCap < Int.MaxValue) {
-      val take = words.select(col("w"), col("n"))
-        .limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap &&
-          !take.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+    graft.util.SmallInput.take(words.select(col("w"), col("n"))).foreach { take =>
+      if (!take.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         import scala.collection.mutable.HashMap
         val wn = take.map(r => (r.getString(0), r.getAs[Number](1).longValue))
         // seed: per-occurrence substring counts, length ≤ maxPiece

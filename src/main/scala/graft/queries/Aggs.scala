@@ -865,12 +865,10 @@ object Aggs {
     * anchors and the tolerance verdicts — all hash/count-deterministic,
     * row-identical to the frame chain (AggDriverArmSpec pins it). None
     * over cap / on nulls. */
-  private[graft] def kmvIntersectDriver(s: SparkSession, m: DataFrame,
-      cap: Long = graft.util.Caps.cap(1000000L)): Option[DataFrame] = {
-    if (cap <= 0) return None
-    val take = m.limit(cap.toInt + 1).collect()
-    if (take.length > cap ||
-        take.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+  private[graft] def kmvIntersectDriver(s: SparkSession,
+      m: DataFrame): Option[DataFrame] = {
+    val take = graft.util.SmallInput.take(m).getOrElse(return None)
+    if (take.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val k = kmvK
     import scala.collection.mutable.HashSet
     val distinctA = HashSet.empty[Long]
@@ -950,22 +948,19 @@ object Aggs {
     *
     * Driver arm (optimization round — the quantileSketchDriver recipe):
     * value-at-rank over a sorted in-memory array IS this operator's
-    * semantics, so under `driverCap` the (group, x) projection collects
+    * semantics, so under the cap the (group, x) projection collects
     * once and the interpolation runs as plain double arithmetic —
     * a + (b − a)·g on IEEE doubles, identical to the frame's codegen'd
     * expression — replacing the range exchange + two window passes with
     * one job. Over cap (the 100 TB posture) the distributed-rank chain
-    * below runs unchanged (PlanSpec pins its one-exchange shape at
-    * driverCap = 0; AggDriverArmSpec pins arm equality); ScaleProbe
-    * passes 0. */
-  def percentilesOf(li: DataFrame, ps: Seq[Double],
-      driverCap: Long = graft.util.Caps.cap(1000000L)): DataFrame = {
-    require(driverCap < Int.MaxValue, "driverCap must fit an Int limit")
-    if (driverCap > 0) {
+    * below runs unchanged (PlanSpec pins its one-exchange shape;
+    * AggDriverArmSpec pins arm equality); ScaleProbe measures it
+    * distributed only. */
+  def percentilesOf(li: DataFrame, ps: Seq[Double]): DataFrame = {
+    graft.util.SmallInput.take(
+        li.select(col("l_returnflag"), col("l_extendedprice").as("x"))).foreach { take =>
       val s = li.sparkSession
-      val take = li.select(col("l_returnflag"), col("l_extendedprice").as("x"))
-        .limit(driverCap.toInt + 1).collect()
-      if (take.length <= driverCap && !take.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      if (!take.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val byG = new java.util.TreeMap[String, scala.collection.mutable.ArrayBuffer[Double]]
         take.foreach { r =>
           var b = byG.get(r.getString(0))
@@ -1117,14 +1112,12 @@ object Aggs {
     * to the frame's RANGE-frame window. None over cap or on any null —
     * the range-repartition chain runs then (PlanSpec pins its shape;
     * AggDriverArmSpec pins arm equality). */
-  private[graft] def weightedMedianDriver(s: SparkSession, li: DataFrame,
-      cap: Long = graft.util.Caps.cap(1000000L)): Option[DataFrame] = {
-    if (cap <= 0) return None
-    val take = li.select(col("l_returnflag"), col("l_extendedprice"),
-        col("l_quantity").cast("long"))
-      .limit(cap.toInt + 1).collect()
-    if (take.length > cap ||
-        take.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
+  private[graft] def weightedMedianDriver(s: SparkSession,
+      li: DataFrame): Option[DataFrame] = {
+    val take = graft.util.SmallInput.take(li.select(col("l_returnflag"),
+      col("l_extendedprice"), col("l_quantity").cast("long")))
+      .getOrElse(return None)
+    if (take.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None
     // per-group primitive arrays: the crossing walk needs per-DISTINCT-x
     // weight sums in ascending x, which a sortable-bits key gives without
@@ -1230,13 +1223,12 @@ object Aggs {
     * exact BigDecimal (the frame's DECIMAL accumulators), and the final
     * Pearson-style quotient + HALF_UP round(·,4) replicate the frame's
     * double expression bit-for-bit. None over cap / on nulls. */
-  private[graft] def giniDriver(s: SparkSession, ord: DataFrame,
-      cap: Long = graft.util.Caps.cap(1000000L)): Option[DataFrame] = {
-    if (cap <= 0) return None
-    val take = ord.select(col("o_orderpriority"), dec4(col("o_totalprice")))
-      .limit(cap.toInt + 1).collect()
-    if (take.length > cap ||
-        take.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+  private[graft] def giniDriver(s: SparkSession,
+      ord: DataFrame): Option[DataFrame] = {
+    val take = graft.util.SmallInput.take(
+      ord.select(col("o_orderpriority"), dec4(col("o_totalprice"))))
+      .getOrElse(return None)
+    if (take.exists(r => r.isNullAt(0) || r.isNullAt(1)))
       return None
     val byG = new java.util.TreeMap[String, scala.collection.mutable.ArrayBuffer[java.math.BigDecimal]]
     take.foreach { r =>

@@ -23,20 +23,19 @@ object Memo {
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
 
-  /** Per-invocation scoping for DRIVER-SIDE memos (optimization round 19,
-    * verdict r18 #2): a collected-array memo may legitimately serve
+  /** Per-invocation scoping for DRIVER-SIDE memos (optimization round
+    * 19, verdict r18 #2): a collected-array memo may legitimately serve
     * repeated collects of the same frame WITHIN one query invocation
     * (plain common-subexpression reuse inside the declared computation),
     * but must never carry results across bench reps or into a sibling
     * query — that would let later reps skip the declared work. The bench
     * harness calls [[newInvocation]] immediately before each timed run;
-    * registered hooks (e.g. Graph's collected-edge memo) clear their
-    * state then. Verify/tests never pool (cacheTables off), so they need
-    * no invalidation. */
-  private val invocationHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  def onNewInvocation(hook: () => Unit): Unit = invocationHooks.add(hook)
-  def newInvocation(): Unit = invocationHooks.forEach(h => h())
+    * every driver-side memo keys its entries by [[invocation]] (e.g.
+    * [[SmallInput]]'s collect memo), so no entry outlives the fence
+    * without the memo having to register for it. */
+  private val invocationId = new java.util.concurrent.atomic.AtomicLong(0L)
+  def invocation: Long = invocationId.get
+  def newInvocation(): Unit = invocationId.incrementAndGet()
 
   def benchMemo(s: SparkSession, dir: String, what: String)
       (build: => DataFrame): DataFrame =

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 
+import graft.util.SmallInput.distributed
+
 /** Physical-plan regression guards (the 100 TB posture, checked at sf0.001):
   * filters/projections reach the parquet scan, dimension joins broadcast,
   * top-k never global-sorts, aggregation is partial+final with a single
@@ -122,7 +124,7 @@ class PlanSpec extends SparkSpec {
     // er_entities takes the survivorship driver arm (optimization
     // round): its result plan is dim-row-sized; the ORIGINAL contract —
     // broadcast dim joins, no product — is pinned on the distributed
-    // chain (driverCap = 0), the over-cap 100 TB path
+    // chain (distributed only), the over-cap 100 TB path
     val peArm = plan("q_er_entities")
     assert(!peArm.contains("Scan parquet"),
       s"the driver-arm result plan must be result-sized:\n$peArm")
@@ -139,7 +141,7 @@ class PlanSpec extends SparkSpec {
         .filter(col("rn") === 1)
         .select(col("p_name").as("name"), col("p_brand"),
           col("p_type"), col("p_size"))
-      graft.operators.Dedup.erEntitiesFrom(ids, rep, driverCap = 0L)
+      distributed(graft.operators.Dedup.erEntitiesFrom(ids, rep))
         .queryExecution.explainString(ExplainMode.fromString("formatted"))
     }
     assert(pe.contains("BroadcastHashJoin"),
@@ -264,14 +266,13 @@ class PlanSpec extends SparkSpec {
     // (modulo the runtime bracket guard). Pin the reuse here.
     // The query itself takes the driver arm (optimization round): pin its
     // result plan exchange-free, then pin the ORIGINAL contract on the
-    // distributed arm (driverCap = 0) — the over-cap 100 TB path.
+    // distributed arm (distributed only) — the over-cap 100 TB path.
     spark.catalog.clearCache()
     val pq = plan("q_agg_percentiles")
     assert(!pq.contains("Scan parquet"),
       s"the driver-arm result plan must be result-sized:\n$pq")
-    val df = graft.queries.Aggs.percentilesOf(
-      graft.catalog.Tables.lineitem(spark, sf()), Seq(0.25, 0.5, 0.75),
-      driverCap = 0L)
+    val df = distributed(graft.queries.Aggs.percentilesOf(
+      graft.catalog.Tables.lineitem(spark, sf()), Seq(0.25, 0.5, 0.75)))
     df.collect() // AQE: reuse is visible only in the final executed plan
     // Count only the repartitionByRange exchange (REPARTITION_BY_COL) in
     // the FINAL adaptive plan — the trailing "== Initial Plan ==" section
@@ -499,7 +500,7 @@ class PlanSpec extends SparkSpec {
   test("graph ANN: search result reads checkpointed deltas, no product, no corpus window") {
     // the query takes the driver search arm (optimization round): its
     // plan is the ranked LocalRelation — pin that, then pin the
-    // ORIGINAL contract on the distributed arm's plan (driverCap = 0),
+    // ORIGINAL contract on the distributed arm's plan (distributed only),
     // which is what runs over cap
     val pq = plan("q_ann_graph")
     assert(!pq.contains("CartesianProduct") && !pq.contains("Scan parquet"),
@@ -514,9 +515,8 @@ class PlanSpec extends SparkSpec {
     val entries = corpus.filter(col("cand_id").isin(5L, 128L))
       .crossJoin(probes.select(col("probe_id")))
       .select(col("probe_id"), col("cand_id"))
-    val p = graft.operators.Ann
-      .graphAnnSearch(probes, corpus, index, entries, 16, 2, 3,
-        driverCap = 0L)
+    val p = distributed(graft.operators.Ann
+      .graphAnnSearch(probes, corpus, index, entries, 16, 2, 3))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // the returned plan is the union of the per-hop checkpointed deltas
     // under the final per-probe rank — the corpus itself appears nowhere
@@ -551,10 +551,9 @@ class PlanSpec extends SparkSpec {
     val pq = plan("q_graph_jaccard_weighted")
     assert(!pq.contains("CartesianProduct"),
       s"driver-arm jaccard plan stays product-free:\n$pq")
-    val p = graft.operators.Graph
+    val p = distributed(graft.operators.Graph
       .jaccardTopKWeighted(
-        graft.operators.Graph.sliceEdgesAffinity(spark, sf()), k = 50,
-        driverCap = 0L)
+        graft.operators.Graph.sliceEdgesAffinity(spark, sf()), k = 50))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // the measured ~25% lever: the wedge-pair shuffle keys on pk (one
     // BIGINT), not a (v1, v2) struct — regression here silently reverts
@@ -687,16 +686,15 @@ class PlanSpec extends SparkSpec {
     // the query takes the cap-gated driver arm (optimization round):
     // its plan is the in-memory result + TakeOrdered — pin that, then
     // pin the ORIGINAL 100 TB posture on the distributed arm's plan
-    // (driverCap = 0), which is what actually runs over cap
+    // (distributed only), which is what actually runs over cap
     val pq = plan("q_graph_modularity")
     assert(pq.contains("TakeOrderedAndProject"),
       s"driver-arm modularity must still take-order its top-k in:\n$pq")
     assert(!pq.contains("Exchange"),
       s"the driver-arm plan must carry no shuffle in:\n$pq")
     val e = graft.operators.Graph.jaccardSliceEdges(spark, sf())
-    val p = graft.operators.Graph.modularityOf(e,
-        graft.operators.Graph.labelAssign(e, 3, driverCap = 0L), k = 10,
-        driverCap = 0L)
+    val p = distributed(graft.operators.Graph.modularityOf(e,
+        graft.operators.Graph.labelAssign(e, 3), k = 10))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
       s"both edge-label joins and the degree-label join must broadcast in:\n$p")
@@ -809,7 +807,7 @@ class PlanSpec extends SparkSpec {
     assert(!pq.contains("Exchange") || pq.contains("rangepartitioning"),
       s"the driver-arm plan is result-sized — at most the order-by exchange in:\n$pq")
     val assigned = graft.operators.Ann.silhouetteAssigned(spark, sf())
-    val p = graft.operators.Ann.silhouetteOf(assigned, driverCap = 0L)
+    val p = distributed(graft.operators.Ann.silhouetteOf(assigned))
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     // the candidate side broadcasts into the nested-loop pair pass
     assert(p.contains("BroadcastNestedLoopJoin"),

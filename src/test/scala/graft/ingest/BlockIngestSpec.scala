@@ -94,6 +94,21 @@ class BlockIngestSpec extends SparkSpec {
     assert(blocks.groupBy("block_number").count().filter(col("count") > 1).count() === 0)
   }
 
+  test("writeBronze: a block without chain_name keeps its transactions") {
+    val out = java.nio.file.Files.createTempDirectory("bronzeNoChain").toString
+    import spark.implicits._
+    val raw = Seq(
+      """{"number":"7","hash":"0xn7","parent_hash":"0xn6","timestamp":1700000007,"transactions":[{"hash":"0xtn1","block_number":"7","from":"0xa"},{"hash":"0xtn2","block_number":"7","from":"0xb"}],"uncles":[]}"""
+    ).toDF("value")
+    BlockIngest.writeBronze(BlockIngest.parse(raw), out)
+    val blocks = spark.read.parquet(s"$out/blocks")
+    val txs = spark.read.parquet(s"$out/transactions")
+    assert(blocks.count() === 1)
+    assert(txs.select(col("tx_hash")).as[String].collect().sorted.toSeq ===
+      Seq("0xtn1", "0xtn2"))
+    assert(txs.filter(col("chain_name").isNull).count() === 2)
+  }
+
   test("backfillRange: parallel fan-out over the block range (A6 upgrade)") {
     val df = BlockIngest.backfillRange(spark, 10L, 29L, parallelism = 4) { n =>
       if (n % 10 == 3) None // missing block → skipped, like Option::None

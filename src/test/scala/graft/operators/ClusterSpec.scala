@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.SmallInput.distributed
 
 /** DBSCAN (the clustering tier's density member): a handcrafted
   * direction-cluster fixture with every role represented, then the
@@ -54,7 +55,7 @@ class ClusterSpec extends SparkSpec {
       spark.createDataFrame(Seq((40L, Seq(0.0f, 0.0f)))).toDF("vec_id", "embedding"))
     val drv = Cluster.epsPairs(withZero, 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dist = Cluster.epsPairs(withZero, 0.95, driverCap = 0L)
+    val dist = distributed(Cluster.epsPairs(withZero, 0.95))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(drv === dist, s"eps-pair arms diverged: $drv vs $dist")
     assert(!drv.exists(p => p._1 == 40L || p._2 == 40L),
@@ -108,7 +109,7 @@ class ClusterSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val arm = Cluster.dbscan(embs, eps = 0.3, minPts = 8)
-    val dist = Cluster.dbscan(embs, eps = 0.3, minPts = 8, driverCap = 0L)
+    val dist = distributed(Cluster.dbscan(embs, eps = 0.3, minPts = 8))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(rows(arm) === rows(dist))
@@ -117,7 +118,7 @@ class ClusterSpec extends SparkSpec {
   test("epsPairsAnn: one-sided error — every routed edge passes the exact " +
       "kernel (subset of the exact eps-graph), schema identical") {
     val embs = graft.catalog.Tables.embeddings(spark, sf())
-    val exact = Cluster.epsPairs(embs, 0.3, driverCap = 0L)
+    val exact = distributed(Cluster.epsPairs(embs, 0.3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ann = Cluster.epsPairsAnn(embs, 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -128,6 +129,6 @@ class ClusterSpec extends SparkSpec {
     assert(ann.nonEmpty, "ANN route found no edges on the real fixture")
     // the exact tier still decides every oracle-reachable input: the
     // fixture sits far below the route threshold
-    assert(embs.count() <= Cluster.epsAnnCap)
+    assert(embs.count() <= Cluster.EpsAnnCap)
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.SmallInput.distributed
 
 /** Connected components (pairs → dedup clusters): correctness vs a
   * driver-side union-find, and the O(log n) round bound that makes the
@@ -37,7 +38,7 @@ class ComponentsSpec extends SparkSpec {
     val members = (0 until 120).groupBy(find)
     val want = members.flatMap { case (_, ms) => ms.map(_.toLong -> ms.min.toLong) }
     // distributed path (cap=0 disables the driver fast path)
-    val got = Components.connectedComponents(edgesDf(es), driverEdgeCap = 0L)
+    val got = distributed(Components.connectedComponents(edgesDf(es)))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // nodes never touched by an edge are absent from `got` by contract
     assert(got === want.filter { case (id, _) => got.contains(id) })

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.SmallInput.distributed
 
 /** Integer PageRank: hand-computed exact ranks on a tiny star, a
   * driver-side reference implementation on a seeded random graph (proving
@@ -81,8 +82,7 @@ class GraphSpec extends SparkSpec {
     // frame is a checkpoint, so asserting on ITS plan would be vacuous).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val viaShuffle = Graph.pagerank(edgesDf(es), iters = 4, broadcastRanks = false,
-          driverCap = 0L)
+      val viaShuffle = distributed(Graph.pagerank(edgesDf(es), iters = 4, broadcastRanks = false))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaShuffle === viaBroadcast)
       assert(viaBroadcast === refPagerank(es, iters = 4))
@@ -117,8 +117,7 @@ class GraphSpec extends SparkSpec {
     assert(got(0L) > got(2L), "heavy mutual edge must concentrate mass")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val sh = Graph.pagerankWeighted(es, iters = 5, broadcastRanks = false,
-          driverCap = 0L)
+      val sh = distributed(Graph.pagerankWeighted(es, iters = 5, broadcastRanks = false))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(sh === got, "weighted shuffle arm must match broadcast exactly")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -158,9 +157,9 @@ class GraphSpec extends SparkSpec {
     // frontier-too-big-to-broadcast fallback arm: identical distances
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val sh = Graph.ssspWeighted(
+      val sh = distributed(Graph.ssspWeighted(
           es.map { case (s, d) => (s, d, 1L) }.toDF("src", "dst", "w"),
-          src, rounds = 4, broadcastFrontier = false, driverCap = 0L)
+          src, rounds = 4, broadcastFrontier = false))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(sh === hops, "shuffle-frontier arm must match broadcast exactly")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -177,8 +176,8 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val viaShuffle = Graph.bfsHops(edgesDf(es), src, maxHops = 4,
-          broadcastFrontier = false, driverCap = 0L)
+      val viaShuffle = distributed(Graph.bfsHops(edgesDf(es), src, maxHops = 4,
+          broadcastFrontier = false))
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(viaShuffle === viaBroadcast,
         "shuffle-frontier arm must match broadcast exactly")
@@ -368,8 +367,8 @@ class GraphSpec extends SparkSpec {
     // nodes-too-big-to-broadcast fallback arm: identical survivors
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val sh = Graph.kcorePeelWeighted(e1, s = 3L, rounds = 4,
-          broadcastKeep = false, driverCap = 0L)
+      val sh = distributed(Graph.kcorePeelWeighted(e1, s = 3L, rounds = 4,
+          broadcastKeep = false))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(sh === unw, "shuffle-keep arm must match broadcast exactly")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -447,12 +446,11 @@ class GraphSpec extends SparkSpec {
     assert(got === want, s"got $got")
     // broadcast arm: identical estimates (union is register-max — the
     // distribution strategy cannot change the result)
-    val bc = Graph.hyperBall(ed, radius = 3, broadcastState = true,
-        driverCap = 0L)
+    val bc = distributed(Graph.hyperBall(ed, radius = 3, broadcastState = true))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(bc === want)
-    // shuffle arm at driverCap = 0: the over-cap 100 TB path
-    val sh = Graph.hyperBall(ed, radius = 3, driverCap = 0L)
+    // shuffle arm, distributed only: the over-cap 100 TB path
+    val sh = distributed(Graph.hyperBall(ed, radius = 3))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(sh === want)
     // the exact anchor agrees with the sketch on every (source, t)
@@ -470,8 +468,8 @@ class GraphSpec extends SparkSpec {
     val arm = Graph.hyperBall(ed, radius = 3, broadcastState = true,
         layoutOwned = true)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-    val dist = Graph.hyperBall(ed, radius = 3, broadcastState = true,
-        layoutOwned = true, driverCap = 0L)
+    val dist = distributed(Graph.hyperBall(ed, radius = 3, broadcastState = true,
+        layoutOwned = true))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(arm === dist)
   }
@@ -513,10 +511,9 @@ class GraphSpec extends SparkSpec {
     val got = Graph.betweennessBounded(ed, Seq(1L).toDF("s"), 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(2L -> 20000L, 3L -> 10000L, 4L -> 0L), s"got $got")
-    // arm equality (round 18): the distributed chain (driverCap = 0)
+    // arm equality (round 18): the distributed chain (distributed only)
     // reproduces the default driver arm row-for-row
-    val gotD = Graph.betweennessBounded(ed, Seq(1L).toDF("s"), 3,
-        driverCap = 0L)
+    val gotD = distributed(Graph.betweennessBounded(ed, Seq(1L).toDF("s"), 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotD === got, s"distributed arm diverged: $gotD vs $got")
     // diamond 1-{2,3}-4: two shortest paths to 4 (σ4 = 2) split the
@@ -558,18 +555,17 @@ class GraphSpec extends SparkSpec {
     // three-arm equality (round 18): the default DRIVER arm (computed
     // above — the sample-bounded-state fast path), the distributed
     // broadcast arm, and the shuffle-join fallback are row-for-row equal
-    val wwB = Graph.betweennessWeightedBounded(edw, Seq(1L).toDF("s"), 3,
-        driverCap = 0L)
+    val wwB = distributed(Graph.betweennessWeightedBounded(edw, Seq(1L).toDF("s"), 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wwB === ww, s"broadcast arm diverged: $wwB vs $ww")
-    val wwS = Graph.betweennessWeightedBounded(edw, Seq(1L).toDF("s"), 3,
-        broadcastState = false, driverCap = 0L)
+    val wwS = distributed(Graph.betweennessWeightedBounded(edw, Seq(1L).toDF("s"), 3,
+        broadcastState = false))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wwS === ww, s"shuffle arm diverged: $wwS vs $ww")
     // and on the asymmetric-weight multi-source shape: driver ≡ broadcast
     val ms = Graph.betweennessWeightedBounded(edw, srcs, 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val msB = Graph.betweennessWeightedBounded(edw, srcs, 3, driverCap = 0L)
+    val msB = distributed(Graph.betweennessWeightedBounded(edw, srcs, 3))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ms === msB, s"driver arm diverged on multi-source: $ms vs $msB")
   }
@@ -626,8 +622,7 @@ class GraphSpec extends SparkSpec {
     assert(got.map(_._2).sum === 10L, "every node belongs to exactly one community")
     assert(got.forall(_._2 >= 5), s"clique communities must hold: ${got.toSeq}")
     // shuffle fallback = broadcast arm, row for row
-    val sh = Graph.labelPropagate(e, rounds = 3, k = 10, broadcastLabels = false,
-      driverCap = 0L)
+    val sh = distributed(Graph.labelPropagate(e, rounds = 3, k = 10, broadcastLabels = false))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.toSeq === sh.toSeq)
     // determinism: a second run is identical (the tie rule is total)
@@ -658,8 +653,7 @@ class GraphSpec extends SparkSpec {
     }
     assert(q(0) <= q(1) && q(1) <= q(2), s"Q decreased across rounds: $q")
     // arm equality: the shuffle-join fallback is bit-identical
-    val shuffled = Graph.louvainAssign(ed, rounds = 2, broadcastLabels = false,
-      driverCap = 0L)
+    val shuffled = distributed(Graph.louvainAssign(ed, rounds = 2, broadcastLabels = false))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(shuffled === got)
     // w ≡ 1 collapse: the weighted operator reproduces the unweighted
@@ -728,8 +722,8 @@ class GraphSpec extends SparkSpec {
     info(s"Q numerators: level-1 $q1, level-2 $q2")
     assert(q2 >= q1, s"multilevel decreased Q: $q1 -> $q2")
     // determinism + arm equality of the whole multilevel chain
-    val again = Graph.louvainMultilevelAssign(ed, rounds = 2,
-        broadcastLabels = false, driverCap = 0L)
+    val again = distributed(Graph.louvainMultilevelAssign(ed, rounds = 2,
+        broadcastLabels = false))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again === lvl2, "shuffle arm / rerun diverged")
   }
@@ -773,8 +767,9 @@ class GraphSpec extends SparkSpec {
     assert(q1.getLong(5) === 0L, s"one-community q_num must be 0, got $q1")
     // shuffle fallback (broadcastLabels=false, the nodes-too-big-to-
     // broadcast arm) scores identically, row for row
-    val sh = Graph.modularityOf(e, Graph.labelAssign(e, rounds = 3), k = 10,
-        broadcastLabels = false, driverCap = 0L)
+    val asn = Graph.labelAssign(e, rounds = 3)
+    val sh = distributed(Graph.modularityOf(e, asn, k = 10,
+        broadcastLabels = false))
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))
     assert(got.toSeq === sh.toSeq, "broadcast and shuffle arms must agree")
@@ -792,8 +787,7 @@ class GraphSpec extends SparkSpec {
     val e = raw.toDF("a", "b")
     val bc = Graph.kcorePeel(e, k = 3, rounds = 4, broadcastKeep = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val sh = Graph.kcorePeel(e, k = 3, rounds = 4, broadcastKeep = false,
-      driverCap = 0L)
+    val sh = distributed(Graph.kcorePeel(e, k = 3, rounds = 4, broadcastKeep = false))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(bc.nonEmpty, "fixture should retain a core at k=3")
     assert(bc === sh, "broadcast and shuffle arms must peel identically")
@@ -898,7 +892,7 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     // One seeded random graph (symmetrized, weights 1..5) drives every
     // loop operator through BOTH arms: the default cap-gated driver arm
-    // and the driverCap = 0 distributed chain must agree row-for-row —
+    // and the distributed-only chain must agree row-for-row —
     // the same pin betweenness/components carry, extended to the
     // operators the optimization round driver-armed.
     val rnd = new scala.util.Random(23)
@@ -920,46 +914,44 @@ class GraphSpec extends SparkSpec {
         dist: org.apache.spark.sql.DataFrame): Unit =
       assert(rows(drv) === rows(dist), s"$name arms diverged")
     eq("pagerank", Graph.pagerank(edDf, 3),
-      Graph.pagerank(edDf, 3, driverCap = 0L))
+      distributed(Graph.pagerank(edDf, 3)))
     eq("pagerankWeighted", Graph.pagerankWeighted(edWDf, 3),
-      Graph.pagerankWeighted(edWDf, 3, driverCap = 0L))
+      distributed(Graph.pagerankWeighted(edWDf, 3)))
     eq("pagerankPersonalized",
       Graph.pagerankPersonalized(edDf, srcs, 3),
-      Graph.pagerankPersonalized(edDf, srcs, 3, driverCap = 0L))
+      distributed(Graph.pagerankPersonalized(edDf, srcs, 3)))
     eq("ssspWeighted", Graph.ssspWeighted(edWDf, srcs, 3),
-      Graph.ssspWeighted(edWDf, srcs, 3, driverCap = 0L))
+      distributed(Graph.ssspWeighted(edWDf, srcs, 3)))
     eq("bfsHops", Graph.bfsHops(edDf, srcs, 3),
-      Graph.bfsHops(edDf, srcs, 3, driverCap = 0L))
+      distributed(Graph.bfsHops(edDf, srcs, 3)))
     eq("kcorePeel", Graph.kcorePeel(unDf, 3, 3),
-      Graph.kcorePeel(unDf, 3, 3, driverCap = 0L))
+      distributed(Graph.kcorePeel(unDf, 3, 3)))
     eq("kcorePeelWeighted", Graph.kcorePeelWeighted(unWDf, 4L, 3),
-      Graph.kcorePeelWeighted(unWDf, 4L, 3, driverCap = 0L))
+      distributed(Graph.kcorePeelWeighted(unWDf, 4L, 3)))
     eq("ktrussPeel", Graph.ktrussPeel(unDf, 4, 2),
-      Graph.ktrussPeel(unDf, 4, 2, driverCap = 0L))
+      distributed(Graph.ktrussPeel(unDf, 4, 2)))
     eq("triangleCount", Graph.triangleCount(unDf),
-      Graph.triangleCount(unDf, driverCap = 0L))
+      distributed(Graph.triangleCount(unDf)))
     eq("localClusteringTopK", Graph.localClusteringTopK(unDf, 100),
-      Graph.localClusteringTopK(unDf, 100, driverCap = 0L))
+      distributed(Graph.localClusteringTopK(unDf, 100)))
     eq("labelAssignWeighted", Graph.labelAssignWeighted(unWDf, 3),
-      Graph.labelAssignWeighted(unWDf, 3, driverCap = 0L))
+      distributed(Graph.labelAssignWeighted(unWDf, 3)))
     eq("louvainAssignWeighted", Graph.louvainAssignWeighted(unWDf, 2),
-      Graph.louvainAssignWeighted(unWDf, 2, driverCap = 0L))
+      distributed(Graph.louvainAssignWeighted(unWDf, 2)))
     // louvain with self-loop mass (the coarse-graph contract)
     val sl = Seq((1L, 3L), (5L, 2L)).toDF("v", "sw")
     eq("louvainAssignWeighted+selfLoops",
       Graph.louvainAssignWeighted(unWDf, 2, selfLoops = Some(sl)),
-      Graph.louvainAssignWeighted(unWDf, 2, selfLoops = Some(sl),
-        driverCap = 0L))
+      distributed(Graph.louvainAssignWeighted(unWDf, 2, selfLoops = Some(sl))))
     eq("modularityOfWeighted",
       Graph.modularityOfWeighted(unWDf,
         Graph.labelAssignWeighted(unWDf, 2), 100),
-      Graph.modularityOfWeighted(unWDf,
-        Graph.labelAssignWeighted(unWDf, 2, driverCap = 0L), 100,
-        driverCap = 0L))
+      distributed(Graph.modularityOfWeighted(unWDf,
+        Graph.labelAssignWeighted(unWDf, 2), 100)))
     eq("jaccardTopK", Graph.jaccardTopK(unDf, 1000, 1L),
-      Graph.jaccardTopK(unDf, 1000, 1L, driverCap = 0L))
+      distributed(Graph.jaccardTopK(unDf, 1000, 1L)))
     eq("jaccardTopKWeighted", Graph.jaccardTopKWeighted(unWDf, 1000, 1L),
-      Graph.jaccardTopKWeighted(unWDf, 1000, 1L, driverCap = 0L))
+      distributed(Graph.jaccardTopKWeighted(unWDf, 1000, 1L)))
   }
 
   test("wdist107Shared: driver Bellman arm ≡ the frame loop (state and schema)") {
@@ -968,7 +960,7 @@ class GraphSpec extends SparkSpec {
     // (s, v, d) state the distributed min-union rounds produce
     val dir = sf()
     val (_, dArm, relA) = Graph.wdist107Shared(spark, dir, 3)
-    val (_, dDist, relD) = Graph.wdist107Shared(spark, dir, 3, driverCap = 0L)
+    val (_, dDist, relD) = distributed(Graph.wdist107Shared(spark, dir, 3))
     assert(dArm.schema.map(f => (f.name, f.dataType)) ===
       dDist.schema.map(f => (f.name, f.dataType)))
     assert(dArm.collect().map(_.toString).sorted.toSeq ===

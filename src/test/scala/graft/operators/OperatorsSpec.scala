@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.catalog.Tables
+import graft.util.SmallInput.distributed
 
 /** Unit tests for the scale-path operators: LSH dedup candidate generation,
   * ANN recall vs the brute-force baseline, and property-style laws. */
@@ -858,8 +859,8 @@ class OperatorsSpec extends SparkSpec {
     // frame chain return the same ranked rows, column for column
     val drvRows = Ann.graphAnnSearch(probes, corpus, index, entries,
       beam = 32, hops = 6, k = 3).collect().map(_.toSeq).toSeq
-    val distRows = Ann.graphAnnSearch(probes, corpus, index, entries,
-      beam = 32, hops = 6, k = 3, driverCap = 0L).collect().map(_.toSeq).toSeq
+    val distRows = distributed(Ann.graphAnnSearch(probes, corpus, index, entries,
+      beam = 32, hops = 6, k = 3)).collect().map(_.toSeq).toSeq
     assert(drvRows === distRows, "graphAnnSearch arms diverged")
     graft.util.Frames.releaseCheckpoint(index)
     graft.util.Frames.releaseCheckpoint(corpus)
@@ -968,7 +969,7 @@ class OperatorsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val arm = Dedup.minhashNearDups(docs, 0.5)
-    val dist = Dedup.minhashNearDups(docs, 0.5, driverCap = 0L)
+    val dist = distributed(Dedup.minhashNearDups(docs, 0.5))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(rows(arm) === rows(dist))
@@ -982,22 +983,21 @@ class OperatorsSpec extends SparkSpec {
       df.collect().map(_.toString).sorted.toSeq
     // candidates arm: same pair set
     assert(rows(Dedup.containmentCandidates(slice)) ===
-      rows(Dedup.containmentCandidates(slice, driverCap = 0L)))
+      rows(distributed(Dedup.containmentCandidates(slice))))
     // verify arm over the all-pairs product: identical rows + schema
     val arm = Dedup.containmentNearDups(slice, 5000L)
-    val dist = Dedup.containmentVerify(slice,
+    val dist = distributed(Dedup.containmentVerify(slice,
       slice.select(col("doc_id").as("d1"))
         .join(slice.select(col("doc_id").as("d2")), col("d1") < col("d2")),
-      5000L, driverCap = 0L)
+      5000L))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(rows(arm) === rows(dist))
     // composed scale path: arms ≡ frames end to end
     assert(rows(Dedup.containmentVerify(slice,
         Dedup.containmentCandidates(slice), 5000L)) ===
-      rows(Dedup.containmentVerify(slice,
-        Dedup.containmentCandidates(slice, driverCap = 0L), 5000L,
-        driverCap = 0L)))
+      rows(distributed(Dedup.containmentVerify(slice,
+        Dedup.containmentCandidates(slice), 5000L))))
   }
 
   test("erEntitiesFrom: driver-arm survivorship ≡ the frame chain (driverCap = 0)") {
@@ -1014,7 +1014,7 @@ class OperatorsSpec extends SparkSpec {
       .select(col("p_name").as("name"), col("p_brand"),
         col("p_type"), col("p_size"))
     val arm = Dedup.erEntitiesFrom(ids, rep)
-    val dist = Dedup.erEntitiesFrom(ids, rep, driverCap = 0L)
+    val dist = distributed(Dedup.erEntitiesFrom(ids, rep))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(arm.collect().map(_.toString).toSeq ===
@@ -1025,7 +1025,7 @@ class OperatorsSpec extends SparkSpec {
     // the optimization round's in-memory argmax count must reproduce the
     // assignPortable + count/join pipeline row-for-row, schema included
     val arm = Ann.kmeansFrame(spark, sf(), Ann.kmK, Ann.kmIters)
-    val dist = Ann.kmeansFrame(spark, sf(), Ann.kmK, Ann.kmIters, driverCap = 0L)
+    val dist = distributed(Ann.kmeansFrame(spark, sf(), Ann.kmK, Ann.kmIters))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(arm.collect().map(_.toString).toSeq ===
@@ -1057,7 +1057,7 @@ class OperatorsSpec extends SparkSpec {
     // arm equality (optimization round): the in-memory pair pass and the
     // distributed n² frame must agree row-for-row, schema included
     val drv = Ann.silhouetteOf(assigned)
-    val dist = Ann.silhouetteOf(assigned, driverCap = 0L)
+    val dist = distributed(Ann.silhouetteOf(assigned))
     assert(drv.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)), "arm schemas diverged")
     assert(drv.collect().map(_.toSeq).toSeq ===

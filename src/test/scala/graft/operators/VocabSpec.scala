@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.SmallInput.distributed
 
 /** BPE vocabulary induction: deterministic merges, greedy-left application,
   * compression monotonicity, early stop. */
@@ -108,7 +109,7 @@ class VocabSpec extends SparkSpec {
     val docs = graft.catalog.Tables.documents(spark, sf())
       .filter(col("doc_id") < 100)
     assert(Vocab.learnMerges(docs, k = 10) ===
-      Vocab.learnMerges(docs, k = 10, driverCap = 0L))
+      distributed(Vocab.learnMerges(docs, k = 10)))
   }
 
   test("unigramFit: driver arm ≡ frame loop on real sf0.001 docs (driverCap = 0)") {
@@ -121,7 +122,7 @@ class VocabSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val arm = Vocab.unigramFit(words, rounds = 2)
-    val dist = Vocab.unigramFit(words, rounds = 2, driverCap = 0L)
+    val dist = distributed(Vocab.unigramFit(words, rounds = 2))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(rows(arm) === rows(dist))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.util.SmallInput.distributed
 
 /** Arm-equality pins for the quantile-family driver arms (optimization
   * round): the in-memory arm must be row-identical — values AND schema —
@@ -20,7 +21,7 @@ class AggDriverArmSpec extends SparkSpec {
     val li = graft.catalog.Tables.lineitem(spark, sf())
     val ps = Seq(0.25, 0.5, 0.75)
     val arm = Aggs.percentilesOf(li, ps)
-    val dist = Aggs.percentilesOf(li, ps, driverCap = 0L)
+    val dist = distributed(Aggs.percentilesOf(li, ps))
     assert(arm.schema.map(f => (f.name, f.dataType)) ===
       dist.schema.map(f => (f.name, f.dataType)))
     assert(rowsOf(arm) === rowsOf(dist))
@@ -33,7 +34,7 @@ class AggDriverArmSpec extends SparkSpec {
       ("B", 5.5)).toDF("l_returnflag", "l_extendedprice").repartition(3)
     val ps = Seq(0.1, 0.5, 0.9)
     assert(rowsOf(Aggs.percentilesOf(li, ps)) ===
-      rowsOf(Aggs.percentilesOf(li, ps, driverCap = 0L)))
+      rowsOf(distributed(Aggs.percentilesOf(li, ps))))
   }
 
   test("weighted median: driver arm ≡ distributed arm on sf0.001 lineitem") {
