@@ -14,6 +14,19 @@ object GraftSession {
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
+    // Static conf: read once, when the first plan is compiled. Spark's
+    // default of 100 entries is smaller than one perfbench ingest pass or
+    // one pass of its six small queries, so a warm timed op recompiled
+    // 16.4 (ingest) or 5.2 (queries) classes an earlier plan had already
+    // compiled (traced runs, local[2] on 4 vCPUs). At 1000 both working
+    // sets stay compiled.
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    // Let AQE coalesce the shuffle under a persisted plan. Spark 4.1 keeps
+    // a cached plan at spark.sql.shuffle.partitions partitions, so at
+    // Spark's default of 200 one 3-block writeBronze ran 602 tasks over
+    // its persisted canonical blocks; coalesced it runs under 10
+    // (BlockIngestSpec).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     // native codegen'd vector kernels (graft_dot / graft_cosine)
     "spark.sql.extensions" -> "graft.plans.GraftExtensions"
   )

@@ -25,9 +25,12 @@ import org.apache.spark.sql.types._
   * `evm_consumer.rs:66-70`) cast to LONG; arithmetic projections go through
   * `u256ToDec38` which yields null + an overflow flag past DECIMAL(38).
   *
-  * Scale notes: ingest is embarrassingly parallel (per-message narrow ops);
-  * the only shuffles are dedup (hash by key) and the optional keep-latest
-  * window. Bronze tables partition by chain_name so per-chain queries prune.
+  * Scale notes: ingest is embarrassingly parallel (per-message narrow ops).
+  * A bronze write shuffles twice: the blocks once, by (chain, height), for
+  * the keep-latest window, which also collapses exact duplicates; the
+  * exploded transactions once, for their dedup. The logs sink adds one
+  * join against the landed transaction keys. Bronze tables partition by
+  * chain_name so per-chain queries prune.
   */
 object BlockIngest {
 
@@ -182,19 +185,29 @@ object BlockIngest {
   def dedupTxs(txs: DataFrame): DataFrame =
     txs.dropDuplicates("chain_name", "block_number", "tx_hash")
 
+  /** Parsed block messages → one canonical block row per (chain, height).
+    * `keepCanonical` keeps exactly one row per height, so exact duplicate
+    * deliveries collapse in its window and a `dedupBlocks` shuffle before
+    * it would change nothing: the plan has one exchange. */
+  def canonicalBlocks(parsed: DataFrame): DataFrame =
+    keepCanonical(normalizeBlocks(parsed))
+
   /** A14 sink: parent-before-child (fixes §0.2.4), dedup-on-write (fixes
-    * §0.2.5), partitioned by chain for pruning. Child rows are restricted
-    * to CANONICAL parents — a reorg that replaces a block must not leave
-    * its orphaned transactions behind (the FK intent of
+    * §0.2.5), partitioned by chain for pruning. Blocks are the
+    * `canonicalBlocks` of the batch. Child rows are restricted to
+    * CANONICAL parents — a reorg that replaces a block must not leave its
+    * orphaned transactions behind (the FK intent of
     * `0001_initial.sql:39`): they are exploded from the canonical blocks
     * themselves, so no join against the messages is needed. The blocks
     * are persisted for the two writes: recomputed, the transactions write
     * would read the queue again and shuffle every block's transactions
-    * array through the dedup and the canonical window a second time.
+    * array through the canonical window a second time. The persisted plan
+    * keeps AQE's coalesced partitioning (`GraftSession.configs`), so a
+    * small batch runs a few tasks, not one per shuffle partition.
     * Parquet append = the idempotent-upsert surface (compact with
     * keepCanonical). */
   def writeBronze(parsed: DataFrame, outDir: String): Unit = {
-    val blocks = keepCanonical(dedupBlocks(normalizeBlocks(parsed))).persist()
+    val blocks = canonicalBlocks(parsed).persist()
     try {
       blocks.write.mode("append").partitionBy("chain_name")
         .parquet(s"$outDir/blocks")
@@ -254,17 +267,22 @@ object BlockIngest {
     * landed YET", not "reorged out". They land in `logs_quarantine`
     * instead — replay the quarantine through this sink once later batches
     * have delivered the parents (the append-only analog of a deferred FK
-    * check; same skip-and-log posture as corrupt messages). */
+    * check; same skip-and-log posture as corrupt messages).
+    *
+    * The parents are read once: one left join against their distinct keys
+    * flags each log `landed`, and both writes are filters of that one
+    * materialized result. */
   def writeBronzeLogs(parsedLogs: DataFrame, txs: DataFrame, outDir: String): Unit = {
     val parents = txs.select(
       col("chain_name"), col("block_number"), col("tx_hash").as("transaction_hash"))
-    val logs = dedupLogs(normalizeLogs(parsedLogs)).localCheckpoint()
-    logs
-      .join(parents, Seq("chain_name", "block_number", "transaction_hash"), "left_semi")
+      .distinct().withColumn("landed", lit(true))
+    val flagged = dedupLogs(normalizeLogs(parsedLogs))
+      .join(parents, Seq("chain_name", "block_number", "transaction_hash"), "left")
+      .localCheckpoint()
+    flagged.filter(col("landed").isNotNull).drop("landed")
       .write.mode("append").partitionBy("chain_name")
       .parquet(s"$outDir/logs")
-    val orphans = logs
-      .join(parents, Seq("chain_name", "block_number", "transaction_hash"), "left_anti")
+    val orphans = flagged.filter(col("landed").isNull).drop("landed")
     if (!orphans.isEmpty) {
       orphans.write.mode("append").partitionBy("chain_name")
         .parquet(s"$outDir/logs_quarantine")

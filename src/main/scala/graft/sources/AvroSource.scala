@@ -132,7 +132,10 @@ object AvroSource {
     * (missing → null). */
   def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val fields = schema.fields.map(f => (f.name, f.dataType)).toSeq
-    val rdd = spark.read.format("binaryFile").load(s"$path/part-*.avro")
+    // The directory plus a name filter, not a `part-*.avro` glob path: for
+    // a glob, Spark's sink-metadata probe logs a WARN with a stack trace.
+    val rdd = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "part-*.avro").load(path)
       .select(col("content")).rdd.flatMap { row =>
         val in = new SeekableByteArrayInput(row.getAs[Array[Byte]](0))
         val rd = new DataFileReader[GenericRecord](in,

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.util.SmallInput.distributed
 
@@ -210,6 +212,14 @@ class PlanSpec extends SparkSpec {
     val p = plan("q_join_broadcast")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2, s"expected 2 broadcast joins in:\n$p")
     assert(!p.contains("SortMergeJoin"), "dimension join degraded to sort-merge")
+  }
+
+  test("canonical blocks: one exchange, the keep-latest window's") {
+    val raw = spark.read.text(getClass.getResource("/blocks/blocks.jsonl").getPath)
+    val df = graft.ingest.BlockIngest.canonicalBlocks(graft.ingest.BlockIngest.parse(raw))
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size === 1, s"expected one exchange in:\n${df.queryExecution.executedPlan}")
   }
 
   test("global top-k plans as TakeOrderedAndProject, not a full sort") {

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -107,6 +109,58 @@ class BlockIngestSpec extends SparkSpec {
     assert(txs.select(col("tx_hash")).as[String].collect().sorted.toSeq ===
       Seq("0xtn1", "0xtn2"))
     assert(txs.filter(col("chain_name").isNull).count() === 2)
+  }
+
+  /** Tasks that ran while `body` ran, counted by a listener. */
+  private def tasksRun(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = n.incrementAndGet()
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; TestListenerBus.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("writeBronze: a 3-block write runs a few tasks at 200 shuffle partitions") {
+    val tmp = java.nio.file.Files.createTempDirectory("bronzeTasks")
+    val in = tmp.resolve("blocks.jsonl")
+    java.nio.file.Files.writeString(in, (1 to 3).map { n =>
+      s"""{"number":"$n","chain_name":"C$n","hash":"0xc$n","parent_hash":"0xc${n - 1}","timestamp":${1700000000 + n},"transactions":[{"hash":"0xct$n","block_number":"$n","from":"0xa"}],"uncles":[]}"""
+    }.mkString("\n"))
+    // Spark's default, which a library caller gets; the persisted blocks
+    // must be coalesced, not kept at one partition per shuffle partition
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    val tasks = try tasksRun {
+      BlockIngest.writeBronze(BlockIngest.parse(spark.read.text(in.toString)),
+        tmp.resolve("out").toString)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    assert(tasks <= 10, s"$tasks tasks for 3 blocks")
+    assert(spark.read.parquet(tmp.resolve("out/blocks").toString).count() === 3)
+    assert(spark.read.parquet(tmp.resolve("out/transactions").toString).count() === 3)
+  }
+
+  test("keepCanonical collapses exact duplicates: no dedupBlocks needed before it") {
+    import spark.implicits._
+    def block(n: Long, hash: String, ts: Long, txs: String*): String = {
+      val txJson = txs.map(t => s"""{"hash":"$t","block_number":"$n"}""").mkString(",")
+      s"""{"number":"$n","chain_name":"K","hash":"$hash","parent_hash":"0xp","timestamp":$ts,"transactions":[$txJson],"uncles":[]}"""
+    }
+    val raw = Seq(
+      block(1, "0xa1", 10, "0xt1"), block(1, "0xa1", 10, "0xt1"), // exact duplicate
+      block(2, "0xa2", 20, "0xt2"), block(2, "0xb2", 20, "0xt3"), // timestamp tie
+      block(2, "0xb2", 20, "0xt3"),                               // tie, duplicated
+      block(3, "0xa3", 30), block(3, "0xb3", 29, "0xt4"),          // reorg, later wins
+      block(3, "0xa3", 30)).toDF("value")
+    val blocks = BlockIngest.normalizeBlocks(BlockIngest.parse(raw))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val canon = BlockIngest.keepCanonical(blocks)
+    assert(rows(canon) === rows(BlockIngest.keepCanonical(BlockIngest.dedupBlocks(blocks))))
+    assert(canon.select("hash").as[String].collect().sorted.toSeq === Seq("0xa1", "0xa3", "0xb2"))
   }
 
   test("backfillRange: parallel fan-out over the block range (A6 upgrade)") {
