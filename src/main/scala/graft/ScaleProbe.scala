@@ -1,20 +1,122 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.SmallInput.distributed
+import graft.operators.{Ann, Cluster, Components, Dedup, Freq, Graph}
+import graft.queries.{Aggs, Sim, Text}
+import graft.streaming.StreamOps
+import graft.util.{Frames, SmallInput}
 
-/** Scaling probe (not part of the driver contract): multiplies the sf0.1
-  * fact table N× via union to measure how the flagship aggregation and a
-  * fact⋈fact join scale with input volume on local[32]. Near-linear rows/s
-  * across N is the evidence the plan shape (scan → partial agg → single
-  * exchange → final agg) survives scale-up; superlinear degradation would
-  * indicate a shuffle or spill problem to fix BEFORE 100 TB. */
+/** Growth probe (not part of the driver contract): how the at-scale tiers
+  * grow with their input. Every measurement is one [[Entry]] of [[table]]:
+  * an input builder at x (a multiplier of the fixture, or an iteration
+  * count, or a key-domain size), one timed operator call, and optionally
+  * an exact comparator. One loop runs the selected entries inside one
+  * [[graft.util.SmallInput.distributed]] scope, so every operator takes
+  * the distributed chain that runs at 100 TB, never a driver arm.
+  *
+  * Inputs grow without changing the problem's shape: fact tables are
+  * unioned N×; documents are replicated with disjoint vocabularies (every
+  * token prefixed with the replica tag) and remapped ids, so replicas
+  * never near-dup each other; embeddings get per-(replica, dimension)
+  * sign flips, so each replica is a fresh set of directions; graphs get
+  * disjoint id spaces. The true output then grows linearly, and measured
+  * growth is the plan's, not the problem's.
+  *
+  * Run: `SPARK_GRAFT_SF_DIR=<sf dir> scripts/run.sh graft.ScaleProbe
+  * [entry|section ...]` (no argument runs the whole table; a section is
+  * the part of an entry name before the dot). One JSON line per point:
+  * {"probe", "x", "inputs" (rows of each materialized input), "sec", the
+  * call's counts, and "exact", "exact_sec", "recall" where a comparator
+  * ran}; then one line per entry: {"probe", "xs", "secs",
+  * "growth_exponent"}, the least-squares slope of log(sec) on log(x). An
+  * exponent near 1 is linear growth, near 0 is fixed per-job cost, near 2
+  * is a quadratic stage. */
 object ScaleProbe {
+
+  /** What one call reports, in print order. */
+  type Counts = Seq[(String, Long)]
+
+  /** One growth measurement. `build(x)` gives the call's inputs; the loop
+    * materializes each once, outside the clock, and times `run(inputs, x)`
+    * at every x of `xs`. `exact`, where given, is run on the same inputs
+    * at every x up to `exactUpTo`, timed apart: it returns the exact value
+    * of `run`'s first count, and `recall` is that count over it. */
+  final case class Entry(
+      name: String,
+      xs: Seq[Int],
+      build: Int => Seq[DataFrame],
+      run: (Seq[DataFrame], Int) => Counts,
+      exact: Option[Seq[DataFrame] => Long] = None,
+      exactUpTo: Int = Int.MaxValue)
+
+  /** The section an entry belongs to: its name up to the first dot. */
+  def section(name: String): String = name.takeWhile(_ != '.')
+
+  /** The entries `names` select, in table order: each name is an entry or
+    * a section. No name selects the whole table. */
+  def select(table: Seq[Entry], names: Seq[String]): Seq[Entry] = {
+    val unknown = names.filterNot(n => table.exists(e => e.name == n || section(e.name) == n))
+    require(unknown.isEmpty, s"unknown probe entry ${unknown.mkString(", ")}; " +
+      s"known: ${table.map(_.name).mkString(", ")}")
+    if (names.isEmpty) table
+    else table.filter(e => names.exists(n => e.name == n || section(e.name) == n))
+  }
+
+  /** Least-squares slope of log(sec) on log(x): sec ∝ x^k gives k. NaN
+    * when fewer than two distinct x were measured. */
+  def growthExponent(points: Seq[(Double, Double)]): Double = {
+    val ls = points.map { case (x, s) => (math.log(x), math.log(s)) }
+    val (mx, my) = (ls.map(_._1).sum / ls.size, ls.map(_._2).sum / ls.size)
+    val sxx = ls.map { case (a, _) => (a - mx) * (a - mx) }.sum
+    if (sxx == 0) Double.NaN
+    else ls.map { case (a, b) => (a - mx) * (b - my) }.sum / sxx
+  }
+
+  private def json(fields: (String, Any)*): String = {
+    def value(v: Any): String = v match {
+      case d: Double => if (d.isNaN || d.isInfinite) "null" else f"$d%.3f"
+      case s: String => "\"" + s + "\""
+      case xs: Seq[_] => xs.map(value).mkString("[", ",", "]")
+      case other => other.toString
+    }
+    fields.map { case (k, v) => s""""$k":${value(v)}""" }.mkString("{", ",", "}")
+  }
+
+  private def seconds[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Run `entries` and print their points and summaries. Each entry is
+    * run once untimed at its first x (JIT, codegen), then timed at every
+    * x; a point's inputs are released after it. */
+  private def measure(entries: Seq[Entry]): Unit = SmallInput.distributed {
+    for (e <- entries) {
+      val points = e.xs.zipWithIndex.map { case (x, i) =>
+        val inputs = e.build(x).map(_.localCheckpoint())
+        val rows = inputs.map(_.count())
+        if (i == 0) e.run(inputs, x)
+        val (counts, sec) = seconds(e.run(inputs, x))
+        val exact = e.exact.filter(_ => x <= e.exactUpTo).map(f => seconds(f(inputs)))
+        inputs.foreach(Frames.releaseCheckpoint)
+        val compared = exact.toSeq.flatMap { case (n, s) =>
+          Seq("exact" -> n, "exact_sec" -> s,
+            "recall" -> (if (n > 0) counts.head._2.toDouble / n else Double.NaN))
+        }
+        println(json(Seq("probe" -> e.name, "x" -> x, "inputs" -> rows, "sec" -> sec) ++
+          counts ++ compared: _*))
+        (x.toDouble, sec)
+      }
+      println(json("probe" -> e.name, "xs" -> e.xs, "secs" -> points.map(_._2),
+        "growth_exponent" -> growthExponent(points)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mults = args.headOption.map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 4, 16))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -22,1494 +124,277 @@ object ScaleProbe {
     GraftSession.configs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    try measure(select(table(spark, sfDir), args.toSeq))
+    finally spark.stop()
+  }
 
-    // SPARK_GRAFT_PROBE=<name> runs one probe section (fast iteration on a
-    // single scale question); unset runs the full battery.
-    val onlyProbe = sys.env.get("SPARK_GRAFT_PROBE")
-    def want(name: String): Boolean = onlyProbe.forall(_ == name)
+  /** The growth table over the fixture at `sfDir`. Building it reads
+    * nothing: every source is read when an entry's builder first runs. */
+  def table(spark: SparkSession, sfDir: String): Seq[Entry] = {
+    def read(t: String) = spark.read.parquet(s"$sfDir/$t.parquet")
+    lazy val lineitem = read("lineitem")
+    lazy val docs = read("documents").select(col("doc_id"), col("text"))
+    lazy val embs = read("embeddings")
+    lazy val slice = Graph.jaccardSliceEdges(spark, sfDir)
 
-    val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    // warmup
-    li0.groupBy($"l_returnflag").count().collect()
-
-    if (want("agg_join")) {
-      val results = mults.map { m =>
-        val li = Seq.fill(m)(li0).reduce(_ unionAll _)
-        val n = li.count()
-        val t0 = System.nanoTime()
-        // flagship hash agg
-        li.groupBy($"l_returnflag", $"l_linestatus")
-          .agg(sum($"l_quantity".cast("decimal(18,4)")).as("q"), count(lit(1)).as("c"))
-          .collect()
-        val tAgg = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        // fact⋈fact shuffle join + agg
-        li.join(orders, $"l_orderkey" === $"o_orderkey")
-          .groupBy($"o_orderpriority").agg(count(lit(1))).collect()
-        val tJoin = (System.nanoTime() - t1) / 1e9
-        (m, n, tAgg, n / tAgg / 1e6, tJoin)
-      }
-      results.foreach { case (m, n, tAgg, mrps, tJoin) =>
-        println(f"""{"probe":"agg_join","mult":$m,"rows":$n,"agg_sec":$tAgg%.2f,"agg_Mrows_per_sec":$mrps%.1f,"join_sec":$tJoin%.2f}""")
-      }
+    // ---- shared builders
+    def union(m: Int)(replica: Int => DataFrame): DataFrame =
+      (0 until m).map(replica).reduce(_ unionAll _)
+    /** `m` copies of `df`, the `ids` columns of copy i shifted by i·step. */
+    def replicas(m: Int, df: DataFrame, step: Long, ids: String*): DataFrame =
+      union(m)(i => df.select(df.columns.toSeq.map(c =>
+        if (ids.contains(c)) (col(c) + lit(i * step)).as(c) else col(c)): _*))
+    /** Edges plus their reversals. */
+    def symmetric(e: DataFrame): DataFrame = e.unionAll(e.select(e.columns.toSeq.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*))
+    def docReplicas(m: Int) = union(m)(i => docs.select(
+      (col("doc_id") + lit(i * 10000000L)).as("doc_id"),
+      concat(lit(s"r$i"), regexp_replace(col("text"), " ", s" r$i")).as("text")))
+    // the flip bit is a murmur hash of (replica, dim): a linear form mod 2
+    // would collapse to (d + i) parity and make same-parity replicas exact
+    // duplicates (quadratic true-pair growth)
+    def flipped(i: Int): Column = transform(col("embedding"), (x, d) =>
+      (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f).otherwise(-1.0f)).cast("float"))
+    def embReplicas(m: Int, extra: Int => Seq[Column] = _ => Nil) = union(m)(i =>
+      embs.select(Seq((col("vec_id") + lit(i * 10000000L)).as("vec_id")) ++ extra(i) ++
+        Seq(flipped(i).as("embedding")): _*))
+    def annCorpus(m: Int) =
+      embReplicas(m).select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
+    /** One synthetic hub of degree m·500 on (a, b): the Zipf apex. */
+    def hub(m: Int) = spark.range(m * 500L)
+      .select((col("id") + 500000000L).as("a"), lit(900000000L).as("b"))
+    def sliceHub(m: Int) = slice.unionAll(hub(m))
+    /** The part↔supplier graph, replicas 1e9 apart, both directions. */
+    def partSupp(m: Int, weighted: Boolean) = {
+      val keys = Seq((col("l_partkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+      val pairs =
+        if (weighted) lineitem.groupBy(keys: _*).agg(count(lit(1)).as("w"))
+        else lineitem.select(keys: _*).distinct()
+      symmetric(replicas(m, pairs, 1000000000L, "src", "dst"))
     }
-
-    // ---- round-2 heavyweights: time-vs-input growth on N×-unioned inputs.
-    // Documents are replicated with DISJOINT vocabularies (every token
-    // prefixed with the replica tag) and remapped doc_ids, so corpus
-    // density stays constant — replicas never near-dup each other and the
-    // semantic output grows linearly. That makes measured growth the
-    // PLAN's, not the problem's (naive replication would add N exact
-    // copies of every doc and the true pair count itself would be
-    // quadratic in N).
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select($"doc_id", $"text")
-    def replicateDocs(m: Int) =
-      (0 until m).map { i =>
-        docs0.select(
-          ($"doc_id" + lit(i.toLong * 10000000L)).as("doc_id"),
-          concat(lit(s"r$i"), regexp_replace($"text", " ", s" r$i")).as("text"))
-      }.reduce(_ unionAll _)
-    val docMults = Seq(1, 4, 16)
-    if (want("docs")) docMults.foreach { m =>
-      val docs = replicateDocs(m)
-      val nDocs = docs.count()
-      val t0 = System.nanoTime()
-      val nearDups = graft.operators.Dedup.shingleNearDups(docs, 0.2).count()
-      val tLsh = (System.nanoTime() - t0) / 1e9
-      val bench = docs0.filter($"doc_id" < 50)
-        .select($"doc_id", $"text") // UN-prefixed benchmark: decontamination
-      val train = docs // must still do its full index+join work
-      val t1 = System.nanoTime()
-      val contaminated = graft.operators.Dedup.contamination(train, bench, 2).count()
-      val tDecon = (System.nanoTime() - t1) / 1e9
-      println(f"""{"probe":"docs","mult":$m,"docs":$nDocs,"shingle_lsh_sec":$tLsh%.2f,"near_dups":$nearDups,"decontaminate_sec":$tDecon%.2f,"contaminated":$contaminated}""")
-    }
-
-    // round-10: exact-substring dedup on N×-replicated docs (disjoint
-    // vocabularies, so replicas never share a window across replicas and
-    // the duplicated-window structure per replica is identical — output
-    // grows exactly linearly). The probe question: does the window-hash
-    // row_number shuffle (the only corpus-wide stage) stay corpus-linear,
-    // or does the span-explode/anti-join tail grow superlinearly?
-    if (want("substring")) docMults.foreach { m =>
-      val docs = replicateDocs(m)
-      val n = docs.count()
-      val t0 = System.nanoTime()
-      val out = graft.operators.Dedup.substringDedup(docs, w = 10)
-        .agg(sum($"n_toks"), sum($"n_kept")).collect()(0)
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"substring","mult":$m,"docs":$n,"sec":$t%.2f,"toks":${out.getLong(0)},"kept":${out.getLong(1)}}""")
-    }
-
-    // percentiles: the q_agg_percentiles single-sort-window shape on
-    // N×-unioned lineitem (values unchanged — quantiles of a replicated
-    // multiset are the originals; the WORK is the per-group sort).
-    if (want("percentiles")) Seq(1, 8, 64).foreach { m =>
-      val li = Seq.fill(m)(li0).reduce(_ unionAll _)
-      val n = li.count()
-      val t0 = System.nanoTime()
-      // the probe measures the DISTRIBUTED rank chain
-      distributed(graft.queries.Aggs.percentilesOf(li, Seq(0.25, 0.5, 0.75))).collect()
-      val tPct = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"percentiles","mult":$m,"rows":$n,"sec":$tPct%.2f}""")
-    }
-
-    // round-4: sequence packing — the distributed-cumsum shape on
-    // N×-replicated docs (remapped ids). Near-linear sec/doc across N is
-    // the evidence the slice-offset prefix sum (not a single global
-    // window) carries the packing at scale.
-    if (want("pack")) Seq(1, 8, 64).foreach { m =>
-      val docs = (0 until m).map { i =>
-        docs0.select(($"doc_id" + lit(i.toLong * 10000000L)).as("doc_id"), $"text")
-      }.reduce(_ unionAll _)
-      val n = docs.count()
-      val t0 = System.nanoTime()
-      graft.operators.Pack.packSequences(docs, 2048L)
-        .agg(max($"seq_id"), sum($"n_tokens")).collect()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"pack","mult":$m,"docs":$n,"sec":$t%.2f}""")
-    }
-
-    // round-4: connected components, DISTRIBUTED path forced (cap=0), on
-    // generated 1000-node chain-cycles (m×100k edges). Diameter-1000
-    // chains are the pointer-jumping stress: plain propagation would need
-    // ~1000 rounds; O(log) rounds + near-linear sec/edge is the scale
-    // evidence. Component count = nodes/1000 checks correctness.
-    if (want("components")) Seq(1, 4, 16).foreach { m =>
-      val nEdges = m * 100000L
-      val edges = spark.range(0, nEdges)
-        .select($"id".as("src"),
-          when($"id" % 1000 === 999, $"id" - 999).otherwise($"id" + 1).as("dst"))
-      val t0 = System.nanoTime()
-      val comps = distributed(graft.operators.Components
-        .connectedComponents(edges, maxIter = 30))
-      val nComp = comps.agg(countDistinct($"component")).collect()(0).getLong(0)
-      val t = (System.nanoTime() - t0) / 1e9
-      require(nComp == nEdges / 1000, s"expected ${nEdges / 1000} components, got $nComp")
-      println(f"""{"probe":"components","mult":$m,"edges":$nEdges,"components":$nComp,"sec":$t%.2f}""")
-    }
-
-    // round-4: dedup-on-arrival — a FIXED 5k-doc batch checked against an
-    // N×-growing indexed corpus. The index is built (and checkpointed)
-    // outside the timed region: the measurement is the recurring per-batch
-    // cost, which must grow far slower than the corpus (batch bands probe
-    // the index by equi-join; corpus is never re-signed).
-    if (want("incremental_dedup")) Seq(1, 4, 16).foreach { m =>
-      val corpus = replicateDocs(m).localCheckpoint()
-      val nCorpus = corpus.count()
-      val index = graft.operators.Dedup
-        .lshBuckets(graft.operators.Dedup.minhashSignatures(corpus))
-        .localCheckpoint()
-      // offset far above any replica's (i × 10M): corpus ∪ batch ids must
-      // be disjoint or verifyJaccard's union cross-matches collided ids
-      val batch = docs0.select(($"doc_id" + 900000000L).as("doc_id"), $"text")
-      val nBatch = batch.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup
-        .incrementalNearDups(corpus, index, batch, 0.5).count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"incremental_dedup","mult":$m,"corpus_docs":$nCorpus,"batch_docs":$nBatch,"pairs":$pairs,"sec":$t%.2f}""")
-    }
-
-    // round-4: bloom-prefiltered semi join on N×-unioned lineitem — the
-    // scan-stage prune must keep sec/row flat as the fact side grows (the
-    // bloom build cost is dim-sized and constant across N).
-    if (want("bloom_semijoin")) Seq(1, 8, 64).foreach { m =>
-      val li = Seq.fill(m)(li0).reduce(_ unionAll _)
-      val dim = orders.filter($"o_orderpriority" === "1-URGENT").select($"o_orderkey")
-      val n = li.count()
-      val t0 = System.nanoTime()
-      graft.operators.Bloom.semiJoin(li, dim, "l_orderkey", "o_orderkey")
-        .agg(count(lit(1))).collect()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"bloom_semijoin","mult":$m,"rows":$n,"sec":$t%.2f}""")
-    }
-
-    // round-6: dedup-on-arrival across a STREAM of 12 micro-batches — the
-    // round-4 probe above fixes the batch and grows the corpus 1/4/16×;
-    // this one drives the actual foreachBatch sink end-to-end (in-batch
-    // transitive dedup, cross-batch index probe, idempotent partitioned
-    // writes) so the per-batch wall cost is measured against an index that
-    // GROWS batch by batch, exactly as a production ingest sees it. Each
-    // batch carries a disjoint vocabulary (per-batch token prefix) and
-    // remapped ids, so kept-docs ≈ batch size and the index grows
-    // linearly; flat per-batch cost across 12 batches is the evidence the
-    // arrival path's recurring cost is batch-sized, not corpus-sized.
-    if (want("arrival_stream")) {
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sq = spark.sqlContext
-      val tmp = java.nio.file.Files.createTempDirectory("arrival_probe").toString
-      val in = MemoryStream[(Long, String)]
-      val q = graft.streaming.StreamOps.dedupOnArrival(
-        in.toDF().toDF("doc_id", "text"),
-        s"$tmp/corpus", s"$tmp/index", s"$tmp/ckpt", threshold = 0.5)
-      val batch0 = docs0.limit(2000)
-        .select($"doc_id", $"text").as[(Long, String)].collect()
-      try {
-        (0 until 12).foreach { bIdx =>
-          val data = batch0.map { case (id, text) =>
-            (id + bIdx.toLong * 10000000L,
-              s"b$bIdx" + text.replace(" ", s" b$bIdx"))
-          }
-          val t0 = System.nanoTime()
-          in.addData(data.toIndexedSeq)
-          q.processAllAvailable()
-          val t = (System.nanoTime() - t0) / 1e9
-          val corpusDocs = spark.read.parquet(s"$tmp/corpus").count()
-          println(f"""{"probe":"arrival_stream","batch":$bIdx,"batch_docs":${data.length},"corpus_docs":$corpusDocs,"sec":$t%.2f}""")
-        }
-      } finally q.stop()
-    }
-
-    // round-14: ANN deletion under load — tombstone a growing fraction of
-    // the incremental store and measure what a reader pays BEFORE the
-    // compaction heals (anti-joined corpus, dead-end edges wasting
-    // frontier slots) and what survives AFTER (physical purge +
-    // affected-node re-link). recall = hits against exact top-3 over the
-    // SURVIVORS; the question is whether heavy deletion degrades the
-    // graph gracefully (pre-compact ≥ floor) and heals fully (post ≈
-    // pre-delete).
-    if (want("ann_delete")) {
-      val e = graft.catalog.Tables.embeddings(spark, sfDir)
-      val vecs = e.filter($"vec_id" >= 5)
-        .select($"vec_id".as("cand_id"), $"embedding".as("cv")).localCheckpoint()
-      val probes = e.filter($"vec_id" < 5)
-        .select($"vec_id".as("probe_id"), $"embedding".as("pv"))
-      Seq(10, 3).foreach { everyNth => // 10% and 33% deletion
-        val tmp = java.nio.file.Files.createTempDirectory(s"anndel_$everyNth").toString
-        val (vd, ed) = (s"$tmp/vecs", s"$tmp/edges")
-        graft.streaming.StreamOps.annIngestBatch(vecs, 0L, vd, ed, 12)
-        val dead = vecs.filter($"cand_id" % everyNth === 0).select($"cand_id")
-        val nDead = dead.count()
-        graft.streaming.StreamOps.annDeleteBatch(dead, 0L, vd)
-        val survivors = vecs.join(dead, Seq("cand_id"), "left_anti").localCheckpoint()
-        // the exact oracle runs OUTSIDE the clocks: pre_sec/post_sec must
-        // measure the store's read path, not the brute-force recall check
-        val exact = graft.operators.Ann.bruteForceTopK(
-            e.filter($"vec_id" < 5),
-            survivors.select($"cand_id".as("vec_id"), $"cv".as("embedding")), 3)
-          .select($"probe_id", $"cand_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        def searchHits(vDir: String, eDir: String): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val got = graft.streaming.StreamOps
-            .annIncrementalSearch(probes, vDir, eDir, k = 3)
-            .select($"probe_id", $"cand_id").collect()
-          val t = (System.nanoTime() - t0) / 1e9
-          (got.count(r => exact.contains((r.getLong(0), r.getLong(1)))).toLong, t)
-        }
-        val (hitPre, tPre) = searchHits(vd, ed)
-        graft.streaming.StreamOps.annCompactStore(spark, vd, ed,
-          s"$tmp/vecs_c", s"$tmp/edges_c")
-        val (hitPost, tPost) = searchHits(s"$tmp/vecs_c", s"$tmp/edges_c")
-        val nEx = exact.size
-        println(f"""{"probe":"ann_delete","deleted":$nDead,"pre_hits":$hitPre,"post_hits":$hitPost,"of":$nEx,"pre_sec":$tPre%.2f,"post_sec":$tPost%.2f}""")
-        graft.util.Frames.releaseCheckpoint(survivors)
+    /** The q_graph_harmonic graph (symmetrized slice), replicas 1e8 apart. */
+    def symSlice(m: Int) =
+      replicas(m, Graph.symmetrizedSliceEdges(spark, sfDir), 100000000L, "src", "dst")
+    def dayValues(m: Int) = union(m)(i => lineitem.select(
+      date_add(col("l_shipdate").cast("date"), i * 10000).as("day"),
+      floor(col("l_extendedprice") * 100).cast("long").as("v")))
+    def marginCandidates(m: Int) = {
+      val n = 100000L * m
+      def side(swap: Boolean) = {
+        val other = pmod(hash(col("id"), col("j"), lit(if (swap) 7 else 3)), lit(n)).cast("long")
+        spark.range(n).select(col("id"), explode(sequence(lit(0), lit(7))).as("j")).select(
+          (if (swap) other else col("id")).as("id_x"), (if (swap) col("id") else other).as("id_y"))
       }
-      graft.util.Frames.releaseCheckpoint(vecs)
-    }
-
-    // round-14: incremental connected components — per-batch cost as the
-    // STORED map grows. Each batch carries the same number of fresh edges
-    // (fixed batch-sized work by the label-contraction design), but the
-    // accumulated map grows linearly, and every batch's edges MERGE a new
-    // chain into the giant component rooted at node 0 (worst case: each
-    // batch triggers the affected-sized relabel path against an
-    // ever-larger component — relabel rows grow, the map SCAN is the
-    // term to watch). Per-batch sec should grow gently with the
-    // map-scan term, never with batch count × map size.
-    if (want("components_arrival")) {
-      // arm "grow": batch b's 20k-edge chain bridges to node 0 — new
-      // nodes always join the EXISTING minimum, so the relabel path never
-      // fires and the per-batch cost isolates the map-scan term (should
-      // stay flat-ish while the map grows 12×).
-      // arm "relabel": chains arrive with DESCENDING minima, each bridged
-      // to the previous chain — every batch renames the ENTIRE stored
-      // component (the worst case: relabel rows grow linearly, so batch
-      // sec may grow linearly with map size but never superlinearly).
-      Seq("grow", "relabel").foreach { arm =>
-        val tmp = java.nio.file.Files.createTempDirectory(s"cc_probe_$arm").toString
-        val (mapDir, edgeDir) = (s"$tmp/map", s"$tmp/edges")
-        (0 until 12).foreach { b =>
-          val base = if (arm == "grow") b.toLong * 1000000L + 1L
-                     else (12L - b) * 1000000L
-          val chain = spark.range(20000)
-            .select(($"id" + base).as("src"), ($"id" + base + 1).as("dst"))
-          val bridge =
-            if (arm == "grow")
-              spark.range(1).select(lit(0L).as("src"), lit(base).as("dst"))
-            else if (b == 0) // first chain stands alone (no node 0 — the
-              // descending minima must stay the component roots)
-              spark.range(1).select(lit(base).as("src"), lit(base + 1).as("dst"))
-            else spark.range(1).select(lit(base).as("src"),
-              lit((12L - b + 1L) * 1000000L).as("dst"))
-          val edges = chain.unionAll(bridge)
-          val t0 = System.nanoTime()
-          graft.streaming.StreamOps.componentsBatch(edges, b.toLong, mapDir, edgeDir)
-          val t = (System.nanoTime() - t0) / 1e9
-          val mapRows = spark.read.parquet(mapDir).count()
-          println(f"""{"probe":"components_arrival","arm":"$arm","batch":$b,"batch_edges":20001,"map_rows":$mapRows,"sec":$t%.2f}""")
-        }
-        // invariant: one component per arm construction (everything merged)
-        val comps = graft.streaming.StreamOps.componentsStoreRead(spark, mapDir)
-          .select($"component").distinct().count()
-        println(s"""{"probe":"components_arrival_check","arm":"$arm","components":$comps}""")
-      }
-    }
-
-    // round-6: SRP-LSH embedding near-dup on an N×-grown corpus. Replicas
-    // get per-(replica, dim) deterministic sign flips, so each replica is
-    // a fresh pseudo-random direction — bucket DENSITY stays constant and
-    // candidate count grows linearly with the corpus (naive replication
-    // would co-bucket every copy and grow candidates quadratically).
-    // Near-linear sec/vector across N is the evidence the (band, bucket)
-    // equi-join carries embedding near-dup at scale.
-    val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select($"vec_id", $"embedding")
-    if (want("srp_neardup")) Seq(1, 4, 16).foreach { m =>
-      val corpus = (0 until m).map { i =>
-        // murmur hash of (replica, dim) for the flip bit — a linear form
-        // mod 2 would collapse to (d + i) parity and make same-parity
-        // replicas EXACT duplicates (quadratic true-pair growth)
-        emb0.select(($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      val n = corpus.count()
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Dedup.srpNearDups(corpus, threshold = 0.9).count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"srp_neardup","mult":$m,"vectors":$n,"pairs":$pairs,"sec":$t%.2f}""")
-    }
-
-    // round-8: interval-overlap join WITHOUT an equi key. The naive theta
-    // form is |a|·|b| nested-loop comparisons; IntervalJoin's bucket
-    // decomposition is an equi-join on time buckets. Intervals are derived
-    // from events replicated with time-SHIFTED replicas (each replica
-    // offset by its own span), so interval density per bucket stays
-    // constant and true pair count grows linearly — near-linear sec across
-    // N is the bucket path's scale evidence. The naive form runs at mult 1
-    // only, for the contrast ratio.
-    if (want("interval_join")) {
-      val ev0 = graft.catalog.Tables.events(spark, sfDir)
-        .select($"event_id", $"ts", $"event_type")
-      val spanSec = {
-        // NTZ has no direct long cast — hop through TimestampType (UTC)
-        val r = ev0.agg((max($"ts").cast("timestamp").cast("long")
-          - min($"ts").cast("timestamp").cast("long")).as("s")).collect()(0)
-        r.getLong(0) + 700L
-      }
-      def iv(df: org.apache.spark.sql.DataFrame, t: String, p: String) =
-        df.filter($"event_type" === t).select(
-          $"event_id".as(s"${p}_id"), $"ts".as(s"${p}_s"),
-          ($"ts" + expr("INTERVAL 10 MINUTES")).as(s"${p}_e"))
-      val tn0 = System.nanoTime()
-      val naivePairs = iv(ev0, "error", "a").crossJoin(iv(ev0, "purchase", "b"))
-        .filter($"a_s" <= $"b_e" && $"b_s" <= $"a_e").count()
-      val tNaive = (System.nanoTime() - tn0) / 1e9
-      Seq(1, 4, 16).foreach { m =>
-        val ev = (0 until m).map { i =>
-          ev0.select(($"event_id" + lit(i.toLong * 10000000L)).as("event_id"),
-            ($"ts" + expr(s"INTERVAL ${i * spanSec} SECONDS")).as("ts"), $"event_type")
-        }.reduce(_ unionAll _)
-        val t0 = System.nanoTime()
-        val pairs = graft.operators.IntervalJoin
-          .overlap(iv(ev, "error", "a"), iv(ev, "purchase", "b"),
-            "a_s", "a_e", "b_s", "b_e", bucketSeconds = 600L).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"interval_join","mult":$m,"pairs":$pairs,"sec":$t%.2f,"naive_mult1_sec":$tNaive%.2f,"naive_mult1_pairs":$naivePairs}""")
-      }
-    }
-
-    // round-8: kmeans codebook build — Lloyd iterations over the CACHED
-    // assignment input (Ann.kmeans pins the corpus before seeding and
-    // unpersists after). With the cache, each added iteration costs only
-    // its compute (narrow assign + per-dim mean shuffle); without it,
-    // every iteration is a full source re-scan — at 100 TB that multiplies
-    // the dominant IO term by the iteration count. Flat marginal sec per
-    // added iteration is the evidence the cache carries the loop.
-    if (want("kmeans_iters")) {
-      graft.operators.Ann.kmeans(emb0, k = 8, iters = 1) // warm (JIT + parquet footer)
-      val base = {
-        val t0 = System.nanoTime()
-        graft.operators.Ann.kmeans(emb0, k = 8, iters = 1)
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq(3, 6).foreach { iters =>
-        val t0 = System.nanoTime()
-        graft.operators.Ann.kmeans(emb0, k = 8, iters = iters)
-        val t = (System.nanoTime() - t0) / 1e9
-        val marginal = (t - base) / (iters - 1)
-        println(f"""{"probe":"kmeans_iters","iters":$iters,"sec":$t%.2f,"first_iter_sec":$base%.2f,"marginal_iter_sec":$marginal%.2f}""")
-      }
-    }
-
-    // round-8: integer PageRank — the corpus graph replicated N× with
-    // DISJOINT node id spaces (replica offsets), so edges grow linearly
-    // while per-copy structure (and the exact per-copy ranks) stay fixed.
-    // Near-linear sec across N is the Pregel shape's scale evidence;
-    // flat marginal sec per ADDED iteration is the evidence the
-    // once-materialized degree-annotated edge frame (not a per-round
-    // rebuild) carries the loop, mirroring the kmeans_iters probe.
-    if (want("pagerank")) {
-      val pairs0 = li0
-        .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .distinct().localCheckpoint()
-      def graphOf(m: Int) = {
-        val oneWay = (0 until m).map { i =>
-          pairs0.select(($"src" + lit(i.toLong * 1000000000L)).as("src"),
-            ($"dst" + lit(i.toLong * 1000000000L)).as("dst"))
-        }.reduce(_ unionAll _)
-        oneWay.union(oneWay.select($"dst".as("src"), $"src".as("dst")))
-      }
-      distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val edges = graphOf(m)
-        val n = edges.count()
-        val t0 = System.nanoTime()
-        distributed(graft.operators.Graph.pagerank(edges, 5))
-          .agg(sum($"rank")).collect()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"pagerank","mult":$m,"edges":$n,"sec":$t%.2f}""")
-      }
-      val base = {
-        val t0 = System.nanoTime()
-        distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq(3, 6).foreach { iters =>
-        val t0 = System.nanoTime()
-        distributed(graft.operators.Graph.pagerank(graphOf(1), iters)).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        val marginal = (t - base) / (iters - 1)
-        println(f"""{"probe":"pagerank_iters","iters":$iters,"sec":$t%.2f,"first_iter_sec":$base%.2f,"marginal_iter_sec":$marginal%.2f}""")
-      }
-    }
-
-    // round-10: the pagerank broadcast-ceiling fallback. Same generator as
-    // the pagerank probe, at up to 64× edges: both rank-distribution
-    // strategies (broadcast vs shuffle-join) on identical graphs. The
-    // question is the PRICE of the fallback a billions-of-nodes cluster
-    // must take when ranks outgrow the broadcast budget — near-linear
-    // growth for both paths plus a bounded broadcast/shuffle gap is the
-    // evidence the flagged path is deployable, not a cliff.
-    if (want("pagerank_fallback")) {
-      val pairs0 = li0
-        .select(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .distinct().localCheckpoint()
-      def graphOf(m: Int) = {
-        val oneWay = (0 until m).map { i =>
-          pairs0.select(($"src" + lit(i.toLong * 1000000000L)).as("src"),
-            ($"dst" + lit(i.toLong * 1000000000L)).as("dst"))
-        }.reduce(_ unionAll _)
-        oneWay.union(oneWay.select($"dst".as("src"), $"src".as("dst")))
-      }
-      distributed(graft.operators.Graph.pagerank(graphOf(1), 1)).count() // warm
-      Seq(1, 16, 64).foreach { m =>
-        // NOT checkpointed here: pagerank persists (and releases) its own
-        // degree-annotated copy; pinning a second 75M-row copy in the
-        // probe harness is what OOM'd the 8 GB heap at mult 64
-        val edges = graphOf(m)
-        val n = edges.count()
-        val times = Seq(true, false).map { bc =>
-          val t0 = System.nanoTime()
-          val mass = distributed(graft.operators.Graph.pagerank(edges, 3, broadcastRanks = bc))
-            .agg(sum($"rank")).collect()(0).getLong(0)
-          ((System.nanoTime() - t0) / 1e9, mass)
-        }
-        assert(times(0)._2 == times(1)._2,
-          s"broadcast and shuffle paths must conserve the same mass at mult=$m")
-        println(f"""{"probe":"pagerank_fallback","mult":$m,"edges":$n,"broadcast_sec":${times(0)._1}%.2f,"shuffle_sec":${times(1)._1}%.2f}""")
-      }
-    }
-
-    // round-14: the weighted graph tier under replication + hub skew.
-    // (a) pagerankWeighted on the weighted part↔supplier graph replicated
-    //     m× with disjoint id spaces — near-linear sec is the evidence the
-    //     edge-side (rank·w) div wout term kept the Pregel shape (same
-    //     bound as the unweighted probe; the broadcast state merely
-    //     widened by one column).
-    // (b) ssspWeighted with ONE synthetic hub of degree m·500 placed AT
-    //     the source (the worst case: the hub's whole edge set relaxes in
-    //     round 1): near-linear sec across m is the evidence frontier
-    //     relaxation is O(edges touched) — the dst-keyed min aggregate
-    //     partial-aggregates the hub's candidates map-side, so a
-    //     celebrity node costs its edge count, never C(deg, 2).
-    if (want("weighted_graph")) {
-      val pairs0 = li0
-        .groupBy(($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-        .agg(count(lit(1)).as("w")).localCheckpoint()
-      def graphOf(m: Int) = {
-        val oneWay = (0 until m).map { i =>
-          pairs0.select(($"src" + lit(i.toLong * 1000000000L)).as("src"),
-            ($"dst" + lit(i.toLong * 1000000000L)).as("dst"), $"w")
-        }.reduce(_ unionAll _)
-        oneWay.unionAll(oneWay.select($"dst".as("src"), $"src".as("dst"), $"w"))
-      }
-      distributed(graft.operators.Graph.pagerankWeighted(graphOf(1), 1)).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val edges = graphOf(m)
-        val n = edges.count()
-        val t0 = System.nanoTime()
-        distributed(graft.operators.Graph.pagerankWeighted(edges, 5))
-          .agg(sum($"rank")).collect()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"weighted_pagerank","mult":$m,"edges":$n,"sec":$t%.2f}""")
-      }
-      val hubId = 999999999999L
-      Seq(1, 4, 16).foreach { m =>
-        val base = graphOf(m)
-        val hubDeg = m * 500
-        val spokes = spark.range(hubDeg)
-          .select(lit(hubId).as("src"), ($"id" * 2).as("dst"), lit(1L).as("w"))
-        val edges = base
-          .unionAll(spokes)
-          .unionAll(spokes.select($"dst".as("src"), $"src".as("dst"), $"w"))
-        val n = edges.count()
-        val srcs = Seq(hubId).toDF("node")
-        val t0 = System.nanoTime()
-        val reached = distributed(graft.operators.Graph.ssspWeighted(edges, srcs, 4)).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"sssp_hub","mult":$m,"edges":$n,"hub_degree":$hubDeg,"reached":$reached,"sec":$t%.2f}""")
-      }
-    }
-
-    // round-8 late: degree-oriented triangle count — the co-purchase edge
-    // list replicated N× with DISJOINT node id spaces, so nodes/edges/
-    // wedges/triangles all grow exactly N× while per-copy structure is
-    // fixed. Near-linear sec across N is the wedge-join bound's scale
-    // evidence (an unoriented or hub-exploding plan would grow the wedge
-    // set superlinearly and show here first).
-    if (want("triangles")) {
-      val e0 = {
-        val li = li0.filter($"l_orderkey" % 4 === 0)
-          .select($"l_orderkey".as("ok"), $"l_partkey".as("p")).distinct()
-        li.as("x").join(li.as("y"),
-            $"x.ok" === $"y.ok" && $"x.p" < $"y.p")
-          .select($"x.p".as("a"), $"y.p".as("b")).distinct().localCheckpoint()
-      }
-      def edgesOf(m: Int) = (0 until m).map { i =>
-        e0.select(($"a" + lit(i.toLong * 1000000000L)).as("a"),
-          ($"b" + lit(i.toLong * 1000000000L)).as("b"))
-      }.reduce(_ unionAll _)
-      distributed(graft.operators.Graph.triangleCount(edgesOf(1))).collect() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val t0 = System.nanoTime()
-        val r = distributed(graft.operators.Graph.triangleCount(edgesOf(m))).collect().head
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"triangles","mult":$m,"edges":${r.getLong(1)},"tris":${r.getLong(2)},"sec":$t%.2f}""")
-      }
-    }
-
-    // round-11: neighbor-Jaccard hub safety — the fixture slice graph
-    // plus ONE synthetic hub whose degree grows m·500 while everything
-    // else stays fixed (the Zipf-apex shape: one celebrity node). Exact
-    // wedge volume at the hub is C(m·500, 2) — QUADRATIC in m, and all of
-    // it explodes out of a single grouped adjacency row — so the uncapped
-    // path's wall must blow up with m while maxDegree=256 (hub always
-    // over cap) and the minhash-LSH path (hub cost = 8 signature
-    // components, not C(deg,2) pairs) stay flat. This is the verdict-10
-    // obligation: the hub mitigation measured in code, not comments.
-    if (want("jaccard_hub")) {
-      // the checked query's OWN edge builder (private[graft]) — the probe
-      // must measure the graph q_graph_jaccard actually runs on
-      val e0 = graft.operators.Graph.jaccardSliceEdges(spark, sfDir)
-        .localCheckpoint()
-      def hubOf(m: Int) = e0.unionAll(
-        spark.range(m * 500L)
-          .select(($"id" + 500000000L).as("a"), lit(900000000L).as("b")))
-      def time(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      distributed(graft.operators.Graph.jaccardTopK(hubOf(1), 50, 2L, 256)).collect() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val g = hubOf(m).localCheckpoint()
-        val hubDeg = m * 500
-        val tCap = time(distributed(graft.operators.Graph.jaccardTopK(g, 50, 2L, 256)).collect())
-        val tApx = time(graft.operators.Graph.jaccardTopKApprox(g, 50).collect())
-        val tExact = time(
-          distributed(graft.operators.Graph.jaccardTopK(g, 50, 2L, Int.MaxValue)).collect())
-        println(f"""{"probe":"jaccard_hub","mult":$m,"hub_degree":$hubDeg,"capped_sec":$tCap%.2f,"approx_sec":$tApx%.2f,"exact_sec":$tExact%.2f}""")
-      }
-    }
-
-    // round-13: domain-free quantile summaries at scale — two questions.
-    // (1) Day-partitioned build: replicas shift days, so the day count
-    // grows m× while per-day size is fixed — build wall must track the
-    // fact scan (near-linear) and the merged read must stay
-    // summary-bounded (≤ D·(k+1) rows — it grows m× but stays tiny).
-    // (2) The documented per-key assumption, measured honestly: ALL rows
-    // on ONE day forces the per-day rank through a single task — the
-    // degradation that note warns about, quantified (heavy keys take the
-    // Slices decomposition instead).
-    if (want("quantile_sketch")) {
-      import graft.operators.Freq
-      def valsOf(m: Int) = (0 until m).map { i =>
-        li0.select(date_add(col("l_shipdate").cast("date"), i * 10000).as("day"),
-          floor(col("l_extendedprice") * 100).cast("long").as("v"))
-      }.reduce(_ unionAll _)
-      def time(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      Freq.quantileSummary(valsOf(1), 64).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val vals = valsOf(m).localCheckpoint()
-        val n = vals.count()
-        var summ: org.apache.spark.sql.DataFrame = null
-        val tBuild = time {
-          summ = Freq.quantileSummary(vals, 64).localCheckpoint()
-        }
-        val sRows = summ.count()
-        val ranks = spark.range(1).select(lit(50).as("q_pct"),
-          lit(n / 2).as("r"))
-        val tRead = time(Freq.quantileMergedRead(summ, ranks).count())
-        // the fat-key arm: same rows, ONE day
-        val fat = vals.select(lit("d0").as("day"), col("v"))
-        val tFat = time(Freq.quantileSummary(fat, 64).count())
-        graft.util.Frames.releaseCheckpoint(summ)
-        graft.util.Frames.releaseCheckpoint(vals)
-        println(f"""{"probe":"quantile_sketch","mult":$m,"rows":$n,"summary_rows":$sRows,"build_sec":$tBuild%.2f,"read_sec":$tRead%.2f,"fat_day_build_sec":$tFat%.2f}""")
-      }
-    }
-
-    // round-13: k-core peel under hub skew — the fixture slice graph,
-    // replicated with disjoint id spaces so edges grow m×, PLUS one
-    // synthetic hub whose degree grows m·500 (the jaccard_hub Zipf-apex
-    // shape). The skew-exposed step is the per-round keep aggregate: the
-    // explode puts every hub edge into a single degree key, so a plan
-    // whose per-round cost grew with the hub's key share (instead of the
-    // edge total) would show superlinear growth here first. Both keep
-    // strategies run on identical graphs per mult — near-linear growth on
-    // both plus a bounded broadcast/shuffle gap is the evidence the
-    // kcorePeel broadcastKeep=false fallback is deployable, not a cliff.
-    if (want("kcore_fallback")) {
-      val e0 = graft.operators.Graph.jaccardSliceEdges(spark, sfDir)
-        .localCheckpoint()
-      def hubGraph(m: Int) = {
-        val copies = (0 until m).map { i =>
-          e0.select(($"a" + lit(i.toLong * 1000000L)).as("a"),
-            ($"b" + lit(i.toLong * 1000000L)).as("b"))
-        }.reduce(_ unionAll _)
-        copies.unionAll(spark.range(m * 500L)
-          .select(($"id" + 500000000L).as("a"), lit(900000000L).as("b")))
-      }
-      def time(f: => Long): (Double, Long) = {
-        val t0 = System.nanoTime(); val r = f
-        ((System.nanoTime() - t0) / 1e9, r)
-      }
-      distributed(graft.operators.Graph.kcorePeel(hubGraph(1), 3, 4)).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val g = hubGraph(m).localCheckpoint()
-        val n = g.count()
-        val (tBc, survBc) = time(
-          distributed(graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = true)).count())
-        val (tSh, survSh) = time(
-          distributed(graft.operators.Graph.kcorePeel(g, 3, 4, broadcastKeep = false)).count())
-        assert(survBc == survSh,
-          s"broadcast and shuffle peels must agree at mult=$m: $survBc vs $survSh")
-        graft.util.Frames.releaseCheckpoint(g)
-        println(f"""{"probe":"kcore_fallback","mult":$m,"edges":$n,"hub_degree":${m * 500},"survivors":$survBc,"broadcast_sec":$tBc%.2f,"shuffle_sec":$tSh%.2f}""")
-      }
-    }
-
-    // round-12: hybrid-RRF fusion at scale — both arms must STAY
-    // TakeOrderedAndProject (per-partition partial top-k + tiny merge,
-    // never a global sort) as the corpus grows, and wall time must track
-    // the corpus-wide work (one postings-sized BM25 agg + one
-    // broadcast-probe cosine scan); the fusion join itself runs on
-    // ≤50-row frames at every scale. Disjoint-vocab doc replication (r0-
-    // prefixed probe terms hit only replica 0, so the postings stay
-    // constant-size while the corpus-wide agg grows) + remapped-id
-    // embedding replication.
-    if (want("rrf")) {
-      val W = org.apache.spark.sql.expressions.Window
-      def replicateEmb(m: Int) = (0 until m).map { i =>
-        emb0.select(($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          $"embedding")
-      }.reduce(_ unionAll _)
-      def fused(m: Int) = {
-        val docs = replicateDocs(m)
-        val terms = Seq("r0spark", "r0join", "r0stream", "r0vector", "r0agg")
-        val lexTop = graft.queries.Search.bm25(
-          docs.select($"doc_id", $"text"), terms, k = 50)
-          .select($"doc_id", $"score_micro")
-        val lexRank = lexTop.select($"doc_id",
-          row_number().over(W.orderBy($"score_micro".desc, $"doc_id"))
-            .cast("long").as("r_lex"))
-        val probe = emb0.filter($"vec_id" === 0).select($"embedding".as("pv"))
-        val semTop = replicateEmb(m).crossJoin(broadcast(probe))
-          .select($"vec_id".as("doc_id"),
-            floor(graft.queries.Sim.cosine($"pv", $"embedding") * 1e6)
-              .cast("long").as("cos_e6"))
-          .orderBy($"cos_e6".desc, $"doc_id").limit(50)
-        val semRank = semTop.select($"doc_id",
-          row_number().over(W.orderBy($"cos_e6".desc, $"doc_id"))
-            .cast("long").as("r_sem"))
-        lexRank.join(semRank, Seq("doc_id"), "full_outer")
-          .select($"doc_id",
-            (coalesce(expr("1000000000L div (60 + r_lex)"), lit(0L)) +
-              coalesce(expr("1000000000L div (60 + r_sem)"), lit(0L))).as("rrf_e9"))
-          .orderBy($"rrf_e9".desc, $"doc_id").limit(10)
-      }
-      fused(1).collect() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val q = fused(m)
-        val plan = q.queryExecution.executedPlan.toString
-        val nTop = "TakeOrderedAndProject".r.findAllIn(plan).length
-        val t0 = System.nanoTime()
-        val n = q.collect().length
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"rrf","mult":$m,"rows":$n,"take_ordered_ops":$nTop,"sec":$t%.2f}""")
-      }
-    }
-
-    // round-12: graph-ANN build growth split — the exact kNN build is
-    // n² score pairs by construction; NN-descent bounds each round at
-    // n·(2r)² equi-join candidates. Replicas are re-signed to fresh
-    // pseudo-random directions (the srp_neardup device) so the vector
-    // population stays non-degenerate as it grows. Expected: exact wall
-    // grows ~quadratically with corpus size, descent ~linearly.
-    if (want("ann_descent")) {
-      def corpusOf(m: Int) = (0 until m).map { i =>
-        emb0.select(($"vec_id" + lit(i.toLong * 10000000L)).as("cand_id"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("cv"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      def time(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      graft.operators.Ann.graphAnnIndexDescent(corpusOf(1), 12, 2).count() // warm
-      val probes = emb0.filter($"vec_id" < 5)
-        .select($"vec_id".as("probe_id"), $"embedding".as("pv"))
-      Seq(1, 4, 16).foreach { m =>
-        val c = corpusOf(m)
-        val n = c.count()
-        val t0 = System.nanoTime()
-        val index = graft.operators.Ann.graphAnnIndexDescent(c, 12, 2)
-        index.count()
-        val tDesc = (System.nanoTime() - t0) / 1e9
-        // exact build at 16× is ~1e9 kernel cosines — measured only where
-        // it stays sane; -1 marks "not measured", the growth is the point
-        val tExact = if (m <= 4)
-          time(graft.operators.Ann.graphAnnIndex(c, 12).count()) else -1.0
-        // THE graph-tier headline: search cost is parameter-bounded
-        // (entries + hops·beam·degree candidate scores per probe), so
-        // search wall must stay ~FLAT while the corpus grows 16×
-        // (entries are replica-0 ids — present at every mult)
-        val tSearch = time(distributed(graft.operators.Ann.graphAnnSearch(
-          probes, c, index,
-          c.filter(org.apache.spark.sql.functions.col("cand_id")
-              .isin(Seq(5L, 128L, 256L, 384L): _*))
-            .crossJoin(probes.select(org.apache.spark.sql.functions.col("probe_id")))
-            .select(org.apache.spark.sql.functions.col("probe_id"),
-              org.apache.spark.sql.functions.col("cand_id")),
-          16, 4, 3)).count())
-        println(f"""{"probe":"ann_descent","mult":$m,"vectors":$n,"descent_sec":$tDesc%.2f,"exact_sec":$tExact%.2f,"search_sec":$tSearch%.2f}""")
-      }
-    }
-
-    // round-12: token-budget selection under total score skew — EVERY doc
-    // carries the same text, so the whole corpus quantizes to ONE q_e4
-    // value. The old per-score-group window would serialize all rows
-    // through a single task; budgetSelect's range-slice cumsum must
-    // spread them (slices split on doc_id inside the single score) and
-    // scale near-linearly. Budget = huge so the filter keeps everything
-    // (worst case: the full corpus flows through the cumsum).
-    if (want("budget_skew")) {
-      val text = "the quick brown fox jumps over the lazy dog again and again"
-      def skewed(m: Int) = spark.range(m * 100000L)
-        .select($"id".as("doc_id"), lit(text).as("text"))
-      graft.queries.Text.budgetSelect(skewed(1), Long.MaxValue).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val t0 = System.nanoTime()
-        val kept = graft.queries.Text.budgetSelect(skewed(m), Long.MaxValue).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"budget_skew","mult":$m,"docs":${m * 100000L},"kept":$kept,"sec":$t%.2f}""")
-      }
-    }
-
-    // round-8 continuation: SemDeDup — embeddings replicated N× with
-    // fresh pseudo-random directions (the srp_neardup flip trick) and
-    // per-replica cluster ids (cluster = label + 10·replica), modeling
-    // k ∝ n codebook sizing: per-cluster occupancy stays constant, so the
-    // Σ|c|² pair work should grow LINEARLY in the corpus. Near-linear sec
-    // across N is the cluster-scoping claim's evidence; a plan that paired
-    // across clusters (or a k held fixed while n grows) would go
-    // quadratic and show here first.
-    if (want("semdedup")) {
-      val embL0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select($"vec_id", $"label", $"embedding")
-      def clusteredOf(m: Int) = (0 until m).map { i =>
-        embL0.select(
-          ($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          ($"label" + lit(i * 10)).as("cluster"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      graft.operators.Dedup.semanticDedup(clusteredOf(1), 0.3).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val c = clusteredOf(m)
-        val n = c.count()
-        val t0 = System.nanoTime()
-        val pruned = graft.operators.Dedup.semanticDedup(c, 0.3)
-          .filter($"pruned").count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"semdedup","mult":$m,"vectors":$n,"pruned":$pruned,"sec":$t%.2f}""")
-      }
-    }
-
-    // Lloyd k-means (round 18 — q_cluster_kmeans's production path):
-    // corpus replicated N× with sign-flipped dimension masks (new
-    // directions, so the codebook has real work at every mult). Cost
-    // model: init ONE TakeOrdered + driver farthest-first; each iter
-    // ONE narrow assignment pass + ONE (cluster, pos)-keyed agg whose
-    // output is k·dim rows — sec should track vectors near-linearly,
-    // and k ∝ n is the SemDeDup sizing rule (cells stay constant).
-    if (want("kmeans")) {
-      val embK0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select($"vec_id", $"embedding")
-      def corpusOf(m: Int) = (0 until m).map { i =>
-        embK0.select(
-          ($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      graft.operators.Ann.kmeansPortable(corpusOf(1), 8, 1) // warm
-      // two cost lines: fixed k isolates the linear-in-n term (one
-      // narrow pass + one k·dim agg per iter); k ∝ n (the SemDeDup
-      // sizing rule — constant cells) makes per-vector work grow with
-      // k, i.e. the n·k product — measured honestly as such. The
-      // codebook-in-expression argmax is the k ≲ few-hundred regime;
-      // larger k moves centroids table-side behind an IVF coarse layer
-      // (the Ann.route shape), which caps per-vector scoring at
-      // nprobe·(k/cells) regardless of k.
-      for ((m, k) <- Seq((1, 8), (4, 8), (16, 8), (4, 32), (16, 128))) {
-        val c = corpusOf(m)
-        val n = c.count()
-        val t0 = System.nanoTime()
-        val cb = graft.operators.Ann.kmeansPortable(c, k, 3)
-        val t = (System.nanoTime() - t0) / 1e9
-        val ta0 = System.nanoTime()
-        val cells = graft.operators.Ann.assignPortable(c, cb)
-          .select($"cluster").distinct().count()
-        val ta = (System.nanoTime() - ta0) / 1e9
-        println(f"""{"probe":"kmeans","mult":$m,"vectors":$n,"k":$k,"cells":$cells,"fit_sec":$t%.2f,"assign_sec":$ta%.2f}""")
-      }
-    }
-
-    // DBSCAN (round 18): the cost split the operator's 100 TB posture
-    // claims — the n² eps-graph pair join is the ONLY quadratic stage
-    // (the exact anchor the ANN candidate route replaces at scale);
-    // everything downstream (degree, core restriction, component
-    // closure, border assignment) is edge-bounded. Replicas are
-    // sign-flip-decorrelated (the kmeans arm's device). Measured at
-    // sf0.1 (2k→8k vectors): eps_edges grow ~m² (the fixture's mass
-    // concentrates on few axes, so a sign-flipped twin keeps |cos|
-    // large — cross-replica pairs survive eps at in-replica rate) AND
-    // the downstream remainder (total − pair) still stays ~flat ≈ 1 s
-    // while edges grow 16× — the edge-bounded claim measured directly,
-    // under an adversarially DENSER graph than decorrelation intended.
-    // pair_sec doubles per n-doubling until the cores saturate (4M →
-    // 64M cos evals still under-utilize local[16]); the n² work term
-    // is the count, not yet the wall, at this scale.
-    if (want("dbscan")) {
-      val embD0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select($"vec_id", $"embedding")
-      def corpusOf(m: Int) = (0 until m).map { i =>
-        embD0.select(
-          ($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      graft.operators.Cluster.dbscan(corpusOf(1), 0.3, 8).count() // warm
-      Seq(1, 2, 4).foreach { m =>
-        val c = corpusOf(m)
-        val n = c.count()
-        val tp0 = System.nanoTime()
-        val edges = distributed(graft.operators.Cluster.epsPairs(c, 0.3)).count()
-        val tp = (System.nanoTime() - tp0) / 1e9
-        val t0 = System.nanoTime()
-        // the probe measures the DISTRIBUTED tail
-        val out = distributed(graft.operators.Cluster.dbscan(c, 0.3, 8))
-          .filter($"role" =!= "noise").count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"dbscan","mult":$m,"vectors":$n,"eps_edges":$edges,"clustered":$out,"pair_sec":$tp%.2f,"total_sec":$t%.2f}""")
-      }
-    }
-
-    // DBSCAN ANN candidate route (round 19 — verdict r18 #3): the
-    // over-`EpsAnnCap` eps-pair generator. Same sign-flip replicas as
-    // the dbscan arm; at each size the arm measures the route's pair
-    // stage (kmeans cells + routed candidate join + exact verify)
-    // against the exact n² BNLJ where the product is still affordable
-    // (m ≤ 4), reporting recall honestly — the route's ONE
-    // approximation is edge discovery; every emitted edge passes the
-    // exact kernel. Expected: ann_sec grows ~linearly (candidates ≈
-    // n·cellSize·nprobe²) while exact pair_sec grows ~n².
-    if (want("dbscan_ann")) {
-      val embD0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select($"vec_id", $"embedding")
-      def corpusOf(m: Int) = (0 until m).map { i =>
-        embD0.select(
-          ($"vec_id" + lit(i.toLong * 10000000L)).as("vec_id"),
-          transform($"embedding", (x, d) =>
-            (x * when(pmod(hash(lit(i), d), lit(2)) === 0, 1.0f)
-              .otherwise(-1.0f)).cast("float")).as("embedding"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      graft.operators.Cluster.epsPairsAnn(corpusOf(1), 0.3).count() // warm
-      Seq(1, 4, 16).foreach { m =>
-        val c = corpusOf(m)
-        val n = c.count()
-        val ta0 = System.nanoTime()
-        val annEdges = graft.operators.Cluster.epsPairsAnn(c, 0.3).count()
-        val ta = (System.nanoTime() - ta0) / 1e9
-        val (exactEdges, te) =
-          if (m <= 4) {
-            val t0 = System.nanoTime()
-            // the exact n² tier itself, never epsPairs' size routing:
-            // the comparator must not fall into the ANN route it rates
-            val ex = graft.operators.Cluster.epsPairsExact(c, 0.3).count()
-            (ex, (System.nanoTime() - t0) / 1e9)
-          } else (-1L, -1.0)
-        val recall =
-          if (exactEdges > 0) annEdges.toDouble / exactEdges else -1.0
-        println(f"""{"probe":"dbscan_ann","mult":$m,"vectors":$n,"ann_edges":$annEdges,"ann_sec":$ta%.2f,"exact_edges":$exactEdges,"exact_sec":$te%.2f,"recall":$recall%.3f}""")
-      }
-    }
-
-    // round-8 continuation: BM25 — documents replicated N× verbatim with
-    // remapped ids (no disjoint-vocab prefixing: retrieval doesn't pair
-    // docs, and the postings of the fixed query must grow with the
-    // corpus). The only corpus-sized stage is the postings-restricted
-    // (doc, term) aggregate, so sec should track the corpus near-linearly
-    // with a small constant — the inverted-index access pattern's cost
-    // envelope, not an all-terms tf materialization (which would show as
-    // a large constant here).
-    if (want("bm25")) {
-      def docsOf(m: Int) = (0 until m).map { i =>
-        docs0.select(($"doc_id" + lit(i.toLong * 10000000L)).as("doc_id"), $"text")
-      }.reduce(_ unionAll _)
-      def bm25Count(docs: org.apache.spark.sql.DataFrame): Long = {
-        val toks = docs.filter($"text".isNotNull)
-          .select($"doc_id", split($"text", " ").as("toks"))
-        val dl = toks.select($"doc_id", size($"toks").cast("long").as("dl"))
-        val stats = dl.agg(count(lit(1)).as("n_docs"),
-          (sum($"dl") / count(lit(1))).as("avgdl"))
-        val tf = toks.select($"doc_id", explode($"toks").as("term"))
-          .filter($"term".isin("spark", "join", "stream", "vector", "agg"))
-          .groupBy($"doc_id", $"term").agg(count(lit(1)).cast("long").as("tf"))
-        val idf = tf.groupBy($"term")
-          .agg(countDistinct($"doc_id").cast("long").as("df"))
-          .crossJoin(broadcast(stats))
-          .select($"term",
-            log(lit(1.0) + ($"n_docs" - $"df" + 0.5) / ($"df" + 0.5)).as("idf"),
-            $"avgdl")
-        tf.join(broadcast(idf), "term").join(dl, "doc_id")
-          .select($"doc_id",
-            ($"idf" * ($"tf" * 2.2) / ($"tf" + lit(1.2) * (lit(0.25) + lit(0.75) * $"dl" / $"avgdl"))).as("s"))
-          .groupBy($"doc_id").agg(sum($"s").as("score"))
-          .orderBy($"score".desc, $"doc_id").limit(10).count()
-      }
-      bm25Count(docsOf(1)) // warm
-      Seq(1, 8, 64).foreach { m =>
-        val docs = docsOf(m).localCheckpoint()
-        val n = docs.count()
-        val t0 = System.nanoTime()
-        bm25Count(docs)
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"bm25","mult":$m,"docs":$n,"sec":$t%.2f}""")
-      }
-    }
-
-    // round-8 continuation: MERGE INTO — the q_merge_upsert scenario on an
-    // N×-replicated orders snapshot with DISJOINT key spaces, so target,
-    // source, and every action class grow exactly N×. One full-outer
-    // equi-join per merge: near-linear sec across N is the evidence a CDC
-    // batch lands in one key-shuffle pass (and would land shuffle-FREE on
-    // the bucketed layout).
-    if (want("merge")) {
-      val o0 = orders.select($"o_orderkey", $"o_totalprice", $"o_orderstatus")
-      def snapOf(m: Int) = (0 until m).map { i =>
-        o0.select(($"o_orderkey" + lit(i.toLong * 1000000000L)).as("o_orderkey"),
-          $"o_totalprice", $"o_orderstatus")
-      }.reduce(_ unionAll _)
-      Seq(1, 4, 16).foreach { m =>
-        val o = snapOf(m).localCheckpoint()
-        val target = o.filter($"o_orderkey" % 7 =!= 0)
-        val source = o
-          .filter($"o_orderkey" % 3 === 0 || $"o_orderkey" % 7 === 0 ||
-            $"o_orderkey" % 11 === 0)
-          .select($"o_orderkey",
-            when($"o_orderkey" % 7 =!= 0 && $"o_orderkey" % 3 === 0,
-              $"o_totalprice" + 100.0).otherwise($"o_totalprice").as("o_totalprice"),
-            $"o_orderstatus", ($"o_orderkey" % 11 === 0).as("is_delete"))
-        val t0 = System.nanoTime()
-        val n = graft.operators.Merge.merge(target, source, Seq("o_orderkey")).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"merge","mult":$m,"merged_rows":$n,"sec":$t%.2f}""")
-      }
-    }
-
-    // round-8 continuation: global line-level dedup — docs replicated N×
-    // with disjoint vocab (the `docs` probe trick), PLUS one verbatim
-    // replay of the docs<50 slice per replica so the keep-first window
-    // always has real duplicate work. Lines/distinct-lines both grow
-    // linearly; near-linear sec across N is the WindowGroupLimit +
-    // single-line-key-shuffle plan's evidence (a keep-first that shuffled
-    // every occurrence would inflate with duplication factor instead).
-    if (want("lines")) Seq(1, 4, 16).foreach { m =>
-      val docs = (0 until m).flatMap { i =>
-        val rep = docs0.select(
-          ($"doc_id" + lit(i.toLong * 10000000L)).as("doc_id"),
-          concat(lit(s"r$i"), regexp_replace($"text", " ", s" r$i")).as("text"))
-        Seq(rep,
-          rep.filter($"doc_id" % 10000000L < 50)
-            .select(($"doc_id" + 5000000L).as("doc_id"), $"text"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      val n = docs.count()
-      val t0 = System.nanoTime()
-      val lines = docs.select($"doc_id",
-        posexplode(expr(
-          "transform(sequence(0, (size(split(text, ' '))-1) div 10), i -> array_join(slice(split(text, ' '), i*10+1, 10), ' '))"
-        )).as(Seq("idx", "line")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"line").orderBy($"doc_id", $"idx")
-      val kept = lines.withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1).count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"lines","mult":$m,"docs":$n,"kept_lines":$kept,"sec":$t%.2f}""")
-    }
-
-    // round-8 continuation: AQE skew-join — the AUTOMATIC half of the
-    // skew story (q_join_skew_salted is the manual half). One key carries
-    // half of a fact side joined to a dim replicated per key; with AQE
-    // skewJoin on, the runtime splits the hot partition into subpartitions
-    // and wall-clock stays near the uniform case; with it OFF, the hot
-    // partition serializes on one core. Prints both timings — the ratio
-    // is the feature's measured value, and the probe fails loudly (ratio
-    // printed < 1 would mean AQE regressed).
-    if (want("aqe_skew")) {
-      val nRows = 24000000L
-      // key 0 carries half the rows; keys 1..999 share the rest; a wide
-      // payload column makes the hot partition's bytes (not just rows)
-      // dominate, which is what the byte-threshold detector sees
-      val fact = spark.range(0, nRows)
-        .select(when($"id" % 2 === 0, 0L).otherwise($"id" % 999 + 1).as("k"),
-          ($"id" * 31 % 1000).as("v"),
-          md5($"id".cast("string")).as("pad"))
-      val dim = spark.range(0, 1000)
-        .select($"id".as("k"), md5($"id".cast("string")).as("tag"))
-      def run(skewOn: Boolean): Double = {
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn)
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8MB")
-        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
-        // hint both sides large so the dim isn't broadcast away
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val t0 = System.nanoTime()
-        fact.join(dim, Seq("k")).agg(sum($"v"), count(lit(1))).collect()
-        val t = (System.nanoTime() - t0) / 1e9
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        t
-      }
-      run(skewOn = true) // warm
-      val tOn = run(skewOn = true)
-      val tOff = run(skewOn = false)
-      println(f"""{"probe":"aqe_skew","skew_on_sec":$tOn%.2f,"skew_off_sec":$tOff%.2f,"speedup":${tOff / tOn}%.2f}""")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", true)
-    }
-
-    // hot-key as-of: every row on ONE key — the composable join+max
-    // formulation materializes probes × builds intermediate rows; the
-    // custom merge operator streams both sides once. This is the skew case
-    // the operator exists for.
-    val hotN = 100000L
-    val hotProbes = spark.range(0, hotN)
-      .select($"id".as("event_id"), lit("hot").as("k"), ($"id" * 7 % 100000).as("ts"))
-    val hotBuilds = spark.range(0, hotN)
-      .select(lit("hot").as("bk"), ($"id" * 11 % 100000).as("bts"))
-    // sum(max) forces the joined values to be computed — a bare count()
-    // lets the optimizer eliminate the join entirely.
-    if (want("asof_hotkey")) {
-      val tc0 = System.nanoTime()
-      hotProbes.join(hotBuilds, $"k" === $"bk" && $"bts" <= $"ts", "left")
-        .groupBy($"event_id").agg(max($"bts").as("m"))
-        .agg(sum($"m")).collect()
-      val tComposed = (System.nanoTime() - tc0) / 1e9
-      val tm0 = System.nanoTime()
-      graft.plans.AsOf.join(hotProbes, hotBuilds, "k", "bk", "ts", "bts")
-        .agg(sum($"bts")).collect()
-      val tMerge = (System.nanoTime() - tm0) / 1e9
-      println(f"""{"probe":"asof_hotkey","rows":$hotN,"composed_sec":$tComposed%.2f,"merge_sec":$tMerge%.2f}""")
-    }
-    // ---- sessionize: events replicated N× with DISJOINT user ids (per-
-    // user density constant, so the semantic output grows linearly and
-    // measured growth is the PLAN's). The whole query is one user_id hash
-    // exchange + two windows + one agg — wall should track rows ~linearly.
-    if (want("sessionize")) Seq(1, 4, 16).foreach { m =>
-      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-        .select($"event_id", $"user_id", $"ts")
-      val ev = (0 until m).map { i =>
-        ev0.select(
-          ($"event_id" + lit(i.toLong * 100000000L)).as("event_id"),
-          ($"user_id" + lit(i.toLong * 10000000L)).as("user_id"), $"ts")
-      }.reduce(_ unionAll _)
-      val n = ev.count()
-      val gapUs = 1800L * 1000000L
-      val t0 = System.nanoTime()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"user_id").orderBy($"ts_us", $"event_id")
-      val sessions = ev
-        .select($"user_id", $"event_id",
-          unix_micros($"ts".cast("timestamp")).as("ts_us"))
-        .withColumn("new_s", when(lag($"ts_us", 1).over(w).isNull ||
-          $"ts_us" - lag($"ts_us", 1).over(w) >= gapUs, 1L).otherwise(0L))
-        .withColumn("sn", sum($"new_s").over(w.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-        .groupBy($"user_id", $"sn").agg(count(lit(1)).as("n_events"))
-        .count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"""{"probe":"sessionize","mult":$m,"rows":$n,"sessions":$sessions,"sec":$sec%.2f}""")
-    }
-
-    // ---- heavy hitters: fixed row count, GROWING distinct-key domain.
-    // The exact plan's exchange carries one partial row per (partition,
-    // distinct key) — it grows with D; the MG path's exchange carries only
-    // candidate partials (bounded by partitions·k regardless of D). Flat
-    // MG wall vs growing exact wall across D is the 100 TB argument made
-    // measurable (plus the candidate count printed to show the bound).
-    if (want("heavy_hitters")) Seq(10000, 100000, 1000000).foreach { d =>
-      val n = 8000000L
-      val items = spark.range(n).select(
-        when(pmod($"id", lit(20)) < 2, concat(lit("h"), pmod($"id", lit(2))))
-          .otherwise(concat(lit("t"), pmod($"id", lit(d)))).as("item"))
-      val te0 = System.nanoTime()
-      items.groupBy($"item").agg(count(lit(1)).as("n"))
-        .orderBy($"n".desc, $"item").limit(10).collect()
-      val tExact = (System.nanoTime() - te0) / 1e9
-      val tm0 = System.nanoTime()
-      val mg = graft.operators.Freq.heavyHitters(items, m = 10, k = 64).collect()
-      val tMg = (System.nanoTime() - tm0) / 1e9
-      val nCand = graft.operators.Freq.candidates(items, 64).count()
-      println(f"""{"probe":"heavy_hitters","distinct":$d,"rows":$n,"exact_sec":$tExact%.2f,"mg_sec":$tMg%.2f,"mg_top":${mg.length},"candidates":$nCand}""")
-    }
-
-    // round-15: candidate-local margin mining (Sim.marginPairsFromCandidates,
-    // the Ann.marginPairsAnn tail stage). The ANN tier's own growth is
-    // probed by ann_descent; THIS probe isolates the margin algebra over a
-    // candidate-pair frame that grows LINEARLY with the corpus (per-side
-    // top-R lists, R = 8 — the shape the index search returns). Synthetic
-    // hash-scored candidates so the probe measures the k-sum windows +
-    // mutual-best filter, not cosine kernels. Wall must track candidate
-    // rows near-linearly — sec/Mcand flat across 16× is the 100 TB claim.
-    if (want("margin")) Seq(1, 4, 16).foreach { m =>
-      val nSide = 100000L * m
-      val R = 8
-      def sideCands(swap: Boolean) = spark.range(nSide)
-        .select($"id", explode(sequence(lit(0), lit(R - 1))).as("j"))
-        .select(
-          (if (swap) pmod(hash($"id", $"j", lit(7)), lit(nSide)).cast("long") else $"id").as("id_x"),
-          (if (swap) $"id" else pmod(hash($"id", $"j", lit(3)), lit(nSide)).cast("long")).as("id_y"))
-      val cands = sideCands(swap = false).unionAll(sideCands(swap = true))
-        .groupBy($"id_x", $"id_y")
-        .agg((pmod(hash(first($"id_x"), first($"id_y")), lit(20001)) - 10000L)
+      side(swap = false).unionAll(side(swap = true)).groupBy(col("id_x"), col("id_y"))
+        .agg((pmod(hash(first(col("id_x")), first(col("id_y"))), lit(20001)) - 10000L)
           .cast("long").as("e4"))
-      val t0 = System.nanoTime()
-      val mined = graft.queries.Sim.marginPairsFromCandidates(cands, 4).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val nCand = nSide * 2 * R // upper bound pre-dedup; printed for rate context
-      println(f"""{"probe":"margin","mult":$m,"side":$nSide,"cand_rows_ub":$nCand,"mined":$mined,"sec":$sec%.2f}""")
     }
+    def one(f: Int => DataFrame): Int => Seq[DataFrame] = x => Seq(f(x))
+    def count1(name: String)(df: DataFrame): Counts = Seq(name -> df.count())
+    def rows(name: String)(df: DataFrame): Counts = Seq(name -> df.collect().length.toLong)
+    def sum1(name: String, c: String)(df: DataFrame): Counts =
+      Seq(name -> df.agg(sum(col(c))).collect()(0).getLong(0))
+    def bothArms(entry: (String, Boolean) => Entry) =
+      Seq("broadcast" -> true, "shuffle" -> false).map { case (arm, bc) => entry(arm, bc) }
 
-    // BM25 index on arrival: per-batch ingest cost must be BATCH-sized
-    // (tokenize + one (doc, term) agg of the batch — the store only
-    // receives an appended partition), and the store query cost grows
-    // with the QUERY'S postings, not the ingest history. Replicas get
-    // disjoint doc_ids but KEEP the shared vocabulary (an index over a
-    // growing corpus of the same language — the realistic shape; query
-    // postings grow linearly with the corpus, which the final search
-    // read reflects).
-    if (want("bm25_arrival")) {
-      val tmp = java.nio.file.Files.createTempDirectory("bm25_probe").toString
-      val idx = s"$tmp/index"
-      val batch0 = docs0.limit(2000).select($"doc_id", $"text")
-      (0 until 12).foreach { bIdx =>
-        val data = batch0.select(
-          ($"doc_id" + lit(bIdx.toLong * 10000000L)).as("doc_id"), $"text")
-        val t0 = System.nanoTime()
-        graft.streaming.StreamOps.bm25IngestBatch(data, bIdx.toLong, idx)
-        val t = (System.nanoTime() - t0) / 1e9
-        if (bIdx % 3 == 2) {
-          val tq0 = System.nanoTime()
-          val hits = graft.streaming.StreamOps.bm25StoreSearch(
-            spark, idx, graft.queries.Search.queryTerms, 10).count()
-          val tq = (System.nanoTime() - tq0) / 1e9
-          println(f"""{"probe":"bm25_arrival","batch":$bIdx,"ingest_sec":$t%.2f,"query_sec":$tq%.2f,"hits":$hits}""")
-        } else
-          println(f"""{"probe":"bm25_arrival","batch":$bIdx,"ingest_sec":$t%.2f}""")
-      }
-    }
-
-    // Derived-partsupp TPC-H tier (q_tpch_q2/q9/q11/q16/q20): the q9 shape —
-    // broadcast part-prune of the fact, window-MIN unit cost per
-    // (part, supplier) pair, profit aggregate — over an m×-grown fact with
-    // DISJOINT partkey ranges per replica (matching replicated part dim),
-    // so the pair domain grows linearly with the fact instead of packing
-    // m× rows into fixed pairs. The scale claim under test: cost is linear
-    // in fact rows and the shuffle is bounded by the PRUNED pair rows
-    // (never the unpruned pair relation — the shape the plan audit
-    // rejected in the first cut of q2).
-    if (want("tpch_partsupp")) {
-      val part0 = spark.read.parquet(s"$sfDir/part.parquet")
-      def liOf(m: Int) = (0 until m).map { i =>
-        li0.select(($"l_partkey" + lit(i * 10000000L)).as("l_partkey"),
-          $"l_suppkey", $"l_quantity", $"l_extendedprice", $"l_discount")
-      }.reduce(_ unionAll _)
-      def partOf(m: Int) = (0 until m).map { i =>
-        part0.select(($"p_partkey" + lit(i * 10000000L)).as("p_partkey"), $"p_name")
-      }.reduce(_ unionAll _)
-      Seq(1, 4, 16).foreach { m =>
-        val li = liOf(m)
-        val n = li.count()
-        val pruneKeys = partOf(m).filter($"p_name".startsWith("small"))
-          .select($"p_partkey")
-        val wps = org.apache.spark.sql.expressions.Window
-          .partitionBy($"l_partkey", $"l_suppkey")
-        val t0 = System.nanoTime()
-        // the cost/revenue expressions are the SHIPPED query's own
-        // (Tpch.unitCostE4 / Tpch.revE4) — the probe cannot drift from
-        // the shape it certifies.
-        val out = li
-          .join(broadcast(pruneKeys), $"p_partkey" === $"l_partkey")
-          .withColumn("cost_e4", min(graft.queries.Tpch.unitCostE4).over(wps))
-          .groupBy($"l_suppkey")
-          .agg(sum(graft.queries.Tpch.revE4 -
-            $"cost_e4" * $"l_quantity".cast("long")).as("profit_e4"))
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"tpch_partsupp","mult":$m,"fact_rows":$n,"out_rows":$out,"sec":$sec%.2f,"Mrows_per_sec":${n / sec / 1e6}%.1f}""")
-      }
-    }
-
-    // HyperBall neighborhood sketches: m×-grown edge set with DISJOINT
-    // node-id ranges per replica (balls stay constant-size — measured
-    // growth is the PLAN's, not the problem's). The scale claims under
-    // test: per-round cost linear in edges; the broadcast arm (zero
-    // per-round exchange, the q_graph_harmonic choice) vs the shuffle
-    // arm (the billions-of-nodes fallback) crossover evidence.
-    if (want("hyperball")) {
-      val p0 = graft.operators.Graph.jaccardSliceEdges(spark, sfDir)
-        .localCheckpoint()
-      def edOf(m: Int) = (0 until m).map { i =>
-        val off = lit(i.toLong * 100000000L)
-        p0.select(($"a" + off).as("src"), ($"b" + off).as("dst"))
-          .unionAll(p0.select(($"b" + off).as("src"), ($"a" + off).as("dst")))
-      }.reduce(_ unionAll _)
-      Seq(1, 4, 16).foreach { m =>
-        val ed = edOf(m).localCheckpoint()
-        val nE = ed.count()
-        val t0 = System.nanoTime()
-        // the probe measures the DISTRIBUTED arms
-        val nB = distributed(graft.operators.Graph.hyperBall(ed, 3, 12,
-          broadcastState = true)).count()
-        val tBc = (System.nanoTime() - t0) / 1e9
-        // the shuffle arm only at the small mult (its claim is equality
-        // + viability, not speed; the broadcast arm is the local pick)
-        val tSh = if (m == 1) {
-          val t1 = System.nanoTime()
-          distributed(graft.operators.Graph.hyperBall(ed, 3, 12)).count()
-          (System.nanoTime() - t1) / 1e9
-        } else -1.0
-        println(f"""{"probe":"hyperball","mult":$m,"edges":$nE,"nodes":$nB,"bcast_sec":$tBc%.2f,"shuffle_sec":$tSh%.2f,"Medges_per_sec":${3 * nE / tBc / 1e6}%.1f}""")
-      }
-    }
-
-    // k-truss peel: m×-grown edge set with DISJOINT node-id ranges per
-    // replica (triangle structure per replica constant — growth measures
-    // the PLAN). Claim under test: per-round support cost linear in
-    // edges under the Chiba–Nishizeki wedge bound (triangles' own probe
-    // shape, iterated through the peel's 4 support passes).
-    if (want("ktruss")) {
-      val p0 = graft.operators.Graph.jaccardSliceEdges(spark, sfDir)
-        .localCheckpoint()
-      def edOf(m: Int) = (0 until m).map { i =>
-        val off = lit(i.toLong * 100000000L)
-        p0.select(($"a" + off).as("a"), ($"b" + off).as("b"))
-      }.reduce(_ unionAll _)
-      Seq(1, 4, 16).foreach { m =>
-        val ed = edOf(m).localCheckpoint()
-        val nE = ed.count()
-        val t0 = System.nanoTime()
-        val out = distributed(graft.operators.Graph.ktrussPeel(ed, 4, 3)).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"ktruss","mult":$m,"edges":$nE,"truss_edges":$out,"sec":$sec%.2f,"Medges_per_sec":${4 * nE / sec / 1e6}%.1f}""")
-      }
-    }
-
-    // Containment candidate tier: disjoint-vocabulary replicas (the
-    // `docs` probe's corpus — replicas never pair, so true output grows
-    // linearly) through the rare-shingle inverted index + exact verify.
-    // The claim under test: candidate work is postings-bounded
-    // (≤ k·dfCap rows per doc), never doc × doc.
-    if (want("containment")) {
-      docMults.foreach { m =>
-        val docs = replicateDocs(m).localCheckpoint()
-        val n = docs.count()
-        val t0 = System.nanoTime()
-        // the probe measures the DISTRIBUTED tier
-        val out = distributed(graft.operators.Dedup.containmentVerify(docs,
-          graft.operators.Dedup.containmentCandidates(docs), 5000L)).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"containment","mult":$m,"docs":$n,"pairs":$out,"sec":$sec%.2f,"kdocs_per_sec":${n / sec / 1e3}%.1f}""")
-      }
-    }
-
-    // Misra–Gries store in the LOSSY regime (the oracle fixture stays
-    // exact by design): 12 batches of a planted heavy hitter over a wide
-    // uniform tail (distinct ≫ k = 64), per-batch ingest must stay
-    // batch-sized while the store stays ≤ k rows/batch, and after every
-    // ingest the planted hitter's bound lb ≤ true ≤ lb + max_err must
-    // hold with the budget ≤ n/(k+1).
-    if (want("topk_arrival")) {
-      val tmp = java.nio.file.Files.createTempDirectory("topk_probe").toString
-      val store = s"$tmp/mg"
-      val batch0 = li0.limit(50000)
-        .select(concat(lit("t"), ($"l_partkey" % 20000).cast("string")).as("item"))
-      var trueHot = 0L
-      (0 until 12).foreach { bIdx =>
-        val hot = spark.range(5000 + 100 * bIdx)
-          .select(lit("hot").as("item"))
-        trueHot += 5000 + 100 * bIdx
-        val data = batch0.unionAll(hot)
-        val t0 = System.nanoTime()
-        graft.streaming.StreamOps.topkSummaryBatch(data, bIdx.toLong, store, 64)
-        val t = (System.nanoTime() - t0) / 1e9
-        if (bIdx % 3 == 2) {
-          val tq0 = System.nanoTime()
-          val top = graft.streaming.StreamOps.topkStoreRead(spark, store, 5)
-            .collect()
-          val tq = (System.nanoTime() - tq0) / 1e9
-          // a missing hitter is a FAILED bound line, not a probe crash
-          val (lb, n, err, ok) = top.find(_.getString(0) == "hot") match {
-            case Some(r) =>
-              val (l, nn, e) = (r.getLong(1), r.getLong(2), r.getLong(3))
-              (l, nn, e, l <= trueHot && trueHot <= l + e && e <= nn / 65)
-            case None => (-1L, -1L, -1L, false)
-          }
-          println(f"""{"probe":"topk_arrival","batch":$bIdx,"ingest_sec":$t%.2f,"read_sec":$tq%.2f,"hot_lb":$lb,"hot_true":$trueHot,"max_err":$err,"bound_ok":$ok}""")
-        } else
-          println(f"""{"probe":"topk_arrival","batch":$bIdx,"ingest_sec":$t%.2f}""")
-      }
-    }
-
-    // Sampled Brandes betweenness: the claim under test is that work is
-    // |S|·n-bounded per level and the disjoint-replica growth is LINEAR
-    // (replicas never connect, so per-source frontiers stay
-    // replica-sized while |S| and n both grow m×).
-    if (want("betweenness")) {
-      val p0 = graft.operators.Graph.jaccardSliceEdges(spark, sfDir)
-        .localCheckpoint()
-      def edOf(m: Int) = {
-        val rep = (0 until m).map { i =>
-          val off = lit(i.toLong * 100000000L)
-          p0.select(($"a" + off).as("src"), ($"b" + off).as("dst"))
-        }.reduce(_ unionAll _)
-        rep.unionAll(rep.select($"dst".as("src"), $"src".as("dst")))
-      }
-      Seq(1, 4, 16).foreach { m =>
-        val ed = edOf(m).localCheckpoint()
-        val nE = ed.count()
-        val sources = ed.select($"src".as("s")).distinct()
-          .filter($"s" % 53 === 0)
-        val nS = sources.count()
-        val t0 = System.nanoTime()
-        // distributed only: the probe's claim is the DISTRIBUTED arm's
-        // scaling line (the driver arm would otherwise serve the small
-        // multiplicities and put an arm-switch cliff mid-line)
-        val out = distributed(graft.operators.Graph.betweennessBounded(ed, sources, 3))
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"betweenness","mult":$m,"edges":$nE,"sources":$nS,"ranked":$out,"sec":$sec%.2f,"Medges_per_sec":${nE / sec / 1e6}%.2f}""")
-        graft.util.Frames.releaseCheckpoint(ed)
-      }
-    }
-
-    // KMV bottom-k sketch: the claim under test is that the shuffle
-    // carries (set, distinct-hash) pairs collapsed MAP-SIDE and the
-    // rank ≤ k filter prunes partially below the exchange
-    // (WindowGroupLimit — PlanSpec pins the plan shape), so wall tracks
-    // DISTINCT pairs, not facts. Probe: hold the distinct (set, member)
-    // domain constant at 200k and grow per-pair duplication m× — sec
-    // should stay near-flat while Mfacts/sec grows ~linearly.
-    if (want("kmv")) {
-      val k = 512
-      Seq(1, 4, 16).foreach { m =>
-        val facts = spark.range(200000L * m)
-          .select(($"id" % 2).cast("string").as("st"),
-            expr("(id div 2) % 100000L").as("mem"))
-          .localCheckpoint()
-        val n = facts.count()
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy($"st").orderBy($"h")
-        val t0 = System.nanoTime()
-        val kmv = facts
-          .groupBy($"st",
-            conv(substring(md5($"mem".cast("string")), 1, 15), 16, 10)
-              .cast("long").as("h"))
-          .agg(count(lit(1)).as("cnt")).drop("cnt")
-          .withColumn("r", row_number().over(w)).filter($"r" <= k)
-        val flags = kmv.groupBy($"h").agg(
-          max(when($"st" === "0", 1L).otherwise(0L)).as("in_a"),
-          max(when($"st" === "1", 1L).otherwise(0L)).as("in_b"))
-        val est = flags.orderBy($"h").limit(k)
-          .agg(count(lit(1)).as("nk"), sum($"in_a" * $"in_b").as("both"))
+    Seq(
+      // the q_agg_percentiles shape on N×-unioned lineitem: the range-sliced
+      // rank (quantiles of a replicated multiset are the originals; the
+      // work is the sort)
+      Entry("percentiles", Seq(1, 8, 64), one(m => union(m)(_ => lineitem)),
+        { case (Seq(li), _) => rows("out_rows")(Aggs.percentilesOf(li, Seq(0.25, 0.5, 0.75))) }),
+      // exact-substring dedup: the window-hash row_number shuffle is the
+      // only corpus-wide stage; the span-explode/anti-join tail must not
+      // grow faster than the corpus
+      Entry("substring", Seq(1, 4, 16), one(docReplicas), { case (Seq(d), _) =>
+        val r = Dedup.substringDedup(d, w = 10).agg(sum(col("n_toks")), sum(col("n_kept")))
           .collect()(0)
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"""{"probe":"kmv","mult":$m,"facts":$n,"nk":${est.getLong(0)},"both":${est.getLong(1)},"sec":$sec%.2f,"Mfacts_per_sec":${n / sec / 1e6}%.1f}""")
+        Seq("toks" -> r.getLong(0), "kept" -> r.getLong(1))
+      }),
+      // the banded minhash-LSH pair pipeline and the df-capped
+      // decontamination join against a fixed benchmark slice (un-prefixed,
+      // so it must still do its full index and join work)
+      Entry("docs.near_dups", Seq(1, 4, 16), one(docReplicas),
+        { case (Seq(d), _) => count1("near_dups")(Dedup.shingleNearDups(d, 0.2)) }),
+      Entry("docs.decontaminate", Seq(1, 4, 16),
+        m => Seq(docReplicas(m), docs.filter(col("doc_id") < 50)),
+        { case (Seq(d, bench), _) => count1("contaminated")(Dedup.contamination(d, bench, 2)) }),
+      // day-partitioned quantile summaries, replicas shifted to new days:
+      // the build tracks the fact scan, the merged read stays
+      // summary-bounded; all rows on ONE day takes the routed arm
+      Entry("quantile_sketch.build", Seq(1, 4, 16), one(dayValues),
+        { case (Seq(v), _) => count1("summary_rows")(Freq.quantileSummary(v, 64)) }),
+      Entry("quantile_sketch.read", Seq(1, 4, 16), m => Seq(
+          Freq.quantileSummary(dayValues(m), 64),
+          dayValues(m).agg((count(lit(1)) / 2).cast("long").as("r"))
+            .select(lit(50).as("q_pct"), col("r"))),
+        { case (Seq(summary, ranks), _) => count1("rows")(Freq.quantileMergedRead(summary, ranks)) }),
+      Entry("quantile_sketch.fat_day", Seq(1, 4, 16),
+        one(m => dayValues(m).select(lit("d0").as("day"), col("v"))),
+        { case (Seq(v), _) => count1("summary_rows")(Freq.quantileSummary(v, 64)) }),
+      // min-label + pointer jumping on 1000-node chain-cycles (m×100k
+      // edges): plain propagation would need ~1000 rounds; O(log) rounds
+      // keep sec/edge flat. Exact = nodes/1000 components.
+      Entry("components", Seq(1, 4, 16), one(m => spark.range(0, m * 100000L).select(
+          col("id").as("src"),
+          when(col("id") % 1000 === 999, col("id") - 999).otherwise(col("id") + 1).as("dst"))),
+        { case (Seq(e), _) => Seq("components" -> Components.connectedComponents(e, maxIter = 30)
+            .agg(countDistinct(col("component"))).collect()(0).getLong(0)) },
+        exact = Some(in => in.head.count() / 1000)),
+      // token-budget selection where every doc has the same score: the
+      // range-slice cumsum splits on doc_id inside the single score, so no
+      // task carries the whole corpus. Budget = everything.
+      Entry("budget_skew", Seq(1, 4, 16), one(m => spark.range(m * 100000L).select(
+          col("id").as("doc_id"),
+          lit("the quick brown fox jumps over the lazy dog again and again").as("text"))),
+        { case (Seq(d), _) => count1("kept")(Text.budgetSelect(d, Long.MaxValue)) }),
+      // SemDeDup with per-replica cluster ids (k ∝ n): per-cluster
+      // occupancy is constant, so the Σ|c|² pair work grows linearly
+      Entry("semdedup", Seq(1, 4, 16),
+        one(m => embReplicas(m, i => Seq((col("label") + i * 10).as("cluster")))),
+        { case (Seq(c), _) => count1("pruned")(Dedup.semanticDedup(c, 0.3).filter(col("pruned"))) }),
+      // candidate-local margin mining over per-side top-8 lists that grow
+      // linearly (hash-scored, so only the k-sum windows and the
+      // mutual-best filter are timed)
+      Entry("margin", Seq(1, 4, 16), one(marginCandidates),
+        { case (Seq(c), _) => count1("mined")(Sim.marginPairsFromCandidates(c, 4)) }),
+      // graph-ANN build: NN-descent bounds a round at n·(2r)² candidates
+      // where the exact kNN build scores n² pairs (run only up to 4×);
+      // search cost is parameter-bounded and must stay flat (entries are
+      // replica-0 ids, present at every x)
+      Entry("ann_descent.build", Seq(1, 4, 16), one(annCorpus),
+        { case (Seq(c), _) => count1("edges")(Ann.graphAnnIndexDescent(c, 12, 2)) }),
+      Entry("ann_descent.exact", Seq(1, 4), one(annCorpus),
+        { case (Seq(c), _) => count1("edges")(Ann.graphAnnIndex(c, 12)) }),
+      Entry("ann_descent.search", Seq(1, 4, 16), m => {
+          val c = annCorpus(m)
+          Seq(c, Ann.graphAnnIndexDescent(c, 12, 2))
+        }, { case (Seq(c, index), _) =>
+          val probes = embs.filter(col("vec_id") < 5)
+            .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+          val entries = c.filter(col("cand_id").isin(5L, 128L, 256L, 384L))
+            .crossJoin(probes.select(col("probe_id"))).select(col("probe_id"), col("cand_id"))
+          count1("hits")(Ann.graphAnnSearch(probes, c, index, entries, 16, 4, 3))
+        }),
+      // DBSCAN: the eps-graph pair join is the only quadratic stage;
+      // degree, core rule, closure and border election are edge-bounded
+      Entry("dbscan.pairs", Seq(1, 2, 4), one(m => embReplicas(m)),
+        { case (Seq(c), _) => count1("eps_edges")(Cluster.epsPairs(c, 0.3)) }),
+      Entry("dbscan", Seq(1, 2, 4), one(m => embReplicas(m)), { case (Seq(c), _) =>
+        count1("clustered")(Cluster.dbscan(c, 0.3, 8).filter(col("role") =!= "noise")) }),
+      // the over-EpsAnnCap eps-pair route: candidates ≈ n·cellSize·nprobe²
+      // (linear) against the exact n² tier — epsPairsExact itself, never
+      // epsPairs' size routing, which could rate the route against itself
+      Entry("dbscan_ann", Seq(1, 4, 16), one(m => embReplicas(m)),
+        { case (Seq(c), _) => count1("ann_edges")(Cluster.epsPairsAnn(c, 0.3)) },
+        exact = Some(in => Cluster.epsPairsExact(in.head, 0.3).count()), exactUpTo = 4),
+      // the Pregel loop: near-linear in edges; per added iteration a flat
+      // marginal cost (the degree-annotated edge frame is built once and
+      // each round's rank frame is checkpointed)
+      Entry("pagerank", Seq(1, 4, 16), one(partSupp(_, weighted = false)),
+        { case (Seq(g), _) => sum1("mass", "rank")(Graph.pagerank(g, 5)) }),
+      Entry("pagerank.iters", Seq(1, 3, 6), one(_ => partSupp(1, weighted = false)),
+        { case (Seq(g), iters) => count1("nodes")(Graph.pagerank(g, iters)) }),
+      // Lloyd iterations over the corpus Ann.kmeans pins once: each added
+      // iteration costs its compute, never a source re-scan
+      Entry("kmeans_iters", Seq(1, 3, 6), one(_ => embs.select(col("vec_id"), col("embedding"))),
+        { case (Seq(e), iters) => Seq("centroids" -> Ann.kmeans(e, k = 8, iters = iters).size.toLong) }),
+      // weighted Pregel (the (rank·w) div wout term) and the delta-frontier
+      // Bellman loop with one hub of degree m·500 at the source: the hub's
+      // whole edge set relaxes in round 1 and costs its edge count
+      Entry("weighted_graph.pagerank", Seq(1, 4, 16), one(partSupp(_, weighted = true)),
+        { case (Seq(g), _) => sum1("mass", "rank")(Graph.pagerankWeighted(g, 5)) }),
+      Entry("weighted_graph.sssp_hub", Seq(1, 4, 16), one(m => partSupp(m, weighted = true)
+          .unionAll(symmetric(spark.range(m * 500L).select(lit(999999999999L).as("src"),
+            (col("id") * 2).as("dst"), lit(1L).as("w"))))),
+        { case (Seq(g), _) => count1("reached")(Graph.ssspWeighted(g,
+            spark.range(1).select(lit(999999999999L).as("node")), 4)) })
+    ) ++
+    // broadcast vs shuffle-join rank distribution on identical graphs up to
+    // 64× edges: the fallback a billions-of-nodes cluster takes must also
+    // grow near-linearly, with a bounded gap to the broadcast arm
+    bothArms((arm, bc) => Entry(s"pagerank_fallback.$arm", Seq(1, 16, 64),
+      one(partSupp(_, weighted = false)),
+      { case (Seq(g), _) => sum1("mass", "rank")(Graph.pagerank(g, 3, broadcastRanks = bc)) })) ++
+    // k-core peel on slice replicas plus one hub of degree m·500: the
+    // explode puts every hub edge into one degree key, so a per-round cost
+    // that followed the hub's key share would grow superlinearly here
+    bothArms((arm, bc) => Entry(s"kcore_fallback.$arm", Seq(1, 4, 16),
+      one(m => replicas(m, slice, 1000000L, "a", "b").unionAll(hub(m))),
+      { case (Seq(g), _) => count1("survivors")(Graph.kcorePeel(g, 3, 4, broadcastKeep = bc)) })) ++
+    // HyperBall: per-round cost linear in edges; the broadcast arm (zero
+    // per-round exchange) against the shuffle fallback
+    bothArms((arm, bc) => Entry(s"hyperball.$arm", if (bc) Seq(1, 4, 16) else Seq(1, 4),
+      one(symSlice),
+      { case (Seq(g), _) => count1("nodes")(Graph.hyperBall(g, 3, 12, broadcastState = bc)) })) ++
+    Seq(
+      // neighbor-Jaccard on the q_graph_jaccard graph plus one hub of degree
+      // m·500: exact wedge volume at the hub is C(m·500, 2), quadratic in m,
+      // while the degree cap (256) and the minhash-LSH candidates stay flat
+      Entry("jaccard_hub.capped", Seq(1, 4, 16), one(sliceHub),
+        { case (Seq(g), _) => rows("pairs")(Graph.jaccardTopK(g, 50, 2L, 256)) }),
+      Entry("jaccard_hub.approx", Seq(1, 4, 16), one(sliceHub),
+        { case (Seq(g), _) => rows("pairs")(Graph.jaccardTopKApprox(g, 50)) }),
+      Entry("jaccard_hub.exact", Seq(1, 4, 16), one(sliceHub),
+        { case (Seq(g), _) => rows("pairs")(Graph.jaccardTopK(g, 50, 2L, Int.MaxValue)) }),
+      // k-truss peel: per-round support cost linear in edges under the
+      // wedge bound
+      Entry("ktruss", Seq(1, 4, 16), one(m => replicas(m, slice, 100000000L, "a", "b")),
+        { case (Seq(g), _) => count1("truss_edges")(Graph.ktrussPeel(g, 4, 3)) }),
+      // sampled Brandes: replicas never connect, so per-source frontiers
+      // stay replica-sized while |S| and n both grow m×
+      Entry("betweenness", Seq(1, 4, 16), m => {
+          val g = symSlice(m)
+          Seq(g, g.select(col("src").as("s")).distinct().filter(col("s") % 53 === 0))
+        }, { case (Seq(g, sources), _) => count1("ranked")(Graph.betweennessBounded(g, sources, 3)) })
+    ) ++ {
+      // 8M items over a growing key domain D (x): the exact plan's exchange
+      // carries one partial row per (partition, key) and grows with D; the
+      // Misra–Gries candidates stay bounded by partitions·k
+      def items(d: Int) = spark.range(8000000L).select(
+        when(pmod(col("id"), lit(20)) < 2, concat(lit("h"), pmod(col("id"), lit(2))))
+          .otherwise(concat(lit("t"), pmod(col("id"), lit(d)))).as("item"))
+      val domains = Seq(10000, 100000, 1000000)
+      Seq(
+        Entry("heavy_hitters.exact", domains, one(items), { case (Seq(it), _) =>
+          rows("top")(it.groupBy(col("item")).agg(count(lit(1)).as("n"))
+            .orderBy(col("n").desc, col("item")).limit(10)) }),
+        Entry("heavy_hitters.mg", domains, one(items),
+          { case (Seq(it), _) => rows("mg_top")(Freq.heavyHitters(it, m = 10, k = 64)) }),
+        Entry("heavy_hitters.candidates", domains, one(items),
+          { case (Seq(it), _) => count1("candidates")(Freq.candidates(it, 64)) }))
+    } ++ {
+      // entities on arrival, x = batches: each 200k-row batch has a name
+      // dim that grows with x in blocks of at most 16 variants, and 20% of
+      // its block keys replay the previous batch's (so the store's
+      // cross-batch folds run). Ingest must stay batch-sized (no store
+      // read); the read is name-dim-bounded. The read entry's builder
+      // ingests x batches into a fresh store, outside the clock; its
+      // input is the store's distinct names.
+      lazy val dir = java.nio.file.Files.createTempDirectory("entities_probe").toString
+      def batch(b: Int) = {
+        val ng = 400L + b * 200L
+        val key = when(lit(b) > 0 && col("id") % 5 === 0, lit((b - 1) * 100000L))
+          .otherwise(lit(b * 100000L)) + col("id") % ng
+        spark.range(b * 120000L, b * 120000L + 200000L).select(col("id").as("p_partkey"),
+          concat(lit("blk"), key.cast("string"), lit(" nn"), key.cast("string"),
+            lit(" v"), ((col("id") / ng) % 16).cast("string")).as("p_name"),
+          concat(lit("Brand#"), (col("id") % 25).cast("string")).as("p_brand"),
+          concat(lit("TYPE "), (col("id") % 11).cast("string")).as("p_type"),
+          (col("id") % 50).cast("int").as("p_size"))
       }
+      Seq(
+        Entry("entities_store.ingest", 1 to 8, x => Seq(batch(x - 1)), { case (Seq(b), x) =>
+          StreamOps.entitiesIngestBatch(b, x - 1L, s"$dir/ingest")
+          Nil
+        }),
+        Entry("entities_store.read", Seq(4, 8), x => {
+          (0 until x).foreach(b => StreamOps.entitiesIngestBatch(batch(b), b.toLong, s"$dir/read$x"))
+          Seq(spark.read.parquet(s"$dir/read$x").select(col("name")).distinct())
+        }, { case (_, x) => count1("entities")(StreamOps.entitiesStoreRead(spark, s"$dir/read$x")) }))
     }
-
-    // Edges-on-arrival store: per-batch ingest must stay batch-sized
-    // (one partition write, NO store read) while the store grows, and
-    // the rank read recomputes over the accumulated deduped edge set.
-    if (want("edges_store")) {
-      val tmp = java.nio.file.Files.createTempDirectory("edges_probe").toString
-      val store = s"$tmp/edges"
-      (0 until 10).foreach { bIdx =>
-        // each batch: a fresh 50k-edge symmetric band linked to the
-        // previous batch's range, plus 20% replayed overlap with it
-        val lo = bIdx * 40000L
-        val e = spark.range(lo, lo + 50000L)
-          .select($"id".as("src"), ($"id" + 1).as("dst"))
-        val batch = e.unionAll(
-          e.select($"dst".as("src"), $"src".as("dst")))
-        val t0 = System.nanoTime()
-        graft.streaming.StreamOps.edgesIngestBatch(batch, bIdx.toLong, store)
-        val t = (System.nanoTime() - t0) / 1e9
-        if (bIdx == 4 || bIdx == 9) {
-          val tq0 = System.nanoTime()
-          val nRanked = graft.streaming.StreamOps
-            .pagerankStoreRead(spark, store, iters = 3).count()
-          val tq = (System.nanoTime() - tq0) / 1e9
-          println(f"""{"probe":"edges_store","batch":$bIdx,"ingest_sec":$t%.2f,"read_sec":$tq%.2f,"nodes":$nRanked}""")
-        } else
-          println(f"""{"probe":"edges_store","batch":$bIdx,"ingest_sec":$t%.2f}""")
-      }
-    }
-    // Entities-on-arrival store: per-batch ingest must stay batch-sized
-    // (one per-name agg + one partition write, NO store read) while the
-    // store's name dim grows; the entity read is dim-bounded (blocking
-    // + closure over folded summaries), never fact-count-bounded.
-    if (want("entities_store")) {
-      val tmp = java.nio.file.Files.createTempDirectory("ents_probe").toString
-      val store = s"$tmp/entities"
-      (0 until 8).foreach { bIdx =>
-        // each batch: 200k fact rows over a growing name dim with
-        // BOUNDED blocks — the block-key domain (ng) grows with the
-        // corpus while each block holds ≤ 16 name variants, the
-        // production blocking contract (block sizes bounded, block
-        // COUNT carries the growth; a coarse fixed key set would make
-        // the read quadratic by construction, not by operator fault)
-        val ng = 400L + bIdx * 200L
-        val lo = bIdx * 120000L
-        // block keys: 80% fresh per batch (block SIZE stays ≤ 16 while
-        // block COUNT — the name dim — grows), 20% REPLAYED from the
-        // previous batch (the edges probe's overlap discipline, advice
-        // r17 #3) so the store's cross-batch fold paths — per-name
-        // summary summation, min-nid representative takeover — execute
-        // at probe scale instead of every name being batch-unique
-        val keyBase = when(lit(bIdx) > 0 && $"id" % 5 === 0,
-          lit((bIdx - 1) * 100000L)).otherwise(lit(bIdx * 100000L))
-        val batch = spark.range(lo, lo + 200000L).select(
-          $"id".as("p_partkey"),
-          concat(lit("blk"), (keyBase + $"id" % ng).cast("string"),
-            lit(" nn"), (keyBase + $"id" % ng).cast("string"),
-            lit(" v"), (($"id" / ng) % 16).cast("string")).as("p_name"),
-          concat(lit("Brand#"), ($"id" % 25).cast("string")).as("p_brand"),
-          concat(lit("TYPE "), ($"id" % 11).cast("string")).as("p_type"),
-          ($"id" % 50).cast("int").as("p_size"))
-        val t0 = System.nanoTime()
-        graft.streaming.StreamOps.entitiesIngestBatch(batch, bIdx.toLong, store)
-        val t = (System.nanoTime() - t0) / 1e9
-        if (bIdx == 3 || bIdx == 7) {
-          val tq0 = System.nanoTime()
-          val nEnts = graft.streaming.StreamOps
-            .entitiesStoreRead(spark, store).count()
-          val tq = (System.nanoTime() - tq0) / 1e9
-          val names = spark.read.parquet(store).select($"name").distinct().count()
-          println(f"""{"probe":"entities_store","batch":$bIdx,"ingest_sec":$t%.2f,"read_sec":$tq%.2f,"entities":$nEnts,"names":$names}""")
-        } else
-          println(f"""{"probe":"entities_store","batch":$bIdx,"ingest_sec":$t%.2f}""")
-      }
-    }
-    spark.stop()
   }
 }

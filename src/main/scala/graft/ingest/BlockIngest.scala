@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   *     mirroring unwrap_or_default (`evm_consumer.rs:46-50,66-74`)
   *   A14/A15 sink + uniqueness     → parent-before-child parquet writes
   *     (fixes the FK-ordering bug `evm_consumer.rs:124-128` vs
-  *     `0001_initial.sql:39`) with dedup-on-write
-  *     (fixes duplicate ingestion, SURVEY §0.2.5)
+  *     `0001_initial.sql:39`) with dedup-on-write within one write
+  *     (duplicate ingestion, SURVEY §0.2.5 — see "Idempotence" below)
   *   A6 historical backfill        → spark.range + mapPartitions fan-out
   *     (the reference fetches serially, `evm_producer.rs:58-69`)
   *
@@ -31,6 +31,15 @@ import org.apache.spark.sql.types._
   * exploded transactions once, for their dedup. The logs sink adds one
   * join against the landed transaction keys. Bronze tables partition by
   * chain_name so per-chain queries prune.
+  *
+  * Idempotence holds within one write only. Dedup and keep-latest see the
+  * batch in hand: inside one `writeBronze` call a redelivered block
+  * collapses and a reorged height keeps its latest block and only that
+  * block's transactions. A block that a LATER write redelivers or reorgs
+  * is appended again; `compactBronzeBlocks` resolves it afterwards, and
+  * only for the blocks table — transactions and logs of the replaced or
+  * repeated block stay in bronze. A replayed stream micro-batch appends
+  * again too.
   */
 object BlockIngest {
 
@@ -204,8 +213,10 @@ object BlockIngest {
     * array through the canonical window a second time. The persisted plan
     * keeps AQE's coalesced partitioning (`GraftSession.configs`), so a
     * small batch runs a few tasks, not one per shuffle partition.
-    * Parquet append = the idempotent-upsert surface (compact with
-    * keepCanonical). */
+    * Dedup and keep-latest hold within this call only: the writes are
+    * Parquet appends, so a block that a later call redelivers or reorgs
+    * lands again, and only `compactBronzeBlocks` resolves it — for the
+    * blocks table alone, never its transactions. */
   def writeBronze(parsed: DataFrame, outDir: String): Unit = {
     val blocks = canonicalBlocks(parsed).persist()
     try {
@@ -331,9 +342,12 @@ object BlockIngest {
   }
 
   /** A4/A9 live path: file-source stream of JSON block messages with
-    * checkpointed offsets (the ack analog) and idempotent per-batch
-    * dedup-append. startingOffsets=earliest ⇔ the reference's
-    * InitialPosition::Earliest (`pulsar.rs:31-32`). */
+    * checkpointed offsets (the ack analog); each micro-batch is one
+    * `writeBronze` call, so dedup and keep-latest hold within the batch
+    * only. The batch id is not used: a micro-batch replayed after a crash
+    * between its write and the offset commit appends again.
+    * startingOffsets=earliest ⇔ the reference's InitialPosition::Earliest
+    * (`pulsar.rs:31-32`). */
   def streamBronze(
       spark: SparkSession,
       inDir: String,

@@ -70,7 +70,7 @@ object Cluster {
     * @return (vec_id, deg, role core|border|noise, cluster; −1 = noise),
     *         one row per input vector, unordered. */
   /** The eps-graph pair stage — (u, v) with u < v and round(cos,4) ≥
-    * eps. ONE builder for [[dbscan]] and the ScaleProbe `dbscan` arm
+    * eps. ONE builder for [[dbscan]] and the ScaleProbe `dbscan.pairs` entry
     * (the probe must time the operator's own quadratic stage, never a
     * copy). */
   private[graft] def epsPairs(embs: DataFrame, eps: Double): DataFrame = {
@@ -183,7 +183,7 @@ object Cluster {
     * route can emit no edge the exact builder would not (one-sided
     * error, pinned by ClusterSpec). Candidate volume ≈ n²·nprobe²/cells
     * = O(n·cellSize): linear where the product is quadratic — the
-    * ScaleProbe `dbscan_ann` arm measures the growth at 2k→8k→32k
+    * ScaleProbe `dbscan_ann` entry measures the growth at 2k→8k→32k
     * vectors. Downstream DBSCAN algebra is unchanged (degree, core
     * rule, components, border election are edge-frame consumers). */
   private[graft] def epsPairsAnn(embs: DataFrame, eps: Double,

@@ -702,7 +702,7 @@ object Dedup {
     * [[graft.operators.Ann.kmeans]] codebook (broadcast argmax routing —
     * narrow), then [[semanticDedup]] prunes within the learned cells.
     * Size k ∝ corpus so per-cell occupancy stays constant and total pair
-    * work stays linear (the `semdedup` ScaleProbe measures exactly this
+    * work stays linear (the ScaleProbe `semdedup` entry measures exactly this
     * at fixed cells). The q_dedup_semantic oracle query uses the label
     * clustering instead only because a lossy learned clustering has no
     * cross-engine mirror; the routing itself is what q_ann_ivf checks. */
@@ -744,9 +744,9 @@ object Dedup {
       // in several bands recomputes the (cheap, codegen'd) cosine up to
       // `bands` times, but the dedup shuffle carries only the (d1, d2,
       // cos) rows that SURVIVED the threshold — never the vectors. The
-      // round-6 ScaleProbe caught the alternative ordering (dedup before
-      // verify) shuffling candidate×vector rows: 4.4 GB and a 70x wall
-      // blowup at 32k vectors (125 per bucket, ~8M candidates).
+      // alternative ordering (dedup before verify) was measured shuffling
+      // candidate×vector rows: 4.4 GB and a 70x wall blowup at 32k
+      // vectors (125 per bucket, ~8M candidates).
       .select(col("d1"), col("d2"),
         round(Sim.cosine(col("v1"), col("v2")), 4).as("cos"))
       .filter(col("cos") >= threshold)
@@ -1010,8 +1010,9 @@ object Dedup {
     // md5 recipe on THAT key — so entire near-dup groups move between
     // splits atomically, singletons degrade to exactly q_sample_hash's
     // per-doc assignment. Cost over plain hash split: the pair pipeline
-    // (banded, never all-pairs) + component closure — both probe-measured
-    // sublinear; the split itself stays one narrow projection.
+    // (banded, never all-pairs) + component closure — both measured
+    // sublinear (the ScaleProbe `docs.near_dups` and `components`
+    // entries); the split itself stays one narrow projection.
     "q_split_leakage_free" -> ((s, dir) => {
       val docs = documents(s, dir).filter(col("doc_id") < 500)
       val pairs = minhashPairs500(s, dir)

@@ -223,7 +223,8 @@ object Freq {
     * (day, v), so one fat day spreads across slices; per-day rank =
     * global ordinal − the day's prefix offset, a day-count-sized prefix
     * sum) — the round-13 fat-day probe measured the single-task wall at
-    * 6.3× on 16× rows; the routed arm is what replaces it. The price of
+    * 6.3× on 16× rows; the routed arm is what replaces it (the ScaleProbe
+    * `quantile_sketch.fat_day` entry). The price of
     * the routing decision is one day-count aggregate over the facts
     * (map-side partial, day-sized output), which also SUPPLIES n_day to
     * both arms — the old count-over-window is gone, so the light path

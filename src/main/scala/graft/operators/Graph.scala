@@ -30,11 +30,12 @@ import graft.util.SmallInput
   * Never an all-pairs product, never a widening lineage (each round's rank
   * frame — one row per node — is checkpointed, so no round re-executes its
   * predecessors and plan size stays constant; the same discipline
-  * ScaleProbe validated on Components and Ann.kmeans — see the `pagerank` /
-  * `pagerank_iters` probes). The node count enters as a broadcast 1-row
-  * aggregate, not a driver-side collect. On a cluster where ranks outgrow
-  * the broadcast budget (billions of nodes), flip the loop's join to a
-  * shuffle equi-join on src — the recurrence and oracle are unchanged.
+  * ScaleProbe measures on Components and Ann.kmeans — see its `pagerank`,
+  * `pagerank.iters`, `components` and `kmeans_iters` entries). The node
+  * count enters as a broadcast 1-row aggregate, not a driver-side collect.
+  * On a cluster where ranks outgrow the broadcast budget (billions of
+  * nodes), flip the loop's join to a shuffle equi-join on src — the
+  * recurrence and oracle are unchanged.
   */
 object Graph {
 
@@ -2005,7 +2006,7 @@ object Graph {
 
   /** The symmetrized %16-slice co-purchase graph as (src, dst) pairs —
     * ONE builder for the HyperBall family (the certified query, the
-    * graft_hyperball TVF, and ScaleProbe's `hyperball` arm must all run
+    * graft_hyperball TVF, and ScaleProbe's `hyperball` entries must all run
     * the same graph — the jaccardSliceEdges sharing discipline). */
   private[graft] def symmetrizedSliceEdges(s: SparkSession, dir: String): DataFrame = {
     val p = jaccardSliceEdges(s, dir)
@@ -2983,7 +2984,7 @@ object Graph {
   /** q_graph_jaccard's graph: %16-slice co-purchase edges (a < b,
     * distinct) — see the query comment for the slice rationale.
     * `private[graft]`, not private: GraphSpec's capped-no-op/recall pins
-    * and ScaleProbe's jaccard_hub probe must test the SAME edge builder
+    * and ScaleProbe's jaccard_hub entries must test the SAME edge builder
     * the checked query runs — a drifted re-implementation would silently
     * pin a different graph. */
   private[graft] def jaccardSliceEdges(s: SparkSession, dir: String): DataFrame =
@@ -3046,7 +3047,7 @@ object Graph {
     // union-find driver arm (optimization round — the same output by
     // ComponentsSpec's arm-equality pin; the distributed min-label +
     // pointer-jumping path stays the over-cap 100 TB route and is
-    // measured by ScaleProbe's `components` probe, distributed only);
+    // measured by ScaleProbe's `components` entry, distributed only);
     // the oracle is a DuckDB recursive CTE propagating labels with the
     // l < dst prune (the component minimum always passes it, larger
     // labels are redundant), so the fixpoint is checked row by row.

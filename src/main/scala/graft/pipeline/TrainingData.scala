@@ -117,8 +117,10 @@ object TrainingData {
       // recursion finishes (>30 min even min-label pruned). The bound
       // exists for ORACLE tractability only; the unbounded-corpus path is
       // covered by the curate() operator itself (corpus-general,
-      // pointer-jumping components, ~2 s on the full sf0.1 corpus —
-      // measured by the ScaleProbe battery, not by this checked query).
+      // pointer-jumping components, ~2 s on the full sf0.1 corpus; its
+      // output is pinned by TrainingDataSpec "curate: full pipeline output
+      // shape and invariants", the component loop's growth by the
+      // ScaleProbe `components` entry — not by this checked query).
       val docs = graft.catalog.Tables.documents(s, dir)
         .filter(col("doc_id") < 1000)
       val embs = graft.catalog.Tables.embeddings(s, dir)

@@ -197,7 +197,8 @@ object Sim {
     // algebra is candidate-local — [[marginPairsFromCandidates]] is that
     // EXACT shared code path (this query = it over the bounded cross,
     // broadcastSums arm; the scale path = it over [[srpCandidates]],
-    // recall-pinned in OperatorsSpec, corpus-growth probe arm).
+    // recall-pinned in OperatorsSpec, growth in the ScaleProbe `margin`
+    // entry).
     "q_embed_margin_pairs" -> ((s, dir) => {
       import s.implicits._
       val k = 4

@@ -61,16 +61,16 @@ object Tpch {
   /** Unit price in exact e4 micro-units: floor(extendedprice·10⁴/quantity).
     * Both engines evaluate the same IEEE double product/quotient, and floor
     * of a bit-identical double is always portable (D.scala caveat).
-    * private[graft] so ScaleProbe's tpch_partsupp arm certifies the SAME
-    * expression the shipped queries run, not a copy that can drift. */
-  private[graft] def unitCostE4 =
+    * One definition for every derived-partsupp query (q2/q9/q11/q16/q20);
+    * PlanSpec "derived-partsupp TPC-H tier: fact pruned before the pair
+    * agg, one lineitem scan, no sort-merge" pins the plan it runs in. */
+  private def unitCostE4 =
     floor(col("l_extendedprice") * 10000 / col("l_quantity")).cast("long")
 
   /** Per-row revenue in exact e4 micro-units: a 2-decimal price × a
     * 2-decimal discount complement has ≤4 fractional digits, so the
-    * DECIMAL(30,8)·10⁴ product is integral and the BIGINT cast exact.
-    * Shared with ScaleProbe for the same no-drift reason. */
-  private[graft] def revE4 =
+    * DECIMAL(30,8)·10⁴ product is integral and the BIGINT cast exact. */
+  private def revE4 =
     ((dec4(col("l_extendedprice")) *
       (lit(1) - dec4(col("l_discount")))).cast("decimal(30,8)") * lit(10000))
       .cast("long")

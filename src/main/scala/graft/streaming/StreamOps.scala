@@ -1699,7 +1699,7 @@ object StreamOps {
     * never facts) and pays blocking + closure at read time: per-batch
     * ingest is batch-sized (one agg + one partition write, no store
     * read), the read is name-dim-bounded regardless of facts ingested
-    * (the `entities_store` probe arm measures both). Surfaced in SQL as
+    * (the ScaleProbe `entities_store` entries measure both). Surfaced in SQL as
     * graft_entities.
     *
     * Contract: batches PARTITION the record stream (the quantile-store
