@@ -290,14 +290,18 @@ object BlockIngest {
     val flagged = dedupLogs(normalizeLogs(parsedLogs))
       .join(parents, Seq("chain_name", "block_number", "transaction_hash"), "left")
       .localCheckpoint()
-    flagged.filter(col("landed").isNotNull).drop("landed")
-      .write.mode("append").partitionBy("chain_name")
-      .parquet(s"$outDir/logs")
-    val orphans = flagged.filter(col("landed").isNull).drop("landed")
-    if (!orphans.isEmpty) {
-      orphans.write.mode("append").partitionBy("chain_name")
-        .parquet(s"$outDir/logs_quarantine")
-    }
+    // released after both writes, so repeated calls in one session do
+    // not accumulate the flagged logs' blocks
+    try {
+      flagged.filter(col("landed").isNotNull).drop("landed")
+        .write.mode("append").partitionBy("chain_name")
+        .parquet(s"$outDir/logs")
+      val orphans = flagged.filter(col("landed").isNull).drop("landed")
+      if (!orphans.isEmpty) {
+        orphans.write.mode("append").partitionBy("chain_name")
+          .parquet(s"$outDir/logs_quarantine")
+      }
+    } finally graft.util.Frames.releaseCheckpoint(flagged)
   }
 
   /** Compaction: rewrite a bronze blocks table keeping only canonical rows

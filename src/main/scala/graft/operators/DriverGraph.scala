@@ -12,6 +12,10 @@ import scala.collection.mutable.{ArrayBuffer, HashMap, HashSet}
   * equality per operator; the distributed chain stays the over-cap
   * 100 TB fallback and ScaleProbe keeps measuring it distributed only).
   *
+  * One rank function, [[pagerank]], serves global, weighted and
+  * personalized PageRank (the frame side's one loop is
+  * [[Graph.pagerankLoop]]).
+  *
   * Everything here is private to the operators package — the public
   * surface stays the DataFrame operators, which enter these arms
   * through [[graft.util.SmallInput]]. */
@@ -19,7 +23,7 @@ private[operators] object DriverGraph {
 
   /** (src -> out-neighbor list) adjacency over directed edge rows,
     * duplicates preserved (the frame loops count edge ROWS). */
-  private def adjacency(ed: Array[(Long, Long)]): java.util.HashMap[Long, ArrayBuffer[Long]] = {
+  private[operators] def adjacency(ed: Array[(Long, Long)]): java.util.HashMap[Long, ArrayBuffer[Long]] = {
     val adj = new java.util.HashMap[Long, ArrayBuffer[Long]]
     ed.foreach { case (u, v) =>
       var b = adj.get(u)
@@ -29,10 +33,10 @@ private[operators] object DriverGraph {
     adj
   }
 
-  /** Node-id index compression: ids → dense ints so the rank loops run
+  /** Node-id index compression: ids → dense ints so the loops run
     * over primitive arrays (a 1.2M-edge graph loops in milliseconds;
     * boxed maps were the first cut's cost). */
-  private final class Ids {
+  private[operators] final class Ids {
     val map = new java.util.HashMap[Long, Integer]
     val ids = ArrayBuffer.empty[Long]
     def add(x: Long): Int = {
@@ -46,77 +50,37 @@ private[operators] object DriverGraph {
     def n: Int = ids.length
   }
 
-  /** The shared rank-loop core: contribution c(u) per source node per
-    * round, in-sums over edges (dst outside the src domain discarded —
-    * the frame's inner rank join), seed-gated or uniform base term. */
-  private def rankLoop(srcIdx: Array[Int], dstIdx: Array[Int], n: Int,
-      contrib: (Array[Long], Int) => Long, base: Int => Long,
-      init: Int => Long, iters: Int): Array[Long] = {
-    var rank = Array.tabulate(n)(init)
-    val in = new Array[Long](n)
-    for (_ <- 1 to iters) {
-      java.util.Arrays.fill(in, 0L)
-      var i = 0
-      while (i < srcIdx.length) {
-        val d = dstIdx(i)
-        if (d >= 0) in(d) += contrib(rank, srcIdx(i))
-        i += 1
-      }
-      val next = new Array[Long](n)
-      var v = 0
-      while (v < n) { next(v) = base(v) + (85L * in(v)) / 100L; v += 1 }
-      rank = next
-    }
-    rank
-  }
-
-  /** Integer PageRank — [[Graph.pagerank]]'s recurrence verbatim:
-    * outdeg = edge-row count per src, n = |src domain|, r0 = mass div n,
-    * r' = (15·(mass div n)) div 100 + (85·Σ r div outdeg) div 100.
-    * All operands non-negative, so Long `/` = the frame's `div`. */
-  def pagerank(ed: Array[(Long, Long)], iters: Int, mass: Long): Seq[(Long, Long)] = {
+  /** Integer PageRank — [[Graph.pagerankLoop]]'s one recurrence for
+    * the global, weighted and personalized operators: W_u = Σ w per
+    * src, |S| = seeds present in the src domain (every node when
+    * `seeds` is None), r0 = [v∈S]·(mass div |S|),
+    * r' = [v∈S]·((15·(mass div |S|)) div 100) + (85·Σ (r·w) div W_u) div 100,
+    * dst outside the src domain discarded (the frame's inner rank join).
+    * All operands non-negative, so Long `/` = the frame's `div`. Returns
+    * None when a seed set has no member in the graph — the operator's
+    * loud-failure contract. */
+  def pagerank(ed: Array[(Long, Long, Long)], seeds: Option[Array[Long]],
+      iters: Int, mass: Long): Option[Seq[(Long, Long)]] = {
     val ids = new Ids
     val srcIdx = new Array[Int](ed.length)
     var i = 0
     while (i < ed.length) { srcIdx(i) = ids.add(ed(i)._1); i += 1 }
     val n = ids.n
-    if (n == 0) return Seq.empty
-    val dstIdx = new Array[Int](ed.length)
-    i = 0
-    while (i < ed.length) { dstIdx(i) = ids.get(ed(i)._2); i += 1 }
-    val outdeg = new Array[Long](n)
-    srcIdx.foreach(outdeg(_) += 1L)
-    val r0 = mass / n
-    val base = (15L * r0) / 100L
-    val rank = rankLoop(srcIdx, dstIdx, n,
-      (r, u) => r(u) / outdeg(u), _ => base, _ => r0, iters)
-    (0 until n).map(v => (ids.ids(v), rank(v)))
-  }
-
-  /** Weighted integer PageRank — [[Graph.pagerankWeighted]]: per-edge
-    * contribution (rank·w) div wout, wout = Σ w per src. */
-  def pagerankWeighted(ed: Array[(Long, Long, Long)], iters: Int,
-      mass: Long): Seq[(Long, Long)] = {
-    val ids = new Ids
-    val srcIdx = new Array[Int](ed.length)
-    var i = 0
-    while (i < ed.length) { srcIdx(i) = ids.add(ed(i)._1); i += 1 }
-    val n = ids.n
-    if (n == 0) return Seq.empty
+    val isSrc = Array.fill(n)(seeds.isEmpty)
+    seeds.foreach(_.foreach { s => val v = ids.get(s); if (v >= 0) isSrc(v) = true })
+    val ns = isSrc.count(identity)
+    if (ns == 0) return if (seeds.isEmpty) Some(Seq.empty) else None
     val dstIdx = new Array[Int](ed.length)
     val ws = new Array[Long](ed.length)
-    i = 0
-    while (i < ed.length) {
-      dstIdx(i) = ids.get(ed(i)._2); ws(i) = ed(i)._3; i += 1
-    }
     val wout = new Array[Long](n)
     i = 0
-    while (i < ed.length) { wout(srcIdx(i)) += ws(i); i += 1 }
-    val r0 = mass / n
+    while (i < ed.length) {
+      dstIdx(i) = ids.get(ed(i)._2); ws(i) = ed(i)._3; wout(srcIdx(i)) += ws(i)
+      i += 1
+    }
+    val r0 = mass / ns
     val base = (15L * r0) / 100L
-    // weighted contributions divide per EDGE, so the shared core's
-    // per-source contrib does not fit — inline the loop with the w term
-    var rank = Array.fill(n)(r0)
+    var rank = Array.tabulate(n)(v => if (isSrc(v)) r0 else 0L)
     val in = new Array[Long](n)
     for (_ <- 1 to iters) {
       java.util.Arrays.fill(in, 0L)
@@ -126,41 +90,8 @@ private[operators] object DriverGraph {
         if (d >= 0) in(d) += (rank(srcIdx(i)) * ws(i)) / wout(srcIdx(i))
         i += 1
       }
-      val next = new Array[Long](n)
-      var v = 0
-      while (v < n) { next(v) = base + (85L * in(v)) / 100L; v += 1 }
-      rank = next
+      rank = Array.tabulate(n)(v => (if (isSrc(v)) base else 0L) + (85L * in(v)) / 100L)
     }
-    (0 until n).map(v => (ids.ids(v), rank(v)))
-  }
-
-  /** Personalized PageRank — [[Graph.pagerankPersonalized]]: seeds are
-    * intersected with the src domain FIRST (|S| counts only present
-    * seeds); restart mass is seed-gated. Returns None when no seed
-    * appears in the graph — the operator's loud-failure contract. */
-  def pagerankPersonalized(ed: Array[(Long, Long)], seeds: Array[Long],
-      iters: Int, mass: Long): Option[Seq[(Long, Long)]] = {
-    val ids = new Ids
-    val srcIdx = new Array[Int](ed.length)
-    var i = 0
-    while (i < ed.length) { srcIdx(i) = ids.add(ed(i)._1); i += 1 }
-    val n = ids.n
-    val present = seeds.distinct.filter(ids.get(_) >= 0)
-    if (present.isEmpty) return None
-    val dstIdx = new Array[Int](ed.length)
-    i = 0
-    while (i < ed.length) { dstIdx(i) = ids.get(ed(i)._2); i += 1 }
-    val outdeg = new Array[Long](n)
-    srcIdx.foreach(outdeg(_) += 1L)
-    val ns = present.length.toLong
-    val isSrc = new Array[Boolean](n)
-    present.foreach(s => isSrc(ids.get(s)) = true)
-    val r0 = mass / ns
-    val seedBase = (15L * r0) / 100L
-    val rank = rankLoop(srcIdx, dstIdx, n,
-      (r, u) => r(u) / outdeg(u),
-      v => if (isSrc(v)) seedBase else 0L,
-      v => if (isSrc(v)) r0 else 0L, iters)
     Some((0 until n).map(v => (ids.ids(v), rank(v))))
   }
 

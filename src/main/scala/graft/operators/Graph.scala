@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Tables._
+import graft.util.Frames.releaseCheckpoint
 import graft.util.SmallInput
 
 /** Link-analysis over an edge list — the iterative-graph workload family
@@ -21,10 +22,10 @@ import graft.util.SmallInput
   * The damping update is the standard r' = 0.15/N + 0.85·Σ r/outdeg with
   * both products carried through exact integer ops.
   *
-  * 100 TB posture: the edge frame is materialized ONCE (persisted bare
-  * (src, dst) pairs, hash-partitioned on dst), then every iteration
+  * 100 TB posture: the edge frame is materialized ONCE (persisted
+  * (src, dst[, w]) rows, hash-partitioned on dst), then every iteration
   * broadcasts the node-count-sized rank state (which carries the constant
-  * out-degrees) into the join — edges never reshuffle in the loop; the
+  * out-weights) into the join — edges never reshuffle in the loop; the
   * only wide op per round is the contribution aggregate on dst, which
   * lands on the edge frame's own partitioning.
   * Never an all-pairs product, never a widening lineage (each round's rank
@@ -39,289 +40,182 @@ import graft.util.SmallInput
   */
 object Graph {
 
-  /** Fixed-iteration integer PageRank.
+  /** Fixed-iteration integer PageRank — [[pagerankLoop]] at w ≡ 1 and
+    * no seeds.
     *
     * @param edges directed (src BIGINT, dst BIGINT) pairs; every node must
     *              appear as a src (no dangling nodes) — symmetrized
     *              undirected graphs satisfy this by construction.
-    * @param iters Jacobi iterations (fixed count, not convergence-tested:
-    *              a fixed count is what an unrolled SQL oracle can mirror).
-    * @param mass  total rank mass in micro-units; per-node ranks are exact
-    *              integer shares of it.
-    * @param broadcastRanks rank-distribution strategy for the loop join.
-    *              `true` (default): broadcast the node-count-sized rank
-    *              frame each round — edges NEVER move after the one-time
-    *              layout; right whenever ranks fit the broadcast budget
-    *              (up to hundreds of millions of nodes on big executors).
-    *              `false`: the billions-of-nodes fallback — edges are laid
-    *              out by src instead, the rank frame shuffle-joins onto
-    *              that fixed layout (rank is the small side: only IT
-    *              moves for the join), and the per-round contribution
-    *              aggregate pays the one edge-sized exchange to dst that
-    *              broadcasting avoided. Identical recurrence, identical
-    *              output (unit-pinned); ScaleProbe "pagerank_fallback"
-    *              measures the crossover evidence at 64× edges.
-    * @return (node BIGINT, rank BIGINT) — one row per distinct src node.
-    */
+    * @return (node BIGINT, rank BIGINT) — one row per distinct src node. */
   def pagerank(edges: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ed = edges.select(col("src"), col("dst"))
-    // Driver arm (optimization round — the betweenness/Components
-    // small-input arm generalized to the rank loops): under
-    // the cap the edge list collects once and all `iters` rounds run
-    // as integer loops — the measured distributed cost was per-round
-    // scheduling (5 rounds × join + agg + checkpoint jobs on node-sized
-    // frames), not data. Over cap the loop below runs unchanged;
-    // GraphSpec pins arm equality.
-    // Cap 2M (not the family's 1M): the rank-family graphs are bare
-    // 2-3 BIGINT columns (2M rows ≈ 48 MB of values), and the sf0.1
-    // part↔supplier graph symmetrizes to 1.18M rows — a 1M cap made
-    // every rank query pay the probe AND the distributed loop.
-    SmallInput.takePairs(ed, SmallInput.EdgeCap).foreach { arr =>
-      return edges.sparkSession
-        .createDataFrame(DriverGraph.pagerank(arr, iters, mass))
-        .toDF("node", "rank")
-    }
-    // The big frame is touched 1×/iteration; its layout is decided HERE,
-    // once: hash-partitioned on the loop's join-free side — dst under
-    // broadcastRanks (the contribution aggregate lands on co-located
-    // data), src under the shuffle fallback (the rank join lands on
-    // co-located data and only the rank frame moves) — and materialized
-    // as the BARE (src, dst) pairs. outdeg is NOT attached to edges:
-    // rank/outdeg is per-NODE state, so it rides in the node-count-sized
-    // rank frame instead — that deletes an edge-scale join + its
-    // exchange from the one-time layout AND narrows the persisted cache
-    // by a third (round-12 spot-measured at sf0.1: 3.2-3.8s → 2.6-2.9s
-    // for the whole query).
-    // persist, NOT localCheckpoint: the edge frame is the big one, and a
-    // checkpoint's RDD storage is unreleasable through the Dataset API —
-    // back-to-back pagerank calls in one session would accrete pinned
-    // edge copies until executors OOM (the pagerank_fallback probe hit
-    // exactly that at 64× edges in an 8 GB heap). A persisted frame reads
-    // identically in the loop (columnar-compressed, cheaper than row
-    // storage) and is unpersisted before return. Lineage truncation is
-    // only needed on the per-round RANK frame, which keeps localCheckpoint
-    // below.
-    val edP = ed
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // One row per node (every node appears as a src by contract) WITH its
-    // constant out-degree — this frame *is* the initial rank state; no
-    // separate nodes-distinct pass, and outdeg is carried through every
-    // round's checkpoint so the loop never re-derives it. Checkpointed:
-    // ncnt below re-reads it in EVERY round's broadcast — left lazy, each
-    // round would re-run the edge-scale degree aggregate (measured: that
-    // alone costs more than the whole loop).
-    try {
-    val deg = edP.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    try {
-    val ncnt = deg.agg(count(lit(1)).as("n"))
-    var rank = deg.crossJoin(broadcast(ncnt))
-      .select(col("src").as("node"), col("outdeg"),
-        expr(s"$mass div n").as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      // rank is node-count-sized (a k-means-codebook-scale frame, not an
-      // edge-scale one): pre-divide rank by outdeg per NODE and broadcast
-      // the quotient so the edge frame never reshuffles for the join; the
-      // agg by dst then runs on the edge frame's own partitioning.
-      // Fallback: shuffle-join the quotient onto the src-partitioned edge
-      // layout (rank alone moves) and pay the dst exchange in the
-      // aggregate. Each round's rank is materialized (21k-row job) —
-      // chained lazily, every round would re-execute all prior rounds.
-      val contribSrc = rank.select(col("node").as("src"),
-        expr("rank div outdeg").as("c"))
-      val contrib = (if (broadcastRanks) edP.join(broadcast(contribSrc), "src")
-                     else edP.join(contribSrc, "src"))
-        .select(col("dst"), col("c"))
-      val in = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-      // in_sum is node-count-sized like rank itself — broadcast it into
-      // the dangling-node left join (planner stats on an agg output are
-      // too pessimistic to pick this alone; unhinted this planned as a
-      // sort-merge join, two exchanges per round on 21k-row frames)
-      val next = rank.select(col("node"), col("outdeg"))
-        .join(broadcast(in.select(col("dst").as("node"), col("in_sum"))),
-          Seq("node"), "left")
-        .crossJoin(broadcast(ncnt))
-        .select(col("node"), col("outdeg"),
-          (expr(s"(15 * ($mass div n)) div 100") +
-            expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
-        .localCheckpoint()
-      // the superseded round's checkpoint blocks are dead the moment the
-      // next round materializes — release them NOW rather than at the
-      // next driver GC (a 50-iteration run on a big node set would
-      // otherwise hold every round's frame simultaneously)
-      releaseCheckpoint(rank)
-      rank = next
-    }
-    rank.select(col("node"), col("rank"))
-    // Nested finallys, not success-path-only: a failure at ANY point —
-    // including deg's own eager checkpoint, which the outer try covers —
-    // must still release the edge-scale cache, or repeated calls in one
-    // session accrete pinned copies — the exact accretion this
-    // persist/unpersist design exists to prevent. The returned rank is an
-    // eagerly materialized checkpoint, independent of the edge frame and
-    // of deg (whose checkpoint is likewise dead once the loop ends).
-    } finally releaseCheckpoint(deg)
-    } finally edP.unpersist(blocking = false)
-  }
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame =
+    pagerankLoop(edges.select(col("src"), col("dst")), lit(1L), None, iters,
+      mass, broadcastRanks)
 
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.util.Frames.releaseCheckpoint(df)
-
-  /** Weighted integer PageRank — [[pagerank]] with edge weights: a
+  /** Weighted integer PageRank — [[pagerankLoop]] with no seeds: a
     * node's mass splits across its out-edges IN PROPORTION TO w (the
     * transfer-volume/co-occurrence-count semantics every production
-    * graph carries; the unweighted operator is the w ≡ 1 special case,
-    * and GraphSpec pins bit-equality on that degenerate input).
-    *
-    * Integer discipline unchanged: per-edge contribution is
-    * (rank·w) div W_src with W_src = Σ w over the node's out-edges —
-    * BIGINT throughout (rank ≤ mass and count-like weights keep the
-    * product far inside BIGINT), truncating `div` = DuckDB `//` on
-    * these all-positive quantities, so the result is bit-identical
-    * across engines and partitionings. Unlike the unweighted loop the
-    * quotient cannot be pre-divided per NODE (each edge divides a
-    * different product), so the broadcast rank state carries
-    * (rank, wout) and the per-edge multiply-divide runs edge-side —
-    * still narrow, still inside the one co-located join per round.
-    *
-    * Loop/layout discipline = [[pagerank]]'s verbatim: edge frame laid
-    * out once (dst under broadcastRanks, src under the shuffle
-    * fallback) and persisted; node-count-sized rank frame checkpointed
-    * per round with the superseded round released; dangling nodes
-    * forbidden by the same every-node-appears-as-src contract.
+    * graph carries).
     *
     * @param edges directed (src, dst, w BIGINT) — w ≥ 1; every node
     *              appears as a src (symmetrized graphs do by
     *              construction).
     * @return (node BIGINT, rank BIGINT). */
   def pagerankWeighted(edges: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame =
+    pagerankLoop(edges.select(col("src"), col("dst"), col("w")), col("w"), None,
+      iters, mass, broadcastRanks)
+
+  /** Personalized PageRank — [[pagerankLoop]] at w ≡ 1 with the restart
+    * mass concentrated on a seed set instead of spread uniformly. THE
+    * "related to these" primitive (recommendation seeds,
+    * account-of-interest neighborhoods, topic-conditioned importance)
+    * that global pagerank cannot express: rank mass can only reach nodes
+    * via paths from S, so the result IS proximity to the seed set.
+    *
+    * @param edges   directed (src, dst); every node appears as a src.
+    * @param sources (node BIGINT) seed set, non-empty.
+    * @return (node, rank) — nodes unreachable from S rank 0. */
+  def pagerankPersonalized(edges: DataFrame, sources: DataFrame, iters: Int = 5,
+      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame =
+    pagerankLoop(edges.select(col("src"), col("dst")), lit(1L), Some(sources),
+      iters, mass, broadcastRanks)
+
+  /** The one integer PageRank loop. Global, weighted and personalized
+    * PageRank are one recurrence over weighted edges and a restart set
+    * S (every node when `seeds` is None):
+    *
+    *   r0(v) = [v∈S]·(mass div |S|)
+    *   r'(v) = [v∈S]·((15·(mass div |S|)) div 100)
+    *           + (85·Σ_{u→v} (r(u)·w) div W_u) div 100
+    *
+    * with W_u = Σ w over u's out-edges. Unweighted PageRank is w ≡ 1
+    * ((r·1) div outdeg = r div outdeg), global PageRank is S = every
+    * node (|S| = n), and GraphSpec pins both degenerations bit-for-bit.
+    * Seeds are intersected with the src domain before |S| is taken (an
+    * absent seed would otherwise inflate |S| while getting no rank row,
+    * silently discarding its share of the restart mass — a typo'd
+    * graft_ppr vararg would be indistinguishable from a disconnected
+    * node); all-absent seeds fail loudly instead of returning all-zero
+    * ranks.
+    *
+    * Integer discipline: BIGINT throughout (rank ≤ mass and count-like
+    * weights keep r·w far inside BIGINT); `div` truncation (= floor on
+    * these all-positive quantities) matches DuckDB `//` exactly, and
+    * integer sums are associative, so the result is bit-identical
+    * regardless of partitioning.
+    *
+    * Driver arm: under [[SmallInput.EdgeCap]] the edge list collects
+    * once and all `iters` rounds run as integer loops
+    * ([[DriverGraph.pagerank]]) — the measured distributed cost there
+    * was per-round scheduling, not data. GraphSpec pins arm equality.
+    *
+    * Distributed loop: the edge frame's layout is decided once —
+    * hash-partitioned on dst under `broadcastRanks` (the contribution
+    * aggregate lands on co-located data), on src under the shuffle
+    * fallback (the rank join lands on co-located data and only the rank
+    * frame moves) — and persisted, NOT localCheckpointed: a
+    * checkpoint's RDD storage is unreleasable through the Dataset API,
+    * so back-to-back calls in one session would accrete pinned edge
+    * copies until executors OOM (the pagerank_fallback probe hit
+    * exactly that at 64× edges in an 8 GB heap). W_u, the restart term
+    * and the rank ride in the node-count-sized rank frame, checkpointed
+    * per round with the superseded round released — no round
+    * re-executes its predecessors and plan size stays constant.
+    *
+    * @param edges (src, dst) plus the columns `w` reads.
+    * @param w     the edge weight: `col("w")`, or `lit(1L)` for the
+    *              unweighted operators. It is applied above the persisted
+    *              layout, so a constant weight is never shuffled or stored.
+    * @param iters Jacobi iterations (fixed count, not convergence-tested:
+    *              a fixed count is what an unrolled SQL oracle can mirror).
+    * @param mass  total rank mass in micro-units; per-node ranks are exact
+    *              integer shares of it.
+    * @param broadcastRanks `true`: broadcast the rank state each round —
+    *              edges NEVER move after the one-time layout; right
+    *              whenever ranks fit the broadcast budget. `false`: the
+    *              billions-of-nodes fallback — the rank frame
+    *              shuffle-joins onto the src layout and the per-round
+    *              aggregate pays the one edge-sized exchange to dst that
+    *              broadcasting avoided. Identical output (unit-pinned);
+    *              ScaleProbe "pagerank_fallback" measures the crossover.
+    * @return (node BIGINT, rank BIGINT) — one row per distinct src node. */
+  private def pagerankLoop(edges: DataFrame, w: Column,
+      seeds: Option[DataFrame], iters: Int, mass: Long,
+      broadcastRanks: Boolean): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // driver arm: [[pagerank]]'s, with the per-edge (rank·w) div wout
-    // quotient — bit-identical integers, GraphSpec pins arm equality
-    SmallInput.takeTriples(edges.select(col("src"), col("dst"), col("w")),
+    // an all-absent seed set returns None and falls through to the
+    // distributed chain's loud require below
+    SmallInput.takeTriples(edges.select(col("src"), col("dst"), w),
         SmallInput.EdgeCap).foreach { arr =>
-      return edges.sparkSession
-        .createDataFrame(DriverGraph.pagerankWeighted(arr, iters, mass))
-        .toDF("node", "rank")
+      val seedArr = seeds.map(_.select(col("node")).collect()
+        .map(_.getAs[Number](0).longValue))
+      DriverGraph.pagerank(arr, seedArr, iters, mass).foreach { out =>
+        return edges.sparkSession.createDataFrame(out).toDF("node", "rank")
+      }
     }
-    val edP = edges.select(col("src"), col("dst"), col("w"))
+    // a stored constant w cost ~10 % of the loop at 3M edges
+    val edL = edges
       .repartition(if (broadcastRanks) col("dst") else col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edP = edL.withColumn("w", w)
+    // Nested finallys: a failure at ANY point — including deg's own eager
+    // checkpoint — must still release the edge-scale cache. The returned
+    // rank is an eagerly materialized checkpoint, independent of both.
     try {
+    // one row per node (every node appears as a src by contract) with
+    // its constant W_u: checkpointed, because the restart-set count
+    // below re-reads it
     val deg = edP.groupBy(col("src")).agg(sum(col("w")).as("wout"))
       .localCheckpoint()
     try {
-    val ncnt = deg.agg(count(lit(1)).as("n"))
-    var rank = deg.crossJoin(broadcast(ncnt))
+    val present = seeds.map { s =>
+      val p = s.select(col("node").as("src")).distinct()
+        .join(deg.select(col("src")), Seq("src"), "left_semi")
+        .localCheckpoint()
+      require(p.limit(1).count() > 0,
+        "pagerankPersonalized: no seed appears in the graph")
+      p
+    }
+    val (flagged, ns) = present match {
+      case None => (deg.withColumn("is_src", lit(1L)),
+        deg.agg(count(lit(1)).as("ns")))
+      case Some(p) =>
+        (deg.join(broadcast(p.withColumn("is_src", lit(1L))), Seq("src"), "left"),
+          p.agg(count(lit(1)).as("ns")))
+    }
+    // the restart term is constant per node, so it is computed once and
+    // carried through each round's checkpoint
+    var rank = flagged.crossJoin(broadcast(ns))
       .select(col("src").as("node"), col("wout"),
-        expr(s"$mass div n").as("rank"))
+        expr(s"coalesce(is_src, 0L) * ($mass div ns)").as("rank"),
+        expr(s"coalesce(is_src, 0L) * ((15 * ($mass div ns)) div 100)").as("base"))
       .localCheckpoint()
+    present.foreach(releaseCheckpoint)
     for (_ <- 1 to iters) {
+      // the per-edge quotient (r·w) div W_u cannot be pre-divided per
+      // node, so the node-count-sized state (rank, W_u) joins edge-side
       val rState = rank.select(col("node").as("src"), col("rank"), col("wout"))
       val contrib = (if (broadcastRanks) edP.join(broadcast(rState), "src")
                      else edP.join(rState, "src"))
         .select(col("dst"), expr("(rank * w) div wout").as("c"))
       val in = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-      val next = rank.select(col("node"), col("wout"))
+      // in_sum is node-count-sized like rank itself — broadcast it into
+      // the left join (planner stats on an agg output are too
+      // pessimistic to pick this alone: unhinted this planned as a
+      // sort-merge join, two exchanges per round)
+      val next = rank.select(col("node"), col("wout"), col("base"))
         .join(broadcast(in.select(col("dst").as("node"), col("in_sum"))),
           Seq("node"), "left")
-        .crossJoin(broadcast(ncnt))
-        .select(col("node"), col("wout"),
-          (expr(s"(15 * ($mass div n)) div 100") +
-            expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
+        .select(col("node"), col("wout"), col("base"),
+          (col("base") + expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
         .localCheckpoint()
       releaseCheckpoint(rank)
       rank = next
     }
     rank.select(col("node"), col("rank"))
     } finally releaseCheckpoint(deg)
-    } finally edP.unpersist(blocking = false)
-  }
-
-  /** Personalized PageRank — the restart mass concentrated on a source
-    * set instead of spread uniformly: r'(v) = 15%·(mass div |S|)·[v∈S]
-    * + 85%·Σ inbound contributions. THE "related to these" primitive
-    * (recommendation seeds, account-of-interest neighborhoods,
-    * topic-conditioned importance) that global pagerank cannot express:
-    * rank mass can only reach nodes via paths from S, so the result IS
-    * proximity to the seed set. Same exact-integer discipline and the
-    * same layout/loop as [[pagerank]] — the ONLY change is the base
-    * term's indicator (a node-count-sized broadcast membership flag
-    * carried through the rank state, costing nothing per round).
-    *
-    * @param edges   directed (src, dst); every node appears as a src.
-    * @param sources (node BIGINT) seed set, distinct, non-empty.
-    * @return (node, rank) — nodes unreachable from S rank 0. */
-  def pagerankPersonalized(edges: DataFrame, sources: DataFrame, iters: Int = 5,
-      mass: Long = 1000000000000L, broadcastRanks: Boolean = true): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val ed = edges.select(col("src"), col("dst"))
-    // driver arm: seeds intersect the src domain in-memory (the same
-    // present-seeds rule); an all-absent seed set returns None and falls
-    // through to the distributed chain's loud require below
-    SmallInput.takePairs(ed, SmallInput.EdgeCap).foreach { arr =>
-      val seeds = sources.select(col("node")).collect()
-        .map(_.getAs[Number](0).longValue)
-      DriverGraph.pagerankPersonalized(arr, seeds, iters, mass).foreach { out =>
-        return edges.sparkSession.createDataFrame(out).toDF("node", "rank")
-      }
-    }
-    val edP = ed
-      .repartition(if (broadcastRanks) col("dst") else col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val deg = edP.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint()
-    try {
-    // Seeds intersected with the GRAPH's nodes before |S| is taken: a
-    // seed absent from the graph would otherwise inflate ns while
-    // getting no rank row — silently discarding its share of the
-    // restart mass (a typo'd graft_ppr vararg would be
-    // indistinguishable from a disconnected node). All-absent seeds
-    // fail loudly instead of returning all-zero ranks.
-    val src = sources.select(col("node")).distinct()
-      .join(deg.select(col("src").as("node")), Seq("node"), "left_semi")
-      .localCheckpoint()
-    require(src.limit(1).count() > 0,
-      "pagerankPersonalized: no seed appears in the graph")
-    val ns = src.agg(count(lit(1)).as("ns"))
-    // seed membership rides in the rank state (one more tiny column
-    // through each round's checkpoint) so the base term never re-joins
-    var rank = deg
-      .join(broadcast(src.select(col("node").as("src"), lit(1L).as("is_src"))),
-        Seq("src"), "left")
-      .crossJoin(broadcast(ns))
-      .select(col("src").as("node"), col("outdeg"),
-        coalesce(col("is_src"), lit(0L)).as("is_src"),
-        expr(s"coalesce(is_src, 0L) * ($mass div ns)").as("rank"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribSrc = rank.select(col("node").as("src"),
-        expr("rank div outdeg").as("c"))
-      val contrib = (if (broadcastRanks) edP.join(broadcast(contribSrc), "src")
-                     else edP.join(contribSrc, "src"))
-        .select(col("dst"), col("c"))
-      val in = contrib.groupBy(col("dst")).agg(sum(col("c")).as("in_sum"))
-      val next = rank.select(col("node"), col("outdeg"), col("is_src"))
-        .join(broadcast(in.select(col("dst").as("node"), col("in_sum"))),
-          Seq("node"), "left")
-        .crossJoin(broadcast(ns))
-        .select(col("node"), col("outdeg"), col("is_src"),
-          (expr(s"is_src * ((15 * ($mass div ns)) div 100)") +
-            expr("(85 * coalesce(in_sum, 0L)) div 100")).as("rank"))
-        .localCheckpoint()
-      releaseCheckpoint(rank)
-      rank = next
-    }
-    releaseCheckpoint(src)
-    rank.select(col("node"), col("rank"))
-    } finally releaseCheckpoint(deg)
-    } finally edP.unpersist(blocking = false)
+    } finally edL.unpersist(blocking = false)
   }
 
   /** Weighted single/multi-source shortest paths, round-capped — the
@@ -410,7 +304,7 @@ object Graph {
     * is what a 100 TB traversal can afford to re-touch per round, and on
     * unweighted graphs it computes exactly the Bellman-Ford fixpoint the
     * oracle's min-union rounds mirror (hop k is final the round it is
-    * first assigned). Same loop discipline as [[pagerank]]: edge frame
+    * first assigned). Same loop discipline as [[pagerankLoop]]: edge frame
     * materialized once, every frontier checkpointed so `dist` — a lazy
     * union of checkpointed frontiers — never re-executes a prior round.
     *
@@ -846,21 +740,41 @@ object Graph {
     * list — the standard graph-denoising pass (the k-core is where
     * cohesive structure lives; degree-1 tendrils and sparse fringe fall
     * away) that precedes motif/community analysis on noisy co-occurrence
-    * graphs. Fixed round count, not convergence-tested: a fixed count is
-    * what an unrolled SQL oracle can mirror exactly, convergence or not
-    * (same contract as pagerank's fixed Jacobi iterations); at the
-    * fixture's k=3 the peel stabilizes well inside 6 rounds.
+    * graphs. It is the s-core of [[kcorePeelWeighted]] at w ≡ 1 and
+    * s = k (a sum of ones is the degree count — bit-identical peel,
+    * GraphSpec-pinned).
+    *
+    * @return (node, deg) for surviving nodes — deg is the node's degree
+    *         WITHIN the peeled subgraph, ordered by node. */
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
+      broadcastKeep: Boolean = true): DataFrame =
+    kcoreLoop(edges.select(col("a"), col("b")), lit(1L), k.toLong, rounds,
+      broadcastKeep).withColumnRenamed("strength", "deg")
+
+  /** WEIGHTED k-core — the s-core generalization [Eidsaa & Almaas, PRE'13]:
+    * peel every node whose STRENGTH (incident edge-weight sum) is below
+    * `s`, so fifty one-off co-purchases don't outrank one 50-strong tie
+    * the way raw degree counts them. [[kcorePeel]] is the w ≡ 1 instance.
+    * Fixed round count, not convergence-tested: a fixed count is what an
+    * unrolled SQL oracle can mirror exactly, convergence or not (same
+    * contract as pagerank's fixed Jacobi iterations); at the fixture's
+    * k=3 the peel stabilizes well inside 6 rounds.
+    *
+    * Driver arm: under the cap one in-memory loop replaces rounds × (agg
+    * + 2 joins + 2 checkpoints); GraphSpec pins arm equality.
     *
     * Loop discipline = pagerank's: each round computes the
     * node-count-sized keep set ONCE (checkpointed, so both joins read
-    * the same materialized frame instead of re-running the degree
+    * the same materialized frame instead of re-running the strength
     * aggregate per reference — per-reference re-aliasing of a lazy agg
     * subtree defeats ReuseExchange, measured as 2 BroadcastExchanges in
     * the round plan even post-AQE), filters the (shrinking) edge frame
     * through two joins against it, and checkpoints each round's edge
     * frame with the superseded round — and the superseded keep —
-    * released eagerly.
+    * released eagerly. The per-round strength aggregate partial-sums
+    * map-side (the endpoint explode doubles rows; weights ride along).
     *
+    * @param edges undirected (a, b, w BIGINT), a < b, distinct, w ≥ 1.
     * @param broadcastKeep keep-set join strategy, pagerank's
     *        `broadcastRanks` mirror. `true` (default): broadcast the
     *        node-count-sized keep set into both edge joins — edges
@@ -872,73 +786,29 @@ object Graph {
     *        sized ever lands on the driver. Identical peel, identical
     *        output (GraphSpec-pinned); ScaleProbe "kcore_fallback"
     *        measures both arms under hub skew.
-    * @return (node, deg) for surviving nodes — deg is the node's degree
-    *         WITHIN the peeled subgraph, ordered by node. */
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-      broadcastKeep: Boolean = true): DataFrame = {
-    require(k >= 1 && rounds >= 1, s"need k/rounds >= 1, got $k $rounds")
-    // driver arm: the peel is the s-core at w ≡ 1 (sum of ones = count)
-    // — one in-memory loop replaces rounds × (agg + 2 joins + 2
-    // checkpoints); GraphSpec pins arm equality, over cap the chain runs
-    SmallInput.takePairs(edges.select(col("a"), col("b"))).foreach { arr =>
-      return edges.sparkSession
-        .createDataFrame(DriverGraph.kcorePeelWeighted(
-          arr.map(p => (p._1, p._2, 1L)), k.toLong, rounds))
-        .toDF("node", "deg")
-        .orderBy(col("node"))
-    }
-    var e = edges.select(col("a"), col("b")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      // Materialized once per round: node-count-sized (tiny next to the
-      // edge frame), read by BOTH joins below — the checkpoint is what
-      // makes "one keep computation per round" true in the executed plan.
-      val keep = e.select(explode(array(col("a"), col("b"))).as("v"))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("v"))
-        .localCheckpoint()
-      val keepJ = if (broadcastKeep) broadcast(keep) else keep
-      val next = e
-        .join(keepJ, col("a") === col("v")).drop("v")
-        .join(keepJ, col("b") === col("v")).drop("v")
-        .localCheckpoint()
-      releaseCheckpoint(e)
-      releaseCheckpoint(keep)
-      e = next
-    }
-    e.select(explode(array(col("a"), col("b"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .orderBy(col("node"))
-  }
-
-  /** WEIGHTED k-core — the s-core generalization [Eidsaa & Almaas, PRE'13]:
-    * peel every node whose STRENGTH (incident edge-weight sum) is below
-    * `s`, so fifty one-off co-purchases don't outrank one 50-strong tie
-    * the way raw degree counts them. [[kcorePeel]] is the w ≡ 1 instance
-    * (sum of ones = count — bit-identical peel, GraphSpec-pinned). Loop,
-    * checkpoint, and broadcast-fallback discipline shared verbatim; the
-    * per-round strength aggregate partial-sums map-side exactly as the
-    * degree count did (the struct explode doubles rows like the id
-    * explode did — weights ride along, nothing new shuffles).
-    *
-    * @param edges undirected (a, b, w BIGINT), a < b, distinct, w ≥ 1.
     * @return (node, strength) for surviving nodes — strength measured
     *         WITHIN the peeled subgraph, ordered by node. */
   def kcorePeelWeighted(edges: DataFrame, s: Long, rounds: Int,
-      broadcastKeep: Boolean = true): DataFrame = {
+      broadcastKeep: Boolean = true): DataFrame =
+    kcoreLoop(edges.select(col("a"), col("b"), col("w")), col("w"), s, rounds,
+      broadcastKeep)
+
+  /** The one peel loop behind [[kcorePeel]] and [[kcorePeelWeighted]]:
+    * `edges` holds (a, b) and whatever columns the weight `w` reads, so
+    * a constant weight is evaluated per row and never stored in the
+    * per-round edge checkpoints. */
+  private def kcoreLoop(edges: DataFrame, w: Column, s: Long, rounds: Int,
+      broadcastKeep: Boolean): DataFrame = {
     require(s >= 1 && rounds >= 1, s"need s/rounds >= 1, got $s $rounds")
-    // driver arm: the strength peel in memory (see [[kcorePeel]])
-    SmallInput.takeTriples(edges.select(col("a"), col("b"), col("w"))).foreach { arr =>
+    SmallInput.takeTriples(edges.select(col("a"), col("b"), w)).foreach { arr =>
       return edges.sparkSession
         .createDataFrame(DriverGraph.kcorePeelWeighted(arr, s, rounds))
         .toDF("node", "strength")
         .orderBy(col("node"))
     }
-    def endpoints(f: DataFrame) = f
-      .select(explode(array(
-        struct(col("a").as("v"), col("w")),
-        struct(col("b").as("v"), col("w")))).as("x"))
-      .select(col("x.v").as("v"), col("x.w").as("w"))
-    var e = edges.select(col("a"), col("b"), col("w")).localCheckpoint()
+    def endpoints(f: DataFrame) =
+      f.select(explode(array(col("a"), col("b"))).as("v"), w.as("w"))
+    var e = edges.localCheckpoint()
     for (_ <- 1 to rounds) {
       val keep = endpoints(e)
         .groupBy(col("v")).agg(sum(col("w")).as("d"))
@@ -957,6 +827,7 @@ object Graph {
       .groupBy(col("v").as("node")).agg(sum(col("w")).as("strength"))
       .orderBy(col("node"))
   }
+
 
   /** Per-edge triangle support over an undirected (a < b) edge list —
     * [[triangleCount]]'s Chiba–Nishizeki degree orientation verbatim
@@ -1103,34 +974,21 @@ object Graph {
     if (lgK <= 12) {
       SmallInput.takePairs(edges.select(col("src"), col("dst"))).foreach { take =>
         import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
-        val ids = new java.util.HashMap[Long, Integer]
-        val idList = scala.collection.mutable.ArrayBuffer.empty[Long]
-        def idx(x: Long): Int = {
-          val got = ids.get(x)
-          if (got != null) got.intValue
-          else { val i = idList.length; ids.put(x, i); idList += x; i }
-        }
+        val ids = new DriverGraph.Ids
         // state domain = src domain (the operator contract); a dst
         // outside it contributes nothing (the frame's inner state join)
-        val srcIdx = new Array[Int](take.length)
-        val dstRaw = new Array[Long](take.length)
+        val srcIdx = take.map(e => ids.add(e._1))
+        val n = ids.n
+        val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
         var i = 0
         while (i < take.length) {
-          srcIdx(i) = idx(take(i)._1)
-          dstRaw(i) = take(i)._2
-          i += 1
-        }
-        val n = idList.length
-        val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
-        i = 0
-        while (i < take.length) {
-          val d = ids.get(dstRaw(i))
-          if (d != null) adj(srcIdx(i)) += d.intValue
+          val d = ids.get(take(i)._2)
+          if (d >= 0) adj(srcIdx(i)) += d
           i += 1
         }
         var sk = Array.tabulate(n) { v =>
           val h = new HllSketch(lgK, TgtHllType.HLL_8)
-          h.update(idList(v))
+          h.update(ids.ids(v))
           h
         }
         val bs = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Long])
@@ -1152,7 +1010,7 @@ object Graph {
           (0 until n).foreach(v => bs(v) += est(sk(v)))
         }
         return edges.sparkSession.createDataFrame(
-          (0 until n).map(v => (idList(v), bs(v).toSeq)))
+          (0 until n).map(v => (ids.ids(v), bs(v).toSeq)))
           .toDF("node", "bs")
       }
     }
@@ -1362,13 +1220,7 @@ object Graph {
     * deterministic. */
   private[operators] def driverSigmaBfs(ed: Array[(Long, Long)],
       sources: Array[Long], radius: Int): Array[Array[(Long, Long, Long)]] = {
-    val adj = new java.util.HashMap[Long,
-      scala.collection.mutable.ArrayBuffer[Long]]
-    ed.foreach { case (u, v) =>
-      var b = adj.get(u)
-      if (b == null) { b = scala.collection.mutable.ArrayBuffer.empty[Long]; adj.put(u, b) }
-      b += v
-    }
+    val adj = DriverGraph.adjacency(ed)
     val perSource =
       new Array[Array[Array[(Long, Long, Long)]]](sources.length)
     java.util.stream.IntStream.range(0, sources.length).parallel().forEach { i =>
@@ -1404,13 +1256,8 @@ object Graph {
     * (zeros included, matching the frame union's dense output). */
   private def driverBrandesBackward(ed: Array[(Long, Long)],
       lvls: Array[Array[(Long, Long, Long)]], radius: Int): Seq[(Long, Long)] = {
-    import scala.collection.mutable.{ArrayBuffer, HashMap}
-    val adj = new java.util.HashMap[Long, ArrayBuffer[Long]]
-    ed.foreach { case (u, v) =>
-      var b = adj.get(u)
-      if (b == null) { b = ArrayBuffer.empty[Long]; adj.put(u, b) }
-      b += v
-    }
+    import scala.collection.mutable.HashMap
+    val adj = DriverGraph.adjacency(ed)
     val agg = HashMap.empty[Long, Long]
     var sigNext = HashMap.empty[(Long, Long), Long]
     var deltaNext = HashMap.empty[(Long, Long), Long]
@@ -2026,8 +1873,8 @@ object Graph {
     * structure, and a fixed count is what the oracle can mirror (the
     * pagerank/kcore contract).
     *
-    * Loop discipline = kcorePeel's: the node-count-sized label frame is
-    * materialized per round and either broadcast into the edge join
+    * Loop discipline = kcorePeelWeighted's: the node-count-sized label
+    * frame is materialized per round and either broadcast into the edge join
     * (default — edges never shuffle) or shuffle-joined
     * (`broadcastLabels = false`, the nodes-too-big-to-broadcast
     * fallback; GraphSpec pins arm equality). The per-round aggregate is

@@ -251,6 +251,23 @@ class BlockIngestSpec extends SparkSpec {
     assert(decoded.count() === 2)
   }
 
+  test("writeBronzeLogs: a call leaves no persisted RDD behind") {
+    import spark.implicits._
+    // one landed log (tx 0xt9) and one orphan, so both writes run
+    val rawLogs = Seq(
+      """{"log_index":"0","chain_name":"ARB","address":"0xc1","topics":["0xtop1"],"data":"0xd1","decoded_event":null,"transaction_hash":"0xt9","block_number":"100"}""",
+      """{"log_index":"0","chain_name":"ARB","address":"0xc2","topics":["0xdead"],"data":"0x","decoded_event":null,"transaction_hash":"0xt1","block_number":"100"}"""
+    ).toDF("value")
+    val out = java.nio.file.Files.createTempDirectory("logsrelease").toString
+    BlockIngest.writeBronze(parsed, out)
+    val txs = spark.read.parquet(s"$out/transactions")
+    val before = spark.sparkContext.getPersistentRDDs.size
+    BlockIngest.writeBronzeLogs(BlockIngest.parseLogs(rawLogs), txs, out)
+    assert(spark.sparkContext.getPersistentRDDs.size === before)
+    assert(spark.read.parquet(s"$out/logs").count() === 1)
+    assert(spark.read.parquet(s"$out/logs_quarantine").count() === 1)
+  }
+
   test("bronze partitioning: per-chain queries prune partitions at the scan") {
     val out = java.nio.file.Files.createTempDirectory("prune").toString
     BlockIngest.writeBronze(parsed, out)

@@ -231,10 +231,26 @@ class GraphSpec extends SparkSpec {
     assert(got(0L) > got(1L) && got(0L) > got(2L),
       "the seed must outrank its neighbors under restart")
     assert(got(1L) === got(2L), "symmetric neighbors tie")
-    // seeding EVERY node uniformly is NOT global pagerank's init-sensitive
-    // twin here, but total mass must still be conserved within floor slack
+    // one seed's restart mass is still conserved within floor slack
+    // (seeding every node IS global pagerank — pinned in its own test)
     val total = got.values.sum
     assert(total <= 1000000000000L && total > 0L)
+  }
+
+  test("pagerankPersonalized seeded with every src node is global pagerank, in both arms") {
+    // |S| = n and every restart flag set: the init and base terms are the
+    // global ones, so one rank loop serves both operators bit-for-bit
+    val rnd = new scala.util.Random(29)
+    val raw = Seq.fill(300)((rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val es = edgesDf((raw ++ raw.map(_.swap)).distinct)
+    val all = es.select(col("src").as("node")).distinct()
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val global = ranks(Graph.pagerank(es, iters = 4))
+    assert(ranks(Graph.pagerankPersonalized(es, all, iters = 4)) === global)
+    assert(ranks(distributed(Graph.pagerankPersonalized(es, all, iters = 4))) === global)
+    assert(ranks(distributed(Graph.pagerank(es, iters = 4))) === global)
   }
 
   test("q_graph_jaccard: matches a driver-side neighbor-set replay on the fixture graph") {
