@@ -197,16 +197,14 @@ object Bench {
     // leave the cache unrecoverable on recompute, since a checkpoint has
     // no lineage) — Dedup.minhashPairs500 switches to the checkpoint-free
     // candidates variant under the memo for exactly this reason. Cleanup
-    // runs OUTSIDE the timed region. SPARK_GRAFT_NO_CLEANUP=1 disables it
-    // (diagnosis mode).
-    val noCleanup = sys.env.get("SPARK_GRAFT_NO_CLEANUP").contains("1")
-    def releaseCheckpoints(): Unit = if (!noCleanup)
+    // runs OUTSIDE the timed region.
+    def releaseCheckpoints(): Unit =
       spark.sparkContext.getPersistentRDDs.values
         .filter(org.apache.spark.rdd.RddIntrospect.isLocalCheckpoint)
         .foreach(_.unpersist(blocking = false))
-    // Accretion instrumentation (judge-prescribed): pinned-RDD count and
-    // cached bytes per query. Under NO_CLEANUP the curve is the accretion
-    // evidence; with cleanup on it must stay flat (the proof it works).
+    // Accretion instrumentation: pinned-RDD count and cached bytes per
+    // query. With the release above the curve must stay flat (the proof
+    // it works).
     def storageLine(): String = {
       val infos = spark.sparkContext.getRDDStorageInfo
       val mb = infos.map(i => i.memSize + i.diskSize).sum >> 20

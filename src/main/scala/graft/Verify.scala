@@ -119,11 +119,14 @@ object Verify {
             return
           }
           try {
-            // Distinct pool per query: under FAIR mode, pools are weighted
-            // equally against each other while the DEFAULT pool's internal
-            // order is FIFO — without this, pool-submitted jobs all land in
-            // the default pool and a long query still starves short ones.
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+            // Distinct pool per in-flight query: under FAIR mode, pools are
+            // weighted equally against each other while the DEFAULT pool's
+            // internal order is FIFO — without this, pool-submitted jobs
+            // all land in the default pool and a long query still starves
+            // short ones. A worker thread runs one query at a time, so its
+            // name is such a pool, and Spark creates at most 4 of them.
+            spark.sparkContext.setLocalProperty("spark.scheduler.pool",
+              Thread.currentThread.getName)
             // write under a dot-prefixed temp name, then atomic-rename:
             // a kill mid-write can then never leave a half-visible result
             // dir — everything the driver's compare can see is complete

@@ -369,11 +369,6 @@ object BlockIngest {
       raw: DataFrame,
       outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    parse(raw)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writeBronze(batch, outDir)
-      }
-      .start()
+    graft.streaming.StreamOps.onArrival(parse(raw), checkpointDir)(
+      (batch, _) => writeBronze(batch, outDir))
 }

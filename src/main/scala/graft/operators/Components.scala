@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames.releaseCheckpoint
+
 /** Connected components over an undirected edge list — the step that turns
   * near-duplicate PAIRS (graft.operators.Dedup) into dedup CLUSTERS, so a
   * curation pipeline can keep one canonical document per group of mutual
@@ -63,6 +65,7 @@ object Components {
     // union-find is direction-agnostic and dedup-tolerant: the raw edge
     // list suffices, no symmetrize/distinct needed on this path
     graft.util.SmallInput.take(chk).foreach { take =>
+      releaseCheckpoint(chk)
       return (unionFind(take, edges.sparkSession), 1)
     }
     // distributed path: symmetrize once (min-propagation needs both
@@ -71,6 +74,7 @@ object Components {
       .union(chk.select(col("b").as("a"), col("a").as("b")))
       .distinct()
       .localCheckpoint()
+    releaseCheckpoint(chk)
     var labels = sym.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
       .localCheckpoint()
@@ -97,9 +101,11 @@ object Components {
         .select(col("id"), col("prev"), coalesce(col("lbl2"), col("lbl")).as("lbl"))
         .localCheckpoint()
       converged = jumped.filter(col("lbl") =!= col("prev")).isEmpty
+      releaseCheckpoint(labels)
       labels = jumped.select(col("id"), col("lbl"))
       it += 1
     }
+    releaseCheckpoint(sym)
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     (labels.select(col("id"), col("lbl").as("component")), it)
   }

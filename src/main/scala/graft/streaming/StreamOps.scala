@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupState
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming operator library (SURVEY.md §2B "Streaming" — the
   * streaming-only semantics with no batch oracle: watermarks, late-data
@@ -20,6 +21,21 @@ import org.apache.spark.sql.streaming.OutputMode
   * Scale notes: every stateful op is keyed (window×type, event_id, user),
   * so state partitions across executors; watermarks bound state size —
   * without them streaming dedup/window state grows forever at 100 TB/day.
+  *
+  * Store layout of every arrival store (the `*OnArrival` sinks, their
+  * `*Batch` bodies and [[toParquetExactlyOnce]]): a parquet directory
+  * partitioned by `batch_id`, one partition per micro-batch. A batch
+  * writes only its own partition and overwrites it whole, so a replay of
+  * the same (batchId, data) after a crash rewrites that partition in
+  * place instead of appending duplicates, and every other partition is
+  * immutable. Streaming batch ids are non-negative; two negative ids are
+  * reserved: [[RecoveryBatchId]] (the ANN heal's older-node edges) and
+  * [[CompactBatchId]] (a compacted store). A compaction never rewrites a
+  * store in place: it folds the source into the one [[CompactBatchId]]
+  * partition of a FRESH store, leaving the source untouched (idempotent,
+  * a crash costs only the partial output), and the caller swaps
+  * directories afterwards. Ingest resumes on the swapped store: later
+  * batches land beside the compacted partition.
   */
 object StreamOps {
 
@@ -162,14 +178,10 @@ object StreamOps {
       probeKey: String, buildKey: String,
       probeTs: String, buildTs: String,
       outDir: String, checkpointDir: String) =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.plans.AsOf.join(batch, builds, probeKey, buildKey, probeTs, buildTs)
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
+    onArrival(stream, checkpointDir) { (batch, _) =>
+      graft.plans.AsOf.join(batch, builds, probeKey, buildKey, probeTs, buildTs)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming dedup-on-arrival: each micro-batch of documents is
     * near-dup-checked against the PERSISTED corpus bucket index
@@ -178,9 +190,7 @@ object StreamOps {
     * batch), and only clean docs append to the corpus — with their bucket
     * keys appended to the index, so the next batch checks against them
     * too. First batch bootstraps both stores. Replays are IDEMPOTENT by
-    * construction, not by collision: both stores write
-    * batch_id-partitioned with dynamic partition overwrite (the
-    * toParquetExactlyOnce pattern), so a crash between the two writes —
+    * construction, not by collision: a crash between the two writes —
     * or after either and before the offset commit — is healed when the
     * replayed batch overwrites its own partitions. (A plain append would
     * duplicate corpus rows on exactly that crash: the replayed docs'
@@ -188,13 +198,7 @@ object StreamOps {
     * with themselves.) */
   def dedupOnArrival(docs: DataFrame, corpusDir: String, indexDir: String,
       checkpointDir: String, threshold: Double = 0.8) =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, corpusDir, indexDir, threshold)
-      }
-      .start()
+    onArrival(docs, checkpointDir)(dedupBatch(_, _, corpusDir, indexDir, threshold))
 
   /** The dedup-on-arrival foreachBatch body, public so the replay contract
     * is directly testable (StreamOpsSpec drives it with a deliberately
@@ -239,17 +243,16 @@ object StreamOps {
       case _ => selfClean
     }
     val kept = clean.localCheckpoint()
-    kept.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(corpusDir)
-    Dedup.lshBuckets(Dedup.minhashSignatures(kept))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(indexDir)
+    try {
+      writeBatch(kept, batchId, corpusDir)
+      writeBatch(Dedup.lshBuckets(Dedup.minhashSignatures(kept)), batchId, indexDir)
+    } finally {
+      // clean's plan holds selfClean and the fresh-batch buckets
+      // incrementalNearDups pinned, losers' the components labels, and
+      // pairs' minhashNearDups' buckets beside the caller's batch
+      Seq(kept, clean, losers).foreach(graft.util.Frames.releaseCheckpoint)
+      graft.util.Frames.releaseCheckpointBeyond(pairs, batch)
+    }
   }
 
   /** Reserved batch_id partition values of the ANN stores. Streaming
@@ -267,6 +270,37 @@ object StreamOps {
     *     partition except this one. */
   val RecoveryBatchId = -1L
   val CompactBatchId = -2L
+
+  /** Run `body` on every micro-batch of `stream`, with its batch id, as a
+    * checkpointed append-mode query: the one streaming sink of every
+    * arrival store (and of BlockIngest.streamBronze). */
+  private[graft] def onArrival(stream: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append())
+      .foreachBatch(body)
+      .start()
+
+  /** Write `df` as batch `batchId` of the store at `dir`: the batch's own
+    * `batch_id` partition is overwritten and every other one kept. The
+    * dynamic mode is scoped to this writer — a session-level conf flip
+    * would leak into every later partitioned overwrite, silently
+    * breaking full-table compaction rewrites. */
+  private def writeBatch(df: DataFrame, batchId: Long, dir: String): Unit =
+    writeBatch(df, lit(batchId), dir)
+
+  /** [[writeBatch]] with a per-row batch id. */
+  private def writeBatch(df: DataFrame, batchId: Column, dir: String): Unit =
+    df.withColumn("batch_id", batchId)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(dir)
+
+  /** The one partition a compaction of a store fills under `outDir`. */
+  private def compactDir(outDir: String): String =
+    s"$outDir/batch_id=$CompactBatchId"
 
   /** Row cap above which componentsBatch's relabel frames (candidate
     * nodes, merge map) shuffle-join instead of broadcasting — ~32 MB of
@@ -311,13 +345,7 @@ object StreamOps {
     * exactly-once replay contract of this sink possible at all. */
   def annIngestOnArrival(vecs: DataFrame, vecDir: String, edgeDir: String,
       checkpointDir: String, r: Int = 12) =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annIngestBatch(batch, batchId, vecDir, edgeDir, r)
-      }
-      .start()
+    onArrival(vecs, checkpointDir)(annIngestBatch(_, _, vecDir, edgeDir, r))
 
   /** Quantile-summary maintenance on arrival — the streaming form of
     * q_agg_quantile_sketch (as dedupOnArrival is of q_dedup_incremental
@@ -346,13 +374,7 @@ object StreamOps {
     * rows (StreamOpsSpec pins it). */
   def quantileOnArrival(vals: DataFrame, storeDir: String,
       checkpointDir: String, k: Int = 64) =
-    vals.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        quantileSummaryBatch(batch, batchId, storeDir, k)
-      }
-      .start()
+    onArrival(vals, checkpointDir)(quantileSummaryBatch(_, _, storeDir, k))
 
   /** The quantile-ingest foreachBatch body (public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill). */
@@ -360,19 +382,15 @@ object StreamOps {
       storeDir: String, k: Int): Unit = {
     val summ = graft.operators.Freq.quantileSummary(
       batch.select(col("day"), col("v")), k)
-    summ.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    writeBatch(summ, batchId, storeDir)
     // quantileSummary pins its day-counts frame (and, on the heavy-day
     // route, the ordinal slices) as localCheckpoints inside summ's lazy
     // plan — the write above was their last reader, and a stream running
     // thousands of micro-batches must not leave one pinned frame per
     // batch to the driver's rare GC (the accretion discipline every
-    // other arrival sink here follows). releaseCheckpoint walks summ's
-    // plan and frees every checkpoint leaf.
-    graft.util.Frames.releaseCheckpoint(summ)
+    // other arrival sink here follows). The release walks summ's plan and
+    // frees every checkpoint leaf but the caller's batch's own.
+    graft.util.Frames.releaseCheckpointBeyond(summ, batch)
   }
 
   /** Read quantiles off the arrival-built summary store: one
@@ -477,7 +495,7 @@ object StreamOps {
       .withColumn("w", col("tr") - coalesce(lag(col("tr"), 1).over(wLag), lit(0L)))
       .select(col("day"), col("v"), col("tr").as("rnk"), col("w"))
     out.write.mode("overwrite")
-      .parquet(s"$outDir/batch_id=$CompactBatchId")
+      .parquet(compactDir(outDir))
     graft.util.Frames.releaseCheckpoint(cum)
   }
 
@@ -510,13 +528,7 @@ object StreamOps {
     * path with no streaming replay to heal it). */
   def topkOnArrival(items: DataFrame, storeDir: String,
       checkpointDir: String, k: Int = 64) =
-    items.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        topkSummaryBatch(batch, batchId, storeDir, k)
-      }
-      .start()
+    onArrival(items, checkpointDir)(topkSummaryBatch(_, _, storeDir, k))
 
   /** The heavy-hitter-ingest foreachBatch body (public like
     * [[dedupBatch]]: directly testable, doubles as a batch backfill).
@@ -555,12 +567,7 @@ object StreamOps {
       .crossJoin(broadcast(thr))
       .select(lit(null).cast(counts.schema("item").dataType).as("item"),
         lit(0L).as("cnt"), col("n"), col("dec"), lit(true).as("audit"))
-    survivors.unionByName(audit)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+    writeBatch(survivors.unionByName(audit), batchId, storeDir)
     graft.util.Frames.releaseCheckpoint(counts)
   }
 
@@ -627,7 +634,7 @@ object StreamOps {
         lit(true).as("audit"))
     survivors.unionByName(audit)
       .write.mode("overwrite")
-      .parquet(s"$outDir/batch_id=$CompactBatchId")
+      .parquet(compactDir(outDir))
     graft.util.Frames.releaseCheckpoint(folded)
     graft.util.Frames.releaseCheckpoint(store)
   }
@@ -752,13 +759,7 @@ object StreamOps {
     * grows by ≤ |days-in-batch| KB-scale sketch rows per batch. */
   def distinctOnArrival(rows: DataFrame, storeDir: String,
       checkpointDir: String, lgK: Int = 14) =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        distinctSummaryBatch(batch, batchId, storeDir, lgK)
-      }
-      .start()
+    onArrival(rows, checkpointDir)(distinctSummaryBatch(_, _, storeDir, lgK))
 
   /** The distinct-ingest foreachBatch body (public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill). Replay-idempotent
@@ -769,14 +770,9 @@ object StreamOps {
     * identical (StreamOpsSpec pins it). */
   def distinctSummaryBatch(batch: DataFrame, batchId: Long,
       storeDir: String, lgK: Int): Unit =
-    batch.select(col("day"), col("id"))
+    writeBatch(batch.select(col("day"), col("id"))
       .groupBy(col("day"))
-      .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+      .agg(hll_sketch_agg(col("id"), lit(lgK)).as("sk")), batchId, storeDir)
 
   /** Per-day distinct estimates off the arrival-built HLL store: one
     * sketch-sized union pass, never a fact re-scan.
@@ -797,7 +793,7 @@ object StreamOps {
     spark.read.parquet(storeDir)
       .groupBy(col("day"))
       .agg(hll_union_agg(col("sk"), lit(false)).as("sk"))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$CompactBatchId")
+      .write.mode("overwrite").parquet(compactDir(outDir))
 
   // ---- BM25 inverted index on arrival ------------------------------------
 
@@ -816,13 +812,7 @@ object StreamOps {
     * postings and corpus stats alike (see [[bm25IngestBatch]]). */
   def bm25OnArrival(docs: DataFrame, indexDir: String,
       checkpointDir: String) =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bm25IngestBatch(batch, batchId, indexDir)
-      }
-      .start()
+    onArrival(docs, checkpointDir)(bm25IngestBatch(_, _, indexDir))
 
   /** The BM25-ingest foreachBatch body, public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill. Two dynamic
@@ -855,20 +845,12 @@ object StreamOps {
       .select(col("doc_id"), col("text"))
       .localCheckpoint()
     try {
-      graft.queries.Search.bm25Postings(b, onlyTerms = None)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(indexDir)
-      b.select(col("doc_id"),
+      writeBatch(graft.queries.Search.bm25Postings(b, onlyTerms = None),
+        batchId, indexDir)
+      writeBatch(b.select(col("doc_id"),
           when(col("text").isNotNull,
-            size(split(col("text"), " ")).cast("long")).as("dl"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(s"$indexDir/_docs")
+            size(split(col("text"), " ")).cast("long")).as("dl")),
+        batchId, s"$indexDir/_docs")
     } finally graft.util.Frames.releaseCheckpoint(b)
   }
 
@@ -962,11 +944,11 @@ object StreamOps {
     post.join(latest, col("doc_id") === col("l_doc") && col("b") === col("lb"))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
       .write.mode("overwrite")
-      .parquet(s"$outDir/batch_id=$CompactBatchId")
+      .parquet(compactDir(outDir))
     docsT.join(latest, col("doc_id") === col("l_doc") && col("b") === col("lb"))
       .select(col("doc_id"), col("dl"))
       .write.mode("overwrite")
-      .parquet(s"$outDir/_docs/batch_id=$CompactBatchId")
+      .parquet(compactDir(s"$outDir/_docs"))
   }
 
   /** The ANN-ingest foreachBatch body, public for the same reason as
@@ -1048,17 +1030,10 @@ object StreamOps {
         pruned.withColumn("batch_id", lit(batchId))
     }
     val ne = newEdges.localCheckpoint() // pin before the vec write lands
-    b.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(vecDir)
+    writeBatch(b, batchId, vecDir)
     // ne carries its own per-row batch_id (the heal path splits between
     // the batch's partition and the recovery partition)
-    ne.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(edgeDir)
+    writeBatch(ne, col("batch_id"), edgeDir)
     // Release every checkpoint this batch pinned: the batch frame, the
     // pre-batch corpus view, the per-hop search deltas backing newEdges'
     // lazy plan (or the bootstrap build's final frame), and ne itself —
@@ -1129,13 +1104,8 @@ object StreamOps {
       .map(_.agg(max(col("batch_id").cast("long"))).first())
       .filter(!_.isNullAt(0)).map(_.getLong(0))
       .getOrElse(CompactBatchId.toLong)
-    ids.select(col("cand_id")).distinct()
-      .withColumn("wm", lit(wm))
-      .withColumn("batch_id", lit(delBatchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(tombstonePath(vecDir))
+    writeBatch(ids.select(col("cand_id")).distinct().withColumn("wm", lit(wm)),
+      delBatchId, tombstonePath(vecDir))
     java.nio.file.Files.createDirectories(marker.getParent)
     java.nio.file.Files.write(marker,
       wm.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1145,13 +1115,7 @@ object StreamOps {
     * forget) maintained with the same checkpoint/replay contract as the
     * ingest sink. */
   def annDeleteOnArrival(ids: DataFrame, vecDir: String, checkpointDir: String) =
-    ids.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        annDeleteBatch(batch, batchId, vecDir)
-      }
-      .start()
+    onArrival(ids, checkpointDir)(annDeleteBatch(_, _, vecDir))
 
   /** The store's tombstones as (cand_id, wm) with the greatest watermark
     * per id; absent when none exist. Pre-round-15 tombstone partitions
@@ -1367,7 +1331,7 @@ object StreamOps {
       .filter(col("_rn") === 1)
       .select(col("cand_id"), col("cv"))
       .localCheckpoint()
-    Layout.compact(vecs, s"$outVecDir/batch_id=$CompactBatchId",
+    Layout.compact(vecs, compactDir(outVecDir),
       targetFileRows, sortCols = Seq("cand_id"))
     val allEdges = symmetrized(spark.read.parquet(edgeDir)).distinct()
     // DEAD ids: tombstoned with no surviving re-ingest — only these lose
@@ -1381,7 +1345,7 @@ object StreamOps {
     val tDead = tDeadCk.filter(_.limit(1).count() > 0)
     tDead match {
       case None =>
-        Layout.compact(allEdges, s"$outEdgeDir/batch_id=$CompactBatchId",
+        Layout.compact(allEdges, compactDir(outEdgeDir),
           targetFileRows, sortCols = Seq("src"))
       case Some(t) =>
         // Dangling-edge heal: dropping a node's edges leaves its former
@@ -1422,7 +1386,7 @@ object StreamOps {
             .unionAll(pruned.select(col("dst").as("src"), col("src").as("dst")))
             .distinct()
         }
-        Layout.compact(healed, s"$outEdgeDir/batch_id=$CompactBatchId",
+        Layout.compact(healed, compactDir(outEdgeDir),
           targetFileRows, sortCols = Seq("src"))
         graft.util.Frames.releaseCheckpoint(kept)
         graft.util.Frames.releaseCheckpoint(probes)
@@ -1477,13 +1441,7 @@ object StreamOps {
     * delta is a pure function of (batch, pre-batch map). */
   def componentsOnArrival(edges: DataFrame, mapDir: String, edgeDir: String,
       checkpointDir: String) =
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        componentsBatch(batch, batchId, mapDir, edgeDir)
-      }
-      .start()
+    onArrival(edges, checkpointDir)(componentsBatch(_, _, mapDir, edgeDir))
 
   /** The components foreachBatch body (public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill). */
@@ -1495,11 +1453,7 @@ object StreamOps {
     val e = batch.select(col("src"), col("dst")).localCheckpoint()
     // edges first (the ANN sink's vec-first discipline): a crash after
     // this write replays into the same delta computation either way
-    e.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(edgeDir)
+    writeBatch(e, batchId, edgeDir)
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
       .localCheckpoint()
@@ -1525,14 +1479,16 @@ object StreamOps {
       .join(labeled.select(col("node").as("dst"), col("lbl").as("lb")), "dst")
       .filter(col("la") =!= col("lb"))
       .select(col("la").as("src"), col("lb").as("dst"))
-    val mergeMap = (
+    val merges =
       if (lblEdges.limit(1).count() == 0)
         spark.emptyDataFrame
           .select(lit(0L).as("lbl"), lit(0L).as("newc")).limit(0)
       else Components.connectedComponents(lblEdges)
         .filter(col("id") =!= col("component"))
         .select(col("id").as("lbl"), col("component").as("newc"))
-    ).localCheckpoint()
+    val mergeMap = merges.localCheckpoint()
+    // the components labels behind merges are dead once copied
+    graft.util.Frames.releaseCheckpoint(merges)
     // merge cardinality decides both the relabel guard and the join
     // strategy below; mergeMap is checkpointed so the count is label-sized
     val nMerge = mergeMap.count()
@@ -1575,11 +1531,7 @@ object StreamOps {
     }
     val delta = resolvedNew.unionAll(relabeled).localCheckpoint()
     candCk.foreach(graft.util.Frames.releaseCheckpoint)
-    delta.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(mapDir)
+    writeBatch(delta, batchId, mapDir)
     graft.util.Frames.releaseCheckpoint(delta)
     graft.util.Frames.releaseCheckpoint(mergeMap)
     graft.util.Frames.releaseCheckpoint(labeled)
@@ -1606,14 +1558,13 @@ object StreamOps {
   /** Streaming EDGE-STORE maintenance — the graph-rank member of the
     * arrival-store family (quantiles/topk/distinct/bm25/components/ANN
     * all have one; rank reads were the one asymmetry). Each micro-batch
-    * of (src, dst) rows lands as an append-only batch partition (the
-    * bm25/quantile store discipline: idempotent dynamic overwrite of
-    * the batch's OWN partition, replays rewrite identical content);
-    * the current edge set is the read-time distinct union, so duplicate
-    * edges — within a batch, across batches, or from a replay — never
-    * double-count. Rank reads ([[pagerankStoreRead]]) run the EXACT
-    * batch loop over that edge set: read ≡ from-scratch recompute by
-    * construction, StreamOpsSpec pins it (plus replay idempotence and
+    * of (src, dst) rows lands as an append-only batch partition
+    * (replays rewrite identical content); the current edge set is the
+    * read-time distinct union, so duplicate edges — within a batch,
+    * across batches, or from a replay — never double-count. Rank reads
+    * ([[pagerankStoreRead]]) run the EXACT batch loop over that edge
+    * set: read ≡ from-scratch recompute by construction, StreamOpsSpec
+    * pins it (plus replay idempotence and
     * compaction invariance). Per-batch ingest cost is batch-sized (one
     * partition write, no store read at all — unlike components, rank
     * state is not incrementally maintainable without approximation, so
@@ -1622,24 +1573,13 @@ object StreamOps {
     * Graph.pagerank's). Surfaced in SQL as graft_pagerank_store. */
   def edgesOnArrival(edges: DataFrame, edgeDir: String,
       checkpointDir: String) =
-    edges.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        edgesIngestBatch(batch, batchId, edgeDir)
-      }
-      .start()
+    onArrival(edges, checkpointDir)(edgesIngestBatch(_, _, edgeDir))
 
   /** The edge-ingest foreachBatch body (public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill). */
   def edgesIngestBatch(batch: DataFrame, batchId: Long,
       edgeDir: String): Unit =
-    batch.select(col("src"), col("dst"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(edgeDir)
+    writeBatch(batch.select(col("src"), col("dst")), batchId, edgeDir)
 
   /** Current edge set of the arrival-built store: the distinct
     * (src, dst) union of every batch partition — one shuffle on the
@@ -1666,7 +1606,7 @@ object StreamOps {
   def edgesCompactStore(spark: org.apache.spark.sql.SparkSession,
       edgeDir: String, outDir: String): Unit =
     edgesStoreRead(spark, edgeDir)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$CompactBatchId")
+      .write.mode("overwrite").parquet(compactDir(outDir))
 
   // ---- entity store on arrival (MDM reads) -------------------------------
 
@@ -1677,10 +1617,8 @@ object StreamOps {
     * of part-shaped records (p_partkey, p_name, p_brand, p_type,
     * p_size) is compacted to ONE per-name summary row — nid = min
     * partkey, n_parts = count, plus the min-partkey row's
-    * brand/type/size — and appended as an idempotent batch partition
-    * (dynamic overwrite of the batch's OWN partition, the
-    * quantile/topk/edges store discipline). Entity reads
-    * ([[entitiesStoreRead]]) fold the summaries — min/sum are
+    * brand/type/size — and appended as an idempotent batch partition.
+    * Entity reads ([[entitiesStoreRead]]) fold the summaries — min/sum are
     * associative, the representative follows the global min nid — and
     * run the SHARED [[graft.operators.Dedup.erEntitiesFrom]] blocking →
     * scoring → closure → survivorship: read ≡ from-scratch
@@ -1708,13 +1646,7 @@ object StreamOps {
     * SAME batch is idempotent). */
   def entitiesOnArrival(records: DataFrame, storeDir: String,
       checkpointDir: String) =
-    records.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        entitiesIngestBatch(batch, batchId, storeDir)
-      }
-      .start()
+    onArrival(records, checkpointDir)(entitiesIngestBatch(_, _, storeDir))
 
   /** The entity-ingest foreachBatch body (public like [[dedupBatch]]:
     * directly testable, doubles as a batch backfill). */
@@ -1728,14 +1660,9 @@ object StreamOps {
     val rep = batch
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("p_name"), col("p_brand"), col("p_type"), col("p_size"))
-    agg.join(rep, Seq("p_name"))
+    writeBatch(agg.join(rep, Seq("p_name"))
       .select(col("p_name").as("name"), col("nid"), col("n_parts"),
-        col("p_brand"), col("p_type"), col("p_size"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(storeDir)
+        col("p_brand"), col("p_type"), col("p_size")), batchId, storeDir)
   }
 
   /** The folded name dim of the arrival-built entity store: ids =
@@ -1774,7 +1701,7 @@ object StreamOps {
     ids.join(rep, Seq("name"))
       .select(col("name"), col("nid"), col("n_parts"),
         col("p_brand"), col("p_type"), col("p_size"))
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$CompactBatchId")
+      .write.mode("overwrite").parquet(compactDir(outDir))
   }
 
   /** Sink an event stream as parquet with checkpointing (ack analog). */
@@ -1787,14 +1714,12 @@ object StreamOps {
       .start()
 
   /** Idempotent parquet sink for batch REPLAYS: each micro-batch
-    * overwrites its own `batch_id=N` partition (dynamic partition
-    * overwrite, scoped to THIS writer — a session-level conf flip would
-    * leak into every later partitioned overwrite, silently breaking
-    * full-table compaction rewrites). Re-executing a batch after a crash
-    * between write and offset-commit replaces its partition instead of
-    * appending duplicates — the guarantee Spark's docs call exactly-once
-    * via idempotent foreachBatch sinks. Scope: it holds when the SAME
-    * batch (same id, same data) re-runs, i.e. with the checkpoint intact;
+    * overwrites its own `batch_id=N` partition. Re-executing a batch
+    * after a crash between write and offset-commit replaces its partition
+    * instead of appending duplicates — the guarantee Spark's docs call
+    * exactly-once via idempotent foreachBatch sinks. Scope: it holds
+    * when the SAME batch (same id, same data) re-runs, i.e. with the
+    * checkpoint intact;
     * losing the checkpoint re-batches the source arbitrarily, and no
     * batch-keyed sink can dedup across different batchings (that needs
     * row-keyed dedup, `streamingDedup`). The reference's per-row DB
@@ -1802,17 +1727,7 @@ object StreamOps {
     * guarantee. */
   def toParquetExactlyOnce(df: DataFrame, outDir: String,
       checkpointDir: String) =
-    df.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .start()
+    onArrival(df, checkpointDir)(writeBatch(_, _, outDir))
 
   /** Drift-on-arrival: per micro-batch, the arriving rows' bucket
     * histogram is compared against a STATIC reference histogram with
@@ -1825,27 +1740,18 @@ object StreamOps {
     * `stream` must carry an int `bucket` column (bucketing is the
     * caller's narrow projection); `reference` is a static bucketed frame.
     * The per-batch cost is batch-sized + the (tiny) reference aggregate;
-    * the batch_id-partitioned dynamic-overwrite write makes replays
-    * idempotent (the toParquetExactlyOnce pattern). */
+    * the row is a pure function of the batch and the static reference,
+    * so replays are idempotent. */
   def driftOnArrival(stream: DataFrame, reference: DataFrame, outDir: String,
       checkpointDir: String, smoothBuckets: Int) = {
     val ref = reference.select(col("bucket"), lit(true).as("is_old"))
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.queries.Drift.psi(
-            ref.unionByName(batch.select(col("bucket"), lit(false).as("is_old"))),
-            smoothBuckets)
-          .filter(col("bucket") === -1)
-          .select(col("n_old").as("n_ref"), col("n_new").as("n_batch"),
-            col("psi_micro"), col("psi"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-      }
-      .start()
+    onArrival(stream, checkpointDir) { (batch, batchId) =>
+      writeBatch(graft.queries.Drift.psi(
+          ref.unionByName(batch.select(col("bucket"), lit(false).as("is_old"))),
+          smoothBuckets)
+        .filter(col("bucket") === -1)
+        .select(col("n_old").as("n_ref"), col("n_new").as("n_batch"),
+          col("psi_micro"), col("psi")), batchId, outDir)
+    }
   }
 }

@@ -23,11 +23,21 @@ object Frames {
     * analyzed plan with no Dataset handle. */
   def releaseCheckpointPlan(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    plan.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    checkpointRdds(plan).foreach(_.unpersist(blocking = false))
+
+  /** [[releaseCheckpoint]] of `df` that spares every checkpoint of
+    * `input`'s plan — for a frame built from a caller's input, whose
+    * pinned blocks (a backfill may pass a localCheckpointed frame) belong
+    * to the caller. */
+  def releaseCheckpointBeyond(df: DataFrame, input: DataFrame): Unit = {
+    val callers = checkpointRdds(input.queryExecution.analyzed).map(_.id).toSet
+    checkpointRdds(df.queryExecution.analyzed).filterNot(r => callers(r.id))
+      .foreach(_.unpersist(blocking = false))
+  }
+
+  private def checkpointRdds(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+    plan.collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
 
   /** Whether every checkpoint-backed leaf of `plan` still holds its
     * blocks. A localCheckpoint has no lineage: once ANY external party

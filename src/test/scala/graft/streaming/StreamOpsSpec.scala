@@ -554,6 +554,15 @@ class StreamOpsSpec extends SparkSpec {
     val delIds = before.filter(col("rn") === 1)
       .select(col("cand_id")).distinct().collect().map(_.getLong(0)).toSet
     assert(delIds.nonEmpty)
+    // a copy of the pre-delete store, for the stream form below
+    val (vecDirS, edgeDirS) = (s"$tmp/vecs_s", s"$tmp/edges_s")
+    Seq(vecDir -> vecDirS, edgeDir -> edgeDirS).foreach { case (from, to) =>
+      val src = java.nio.file.Paths.get(from)
+      val walk = java.nio.file.Files.walk(src)
+      try walk.forEach(p => java.nio.file.Files.copy(p,
+        java.nio.file.Paths.get(to).resolve(src.relativize(p))))
+      finally walk.close()
+    }
     StreamOps.annDeleteBatch(delIds.toSeq.toDF("cand_id"), 0L, vecDir)
     // 1) deleted ids never surface again; every probe still gets k rows
     val after = StreamOps.annIncrementalSearch(probes, vecDir, edgeDir, k = 3)
@@ -571,6 +580,21 @@ class StreamOpsSpec extends SparkSpec {
       .select(col("probe_id"), col("cand_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet === after.toSet,
       "delete replay must not change search results")
+    // 2b) the stream form: the same deletes fed through annDeleteOnArrival
+    // leave the same tombstones and the same search result
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[Long]
+    val q = StreamOps.annDeleteOnArrival(in.toDF().toDF("cand_id"), vecDirS,
+      s"$tmp/ckpt_del")
+    try { in.addData(delIds.toSeq); q.processAllAvailable() } finally q.stop()
+    def tombs(dir: String) = spark.read.parquet(s"$dir/_tombstones")
+      .select(col("cand_id"), col("wm"), col("batch_id").cast("long"))
+      .collect().map(_.toSeq).toSet
+    assert(tombs(vecDirS) === tombs(vecDir))
+    assert(StreamOps.annIncrementalSearch(probes, vecDirS, edgeDirS, k = 3)
+      .select(col("probe_id"), col("cand_id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === after.toSet,
+      "stream deletes must search like the direct annDeleteBatch calls")
     // 3) compaction physically purges: vectors gone, tombstone sidecar
     // gone, no edge touches a deleted id, affected survivors re-linked
     StreamOps.annCompactStore(spark, vecDir, edgeDir,
@@ -1378,6 +1402,64 @@ class StreamOpsSpec extends SparkSpec {
     // the stored edges reproduce the stream (rebuild/audit path)
     assert(spark.read.parquet(s"$tmp/edges").select("src", "dst").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet === all.toSet)
+  }
+
+  test("arrival bodies: no call leaves a persisted RDD behind, at bootstrap or on a populated store") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("arrival_release").toString
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val docs = Seq(
+      Seq((1L, base + " one"), (2L, "totally different words entirely here now"),
+        (3L, base + " two")),
+      Seq((10L, base + " three"), (11L, "unrelated fresh content with novel tokens")))
+    val (v0, v1, _, _) = embSlices()
+    val vecs = Seq(v0, v1)
+    val vals = Seq((1 to 300).map(i => ("d1", i.toLong * 7 % 101)),
+      (1 to 200).map(i => ("d2", i.toLong)))
+    val items = Seq(Seq.fill(50)("hot") ++ (1 to 90).map(i => s"t${i % 30}"),
+      Seq.fill(20)("warm") ++ (1 to 40).map(i => s"u${i % 8}"))
+    val ids = Seq((1 to 60).map(i => ("d1", (i % 40).toLong)),
+      (1 to 50).map(i => ("d2", i.toLong)))
+    val edges = Seq(Seq((1L, 2L), (2L, 3L), (10L, 11L)), Seq((20L, 21L), (3L, 10L)))
+    val parts = Seq(
+      Seq((1L, "red box", "B1", "T1", 3), (2L, "red box", "B2", "T1", 4),
+        (3L, "blue can", "B1", "T2", 5)),
+      Seq((4L, "red boxes", "B3", "T1", 3), (5L, "green jar", "B2", "T3", 1)))
+    // each body, as (store root, batch) => one call
+    val bodies: Seq[(String, (String, Int) => Unit)] = Seq(
+      "dedupBatch" -> ((d, i) => StreamOps.dedupBatch(
+        docs(i).toDF("doc_id", "text"), i, s"$d/dd/corpus", s"$d/dd/index", 0.6)),
+      "quantileSummaryBatch" -> ((d, i) => StreamOps.quantileSummaryBatch(
+        vals(i).toDF("day", "v"), i, s"$d/q", 16)),
+      "topkSummaryBatch" -> ((d, i) => StreamOps.topkSummaryBatch(
+        items(i).toDF("item"), i, s"$d/mg", 8)),
+      "distinctSummaryBatch" -> ((d, i) => StreamOps.distinctSummaryBatch(
+        ids(i).toDF("day", "id"), i, s"$d/hll", 12)),
+      "bm25IngestBatch" -> ((d, i) => StreamOps.bm25IngestBatch(
+        docs(i).toDF("doc_id", "text"), i, s"$d/bm25")),
+      "annIngestBatch" -> ((d, i) => StreamOps.annIngestBatch(
+        vecs(i).toDF("cand_id", "cv"), i, s"$d/ann/vecs", s"$d/ann/edges", 12)),
+      "annDeleteBatch" -> ((d, i) => StreamOps.annDeleteBatch(
+        Seq(vecs(i).head._1).toDF("cand_id"), i, s"$d/ann/vecs")),
+      "componentsBatch" -> ((d, i) => StreamOps.componentsBatch(
+        edges(i).toDF("src", "dst"), i, s"$d/cc/map", s"$d/cc/edges")),
+      "edgesIngestBatch" -> ((d, i) => StreamOps.edgesIngestBatch(
+        edges(i).toDF("src", "dst"), i, s"$d/edges")),
+      "entitiesIngestBatch" -> ((d, i) => StreamOps.entitiesIngestBatch(
+        parts(i).toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size"),
+        i, s"$d/er")))
+    val sc = spark.sparkContext
+    // batch 0 bootstraps each store, batch 1 runs against the populated
+    // one; the driver arms and the distributed chains each fill their own
+    // stores
+    val leaks = for (arm <- Seq("arms", "distributed"); (name, body) <- bodies;
+        i <- 0 to 1) yield {
+      val before = sc.getPersistentRDDs.keySet
+      if (arm == "arms") body(s"$tmp/$arm", i)
+      else graft.util.SmallInput.distributed(body(s"$tmp/$arm", i))
+      s"$name ($arm, batch $i)" -> sc.getPersistentRDDs.keys.count(!before(_))
+    }
+    assert(leaks.filter(_._2 > 0).isEmpty)
   }
 
   test("stream-stream interval join: signups within the hour match, older do not") {
