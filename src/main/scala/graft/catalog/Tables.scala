@@ -12,12 +12,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  /** Opt-in in-memory table cache (set -Dgraft.cacheTables=true): the
-    * buffer-pool analog for repeated-query workloads — Bench enables it so
-    * per-query time measures compute, not re-scanning the same parquet 76
-    * times. Off by default: Verify and tests read cold like the driver. */
-  private val cached = scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
   /** Stable per-session cache key: a DataFrame cached under a stopped or
     * replaced session must never be handed to a new one (it would fail at
     * execution) — each session gets its own cache entries. A UUID is
@@ -36,9 +30,13 @@ object Tables {
     }
   }
 
+  /** A base table. Under the bench buffer pool ([[graft.util.Memo]]) it
+    * is read once per session and persisted, so per-query time measures
+    * compute, not re-scanning the same parquet; off (Verify, tests) every
+    * call reads cold like the driver. */
   def t(s: SparkSession, dir: String, name: String): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.cacheTables"))
-      cached.getOrElseUpdate((sessionKey(s), dir, name), {
+    if (graft.util.Memo.pooled)
+      graft.util.Memo.benchMemo(s, dir, s"table:$name") {
         val raw = s.read.parquet(path(dir, name))
         // Spread PAYLOAD-HEAVY pooled tables to the session's
         // parallelism when the file gives fewer splits (optimization
@@ -72,10 +70,9 @@ object Tables {
                "supplier" | "embeddings" => math.min(8, p)
           case _ => 1
         }
-        (if (raw.rdd.getNumPartitions < target)
-           raw.repartition(target)
-         else raw).persist()
-      })
+        if (raw.rdd.getNumPartitions < target) raw.repartition(target)
+        else raw
+      }
     else s.read.parquet(path(dir, name))
 
   def region(s: SparkSession, dir: String): DataFrame   = t(s, dir, "region")

@@ -831,7 +831,7 @@ object Dedup {
       // keeps the checkpointed form (its self-join would otherwise
       // re-execute the banding pipeline per side).
       val cands =
-        if (java.lang.Boolean.getBoolean("graft.cacheTables"))
+        if (graft.util.Memo.pooled)
           lshCandidatesLazy(buckets500(s, dir))
         else lshCandidates(buckets500(s, dir))
       verifyJaccard(documents(s, dir).filter(col("doc_id") < 500), cands, 0.5)
@@ -922,11 +922,8 @@ object Dedup {
     // q_dedup_semantic. Pair work is cluster-scoped Σ|c|² over LEARNED
     // cells — the arXiv:2303.09540 shape end to end, no label crutch.
     "q_dedup_semantic_kmeans" -> ((s, dir) => {
-      val embs = embeddings(s, dir)
-      val cb = Ann.kmeansPortableMemo(s, dir,
-        embs.select(col("vec_id"), col("embedding")), Ann.kmK, Ann.kmIters)
       semanticDedup(
-        Ann.assignPortable(embs, cb)
+        Ann.assignPortable(embeddings(s, dir), Ann.kmeansCodebook(s, dir))
           .select(col("vec_id"), col("cluster"), col("embedding")),
         threshold = 0.3)
         .orderBy(col("vec_id"))

@@ -1134,7 +1134,7 @@ object Graph {
   private[graft] def symSliceShared(s: SparkSession, dir: String)
       : (DataFrame, () => Unit) = {
     def build = symmetrizedSliceEdges(s, dir).repartition(col("src"))
-    if (java.lang.Boolean.getBoolean("graft.cacheTables"))
+    if (graft.util.Memo.pooled)
       (graft.util.Memo.benchMemo(s, dir, "graph:sym_slice_src")(build),
         () => ())
     else {
@@ -1296,7 +1296,7 @@ object Graph {
     * invoking the handle. Accessor: level t as (s, v, sigma). */
   private[graft] def sigma53Shared(s: SparkSession, dir: String,
       ed: DataFrame, radius: Int): (Int => DataFrame, () => Unit) =
-    if (java.lang.Boolean.getBoolean("graft.cacheTables")) {
+    if (graft.util.Memo.pooled) {
       // a radius change would pin the superseded per-level set alongside
       // the new one for the rest of the session (advice r17 #5) — drop
       // any differently-keyed sigma53 family for this dir first

@@ -5,6 +5,8 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Frames.releaseCheckpoint
+
 /** Byte-pair-encoding vocabulary induction — the tokenizer-training half
   * of an LLM data pipeline, DataFrame-native.
   *
@@ -385,9 +387,6 @@ object Vocab {
     usage.join(scores, Seq("piece"))
       .select(col("piece"), col("cnt"), col("logp_e4"))
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.util.Frames.releaseCheckpoint(df)
 
   /** The FIXED demo piece table of q_text_viterbi_apply (the
     * [[demoMerges]] analog): hand-set integer scores — no ln anywhere

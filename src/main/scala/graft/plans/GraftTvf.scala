@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
+import graft.catalog.Tables
+import graft.util.FixtureCache
+
 /** SQL table-valued functions over the operator library — the plain-SQL
   * entry point for operators that are DataFrame-first:
   *
@@ -60,7 +63,7 @@ object GraftTvf {
     val fn = "graft_near_dups"
     require(children.size == 2, s"$fn(dir, threshold) takes 2 arguments")
     val spark = SparkSession.active
-    val docs = graft.catalog.Tables.documents(spark, str(children, 0, fn))
+    val docs = Tables.documents(spark, str(children, 0, fn))
     val d = graft.operators.Dedup
     d.verifyJaccard(docs,
         d.lshCandidatesLazy(d.lshBuckets(d.minhashSignatures(docs))),
@@ -75,7 +78,7 @@ object GraftTvf {
     require(children.size == 3, s"$fn(dir, width, overlap) takes 3 arguments")
     val spark = SparkSession.active
     graft.operators.Pack
-      .chunk(graft.catalog.Tables.documents(spark, str(children, 0, fn)),
+      .chunk(Tables.documents(spark, str(children, 0, fn)),
         int(children, 1, fn), int(children, 2, fn))
       .queryExecution.analyzed
   }
@@ -88,7 +91,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val terms = str(children, 1, fn).split("\\s+").toSeq.filter(_.nonEmpty)
     graft.queries.Search
-      .bm25(graft.catalog.Tables.documents(spark, str(children, 0, fn))
+      .bm25(Tables.documents(spark, str(children, 0, fn))
           .select(org.apache.spark.sql.functions.col("doc_id"),
             org.apache.spark.sql.functions.col("text")),
         terms, int(children, 2, fn))
@@ -133,9 +136,7 @@ object GraftTvf {
   /** mtime stamp of the table file a loop TVF reads — keys the memo so
     * a rewritten source dir re-resolves instead of serving stale loops. */
   private def dirStamp(dir: String, table: String): String =
-    try java.nio.file.Files
-      .getLastModifiedTime(java.nio.file.Paths.get(dir, s"$table.parquet"))
-      .toMillis.toString
+    try FixtureCache.sourceMtime(dir, table).toString
     catch { case _: java.io.IOException => "0" }
 
   private def loopMemo(key: String)(build: => DataFrame): LogicalPlan = {
@@ -159,9 +160,6 @@ object GraftTvf {
     }
   }
 
-  private def sessionKey(spark: SparkSession): String =
-    graft.catalog.Tables.sessionKey(spark)
-
   /** graft_pagerank(dir, iters) — the FULL (node, rank) integer-pagerank
     * map over `dir`'s part↔supplier co-purchase graph (the q_graph_pagerank
     * graph without the top-20 cut: ORDER BY/LIMIT belong to the enclosing
@@ -177,7 +175,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
     val iters = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$iters") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$iters") {
       graft.operators.Graph
         .pagerank(graft.operators.Graph.partSupplierEdges(spark, dir), iters)
     }
@@ -194,7 +192,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
     val rounds = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds") {
       graft.operators.Graph
         .labelAssign(graft.operators.Graph.jaccardSliceEdges(spark, dir), rounds)
     }
@@ -210,7 +208,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
     val rounds = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds") {
       graft.operators.Graph
         .louvainAssign(graft.operators.Graph.jaccardSliceEdges(spark, dir), rounds)
     }
@@ -227,7 +225,7 @@ object GraftTvf {
     val seeds = (2 until children.size).map(i => lng(children, i, fn))
     val dir = str(children, 0, fn)
     val iters = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$iters|${seeds.mkString(",")}") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$iters|${seeds.mkString(",")}") {
       graft.operators.Graph
         .pagerankPersonalized(
           graft.operators.Graph.partSupplierEdges(spark, dir),
@@ -247,7 +245,7 @@ object GraftTvf {
     val sources = (2 until children.size).map(i => lng(children, i, fn))
     val dir = str(children, 0, fn)
     val rounds = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds|${sources.mkString(",")}") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$rounds|${sources.mkString(",")}") {
       graft.operators.Graph
         .ssspWeighted(
           graft.operators.Graph.sliceEdgesWeighted(spark, dir),
@@ -266,7 +264,7 @@ object GraftTvf {
     val dir = str(children, 0, fn)
     val k = int(children, 1, fn)
     val rounds = int(children, 2, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$k|$rounds") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$k|$rounds") {
       graft.operators.Graph
         .ktrussPeel(graft.operators.Graph.jaccardSliceEdges(spark, dir), k, rounds)
     }
@@ -302,7 +300,7 @@ object GraftTvf {
       if (children.size == 3) Some(int(children, 2, fn) != 0) else None
     val armKey = arm.map(b => if (b) "1" else "0").getOrElse("auto")
     loopMemo(
-      s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$radius|$armKey") {
+      s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$radius|$armKey") {
       import org.apache.spark.sql.functions.col
       val edges = graft.operators.Graph.symmetrizedSliceEdges(spark, dir)
       val bc = arm.getOrElse {
@@ -325,7 +323,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
     val radius = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$radius") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "lineitem")}|$radius") {
       val ed = graft.operators.Graph.symmetrizedSliceEdges(spark, dir)
       graft.operators.Graph.betweennessBounded(ed,
         graft.operators.Graph.sources53(ed), radius)
@@ -346,7 +344,7 @@ object GraftTvf {
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
     val iters = int(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${storeStamp(dir)}|$iters") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${FixtureCache.storeStamp(dir)}|$iters") {
       graft.streaming.StreamOps.pagerankStoreRead(spark, dir, iters)
     }
   }
@@ -365,44 +363,10 @@ object GraftTvf {
     require(children.size == 1, s"$fn(store_dir) takes 1 argument")
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${storeStamp(dir)}") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${FixtureCache.storeStamp(dir)}") {
       graft.streaming.StreamOps.entitiesStoreRead(spark, dir)
     }
   }
-
-  /** Change stamp of a STORE directory (batch_id=N partition layout):
-    * recursive max mtime DOWN TO LEAF FILES, folded with the file count
-    * and total byte size. mtime alone (even recursive) is blind to two
-    * rewrites of the same partition inside the filesystem's mtime
-    * granularity — a same-millisecond replay would serve a stale memo;
-    * count+size make a content change distinguishable even in the same
-    * tick (advice r16). Walk cost is a metadata listing of a
-    * summary-sized store — never data-sized. */
-  private def storeStamp(dir: String): String =
-    try {
-      val p = java.nio.file.Paths.get(dir)
-      var mx = java.nio.file.Files.getLastModifiedTime(p).toMillis
-      var cnt = 0L
-      var bytes = 0L
-      val s = java.nio.file.Files.walk(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          val m = java.nio.file.Files.getLastModifiedTime(c).toMillis
-          if (m > mx) mx = m
-          if (java.nio.file.Files.isRegularFile(c)) {
-            cnt += 1
-            bytes += java.nio.file.Files.size(c)
-          }
-        }
-        s"$mx:$cnt:$bytes"
-      } finally s.close()
-    } catch {
-      // walk's lazy iteration surfaces I/O races as UncheckedIOException
-      case _: java.io.IOException => "0"
-      case _: java.io.UncheckedIOException => "0"
-    }
 
   /** graft_ann_search(vec_dir, edge_dir, probe_id, k) — "more like this"
     * over a PERSISTED incremental ANN store ([[graft.streaming.StreamOps]]
@@ -459,8 +423,8 @@ object GraftTvf {
     import org.apache.spark.sql.functions.{coalesce, col}
     val dir = str(children, 0, fn)
     val tau = dbl(children, 1, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "documents")}|$tau") {
-      val docs = graft.catalog.Tables.documents(spark, dir)
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "documents")}|$tau") {
+      val docs = Tables.documents(spark, dir)
       val d = graft.operators.Dedup
       val pairs = d.verifyJaccard(docs,
         d.lshCandidatesLazy(d.lshBuckets(d.minhashSignatures(docs))), tau)
@@ -561,7 +525,7 @@ object GraftTvf {
     import org.apache.spark.sql.functions.col
     graft.operators.Dedup
       .semanticDedup(
-        graft.catalog.Tables.embeddings(spark, str(children, 0, fn))
+        Tables.embeddings(spark, str(children, 0, fn))
           .select(col("vec_id"), col("label").as("cluster"), col("embedding")),
         dbl(children, 1, fn))
       .queryExecution.analyzed
@@ -580,7 +544,7 @@ object GraftTvf {
     val dir = str(children, 0, fn)
     val k = int(children, 1, fn)
     val iters = int(children, 2, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}|$k|$iters") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}|$k|$iters") {
       graft.operators.Ann.kmeansFrame(spark, dir, k, iters).localCheckpoint()
     }
   }
@@ -599,9 +563,9 @@ object GraftTvf {
     val dir = str(children, 0, fn)
     val eps = dbl(children, 1, fn)
     val minPts = int(children, 2, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}|$eps|$minPts") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}|$eps|$minPts") {
       graft.operators.Cluster.dbscan(
-        graft.catalog.Tables.embeddings(spark, dir), eps, minPts)
+        Tables.embeddings(spark, dir), eps, minPts)
         .localCheckpoint()
     }
   }
@@ -619,7 +583,7 @@ object GraftTvf {
     require(children.size == 1, s"$fn(dir) takes 1 argument")
     val spark = SparkSession.active
     val dir = str(children, 0, fn)
-    loopMemo(s"$fn|${sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}") {
+    loopMemo(s"$fn|${Tables.sessionKey(spark)}|$dir|${dirStamp(dir, "embeddings")}") {
       graft.operators.Ann.silhouetteFrame(spark, dir).localCheckpoint()
     }
   }

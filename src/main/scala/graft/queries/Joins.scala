@@ -387,18 +387,15 @@ object Joins {
 
   /** Write orders + lineitem as 8-bucket tables on their join key
     * (Layout.writeBucketed — one file per bucket), once per
-    * (JVM, source-fingerprint) — the write-once discipline of
-    * Scans.partitionedEvents, extended to the session catalog (bucket
-    * metadata lives in the catalog, so the read must go through
-    * `spark.table`, not a raw parquet path). Table names carry the
-    * fingerprint: a regenerated source can never be served from a stale
-    * catalog entry. */
+    * (JVM, source-fingerprint). Not a [[graft.util.FixtureCache]] build:
+    * the bucket metadata lives in the session catalog (the read must go
+    * through `spark.table`, not a raw parquet path), so the tables are
+    * registered there, not published as a path. Table names carry the
+    * FixtureCache stamp: a regenerated source can never be served from a
+    * stale catalog entry. */
   private val bucketLock = new Object
   private[queries] def bucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val src = java.nio.file.Paths.get(path(dir, "orders"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir@$mtime").toLong & 0xffffffffL)
+    val stamp = graft.util.FixtureCache.stamp(dir, "orders", "bkt")
     val names = (s"graft_orders_bkt_$stamp", s"graft_lineitem_bkt_$stamp")
     bucketLock.synchronized {
       def ensure(name: String, df: DataFrame, key: String): Unit =

@@ -21,91 +21,55 @@ object Scans {
 
   /** Materialize events partitioned by `event_type` (the bronze layout:
     * BlockIngest.writeBronze partitions by chain_name the same way) once per
-    * (JVM, source-fingerprint) under java.io.tmpdir, so q_scan_partition_prune
-    * can demonstrate DIRECTORY pruning — not just row-group pruning — end to
-    * end. The fingerprint folds in the source's mtime so a regenerated
-    * testdata set can never be served from a stale copy; the lock makes the
-    * write-once safe under Verify's thread pool. */
-  private val partLock = new Object
-  private[queries] def partitionedEvents(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(path(dir, "events"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir@$mtime").toLong & 0xffffffffL)
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_events_by_type_$stamp")
-    partLock.synchronized {
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        events(s, dir).write.mode("overwrite")
-          .partitionBy("event_type").parquet(out.toString)
-      }
+    * source fingerprint through [[graft.util.FixtureCache]], so
+    * q_scan_partition_prune can demonstrate DIRECTORY pruning — not just
+    * row-group pruning — end to end. */
+  private[queries] def partitionedEvents(s: SparkSession, dir: String): String =
+    graft.util.FixtureCache.buildOnce(dir, "events", "events_by_type") { staging =>
+      events(s, dir).write.mode("overwrite")
+        .partitionBy("event_type").parquet(staging.toString)
     }
-    out.toString
-  }
 
   /** Materialize lineitem z-order-clustered on (l_partkey, l_suppkey) once
-    * per (JVM, source-fingerprint) — same write-once discipline as
-    * [[partitionedEvents]]. The layout serves q_scan_zorder: multi-column
-    * clustering for stat-based skipping on EITHER dimension of an
-    * unpartitioned fact table (LayoutSpec measures the files-touched
-    * contrast vs a lexicographic sort; here the contract is that the
-    * clustered copy answers box filters exactly like the original). */
-  private val zorderLock = new Object
-  private[queries] def zorderedLineitem(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(path(dir, "lineitem"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$dir@$mtime").toLong & 0xffffffffL)
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_lineitem_zorder_$stamp")
-    zorderLock.synchronized {
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        graft.operators.Layout.zorderWrite(
-          lineitem(s, dir)
-            .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-              col("l_suppkey"), col("l_quantity"), col("l_extendedprice")),
-          out.toString, Seq("l_partkey", "l_suppkey"), bits = 8, files = 32)
-      }
+    * per source fingerprint (FixtureCache). The layout serves
+    * q_scan_zorder: multi-column clustering for stat-based skipping on
+    * EITHER dimension of an unpartitioned fact table (LayoutSpec measures
+    * the files-touched contrast vs a lexicographic sort; here the contract
+    * is that the clustered copy answers box filters exactly like the
+    * original). */
+  private[queries] def zorderedLineitem(s: SparkSession, dir: String): String =
+    graft.util.FixtureCache.buildOnce(dir, "lineitem", "lineitem_zorder") { staging =>
+      graft.operators.Layout.zorderWrite(
+        lineitem(s, dir)
+          .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
+            col("l_suppkey"), col("l_quantity"), col("l_extendedprice")),
+        staging.toString, Seq("l_partkey", "l_suppkey"), bits = 8, files = 32)
     }
-    out.toString
-  }
 
-  /** Materialize events in an interchange format once per (JVM,
-    * source-fingerprint) — the same write-once discipline as
-    * [[partitionedEvents]]. Timestamps ride as epoch-micros longs so the
-    * round trip has no timezone/format surface. Serves the
+  /** Materialize events in an interchange format once per source
+    * fingerprint (FixtureCache). Timestamps ride as epoch-micros longs so
+    * the round trip has no timezone/format surface. Serves the
     * q_scan_{jsonl,csv,orc} family: the format-conversion contract (an
     * export re-read through the explicit-schema quarantine readers
     * answers queries exactly like the parquet original). */
-  private val exportLock = new Object
   private[queries] def exportedEvents(s: SparkSession, dir: String,
-      format: String): String = {
-    val src = java.nio.file.Paths.get(path(dir, "events"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$format:$dir@$mtime").toLong & 0xffffffffL)
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_events_${format}_$stamp")
-    exportLock.synchronized {
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        val flat = events(s, dir)
-          .select(col("event_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"))
-        val w = flat.write.mode("overwrite")
-        format match {
-          case "jsonl" => w.json(out.toString)
-          case "csv" => w.option("header", "true").csv(out.toString)
-          case "orc" => w.orc(out.toString)
-          case "xml" => w.option("rowTag", "event").option("rootTag", "events")
-            .xml(out.toString)
-          // no spark-avro datasource in this distribution — the engine's
-          // own container-file sink (per-partition imperative encoder)
-          case "avro" => graft.sources.AvroSource.write(flat, out.toString)
-        }
+      format: String): String =
+    graft.util.FixtureCache.buildOnce(dir, "events", s"events_$format") { staging =>
+      val out = staging.toString
+      val flat = events(s, dir)
+        .select(col("event_id"), unix_micros(col("ts").cast("timestamp")).as("ts_us"),
+          col("user_id"), col("event_type"), col("value"))
+      val w = flat.write.mode("overwrite")
+      format match {
+        case "jsonl" => w.json(out)
+        case "csv" => w.option("header", "true").csv(out)
+        case "orc" => w.orc(out)
+        case "xml" => w.option("rowTag", "event").option("rootTag", "events").xml(out)
+        // no spark-avro datasource in this distribution — the engine's
+        // own container-file sink (per-partition imperative encoder)
+        case "avro" => graft.sources.AvroSource.write(flat, out)
       }
     }
-    out.toString
-  }
 
   private[queries] val eventExportSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
@@ -117,55 +81,31 @@ object Scans {
 
   /** Two-version parquet export for schema-evolution-on-read: v1 files
     * carry (event_id, user_id) — the schema before `value` existed — and
-    * v2 files carry all three columns. Same mtime-stamped caching as the
-    * format exports. */
-  private[queries] def exportedEvolvedEvents(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(path(dir, "events"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"evolve:$dir@$mtime").toLong & 0xffffffffL)
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_events_evolve_$stamp")
-    exportLock.synchronized {
-      if (!java.nio.file.Files.exists(out.resolve("_DONE"))) {
-        val e = events(s, dir)
-        e.filter(col("event_id") < 5000).select(col("event_id"), col("user_id"))
-          .write.mode("overwrite").parquet(out.resolve("v1").toString)
-        e.filter(col("event_id") >= 5000)
-          .select(col("event_id"), col("user_id"), col("value"))
-          .write.mode("overwrite").parquet(out.resolve("v2").toString)
-        java.nio.file.Files.write(out.resolve("_DONE"), Array.emptyByteArray)
-      }
+    * v2 files carry all three columns. Built once like the format
+    * exports. */
+  private[queries] def exportedEvolvedEvents(s: SparkSession, dir: String): String =
+    graft.util.FixtureCache.buildOnce(dir, "events", "events_evolve") { staging =>
+      val e = events(s, dir)
+      e.filter(col("event_id") < 5000).select(col("event_id"), col("user_id"))
+        .write.mode("overwrite").parquet(staging.resolve("v1").toString)
+      e.filter(col("event_id") >= 5000)
+        .select(col("event_id"), col("user_id"), col("value"))
+        .write.mode("overwrite").parquet(staging.resolve("v2").toString)
     }
-    out.toString
-  }
 
   /** Per-doc blob export for the binaryFile source (one .bin per doc_id
     * < 100, raw UTF-8 text bytes; written driver-side — Spark has no
     * binary-file WRITER, and 100 bounded fixture files are not a
-    * distributed write). Same mtime-stamped tmp-dir caching as
-    * [[exportedEvents]]. */
-  private[queries] def exportedDocBlobs(s: SparkSession, dir: String): String = {
-    val src = java.nio.file.Paths.get(path(dir, "documents"))
-    val mtime = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val stamp = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"blobs:$dir@$mtime").toLong & 0xffffffffL)
-    val out = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_doc_blobs_$stamp")
-    exportLock.synchronized {
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        java.nio.file.Files.createDirectories(out)
-        documents(s, dir).filter(col("doc_id") < 100)
-          .select(col("doc_id"), col("text")).collect().foreach { r =>
-            java.nio.file.Files.write(
-              out.resolve(f"doc_${r.getLong(0)}%05d.bin"),
-              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          }
-        java.nio.file.Files.write(out.resolve("_SUCCESS"), Array.emptyByteArray)
-      }
+    * distributed write). Built once like [[exportedEvents]]. */
+  private[queries] def exportedDocBlobs(s: SparkSession, dir: String): String =
+    graft.util.FixtureCache.buildOnce(dir, "documents", "doc_blobs") { staging =>
+      documents(s, dir).filter(col("doc_id") < 100)
+        .select(col("doc_id"), col("text")).collect().foreach { r =>
+          java.nio.file.Files.write(
+            staging.resolve(f"doc_${r.getLong(0)}%05d.bin"),
+            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
     }
-    out.toString
-  }
 
   /** The shared round-trip aggregate — integer-only (a double SUM would be
     * addition-order-dependent); identical for every export format, so all

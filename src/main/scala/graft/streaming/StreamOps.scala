@@ -659,10 +659,10 @@ object StreamOps {
         s"sidecar layout) $migrate")
     // The null-audit scan is a Spark action; a store validated once
     // stays valid until its files change, so cache the verdict per
-    // (dir, stamp) — stamp = max-mtime:file-count:bytes, the GraftTvf
-    // store-memo discipline (advice r17 #2: don't re-pay a full store
-    // listing + scan job on every read of an already-validated store).
-    val stamp = auditFormatStamp(storeDir)
+    // (dir, FixtureCache.storeStamp) — the GraftTvf store-memo key
+    // (advice r17 #2: don't re-pay a full store listing + scan job on
+    // every read of an already-validated store).
+    val stamp = graft.util.FixtureCache.storeStamp(storeDir)
     if (!auditValidated.contains((storeDir, stamp))) {
       require(store.filter(col("audit").isNull).limit(1).isEmpty,
         s"MG store $storeDir MIXES audit-column batches with pre-upgrade " +
@@ -673,29 +673,6 @@ object StreamOps {
 
   private val auditValidated =
     scala.collection.concurrent.TrieMap.empty[(String, String), Unit]
-
-  /** Cheap change stamp for a store dir (max mtime : file count : total
-    * bytes) — filesystem metadata only, no Spark job; any ingest,
-    * compaction swap, or migration moves at least one component. */
-  private def auditFormatStamp(dir: String): String =
-    try {
-      val p = java.nio.file.Paths.get(dir)
-      var mx = 0L; var cnt = 0L; var bytes = 0L
-      val s = java.nio.file.Files.walk(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) {
-          val c = it.next()
-          val m = java.nio.file.Files.getLastModifiedTime(c).toMillis
-          if (m > mx) mx = m
-          if (java.nio.file.Files.isRegularFile(c)) {
-            cnt += 1; bytes += java.nio.file.Files.size(c)
-          }
-        }
-      } finally s.close()
-      s"$mx:$cnt:$bytes"
-    // un-stat-able dir → a never-matching stamp, so validation re-runs
-    } catch { case _: java.io.IOException => s"unstat:${System.nanoTime()}" }
 
   /** Migrate a `_meta`-sidecar MG store (pre-round-16 format) to the
     * audit-column layout: each batch partition is rewritten with its

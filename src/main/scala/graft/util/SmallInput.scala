@@ -81,7 +81,7 @@ object SmallInput {
     scala.collection.concurrent.TrieMap.empty[(Long, String, String), AnyRef]
 
   private def memo[T <: AnyRef](df: DataFrame, cap: Int)(compute: => T): T =
-    if (distributedOnly || !java.lang.Boolean.getBoolean("graft.cacheTables"))
+    if (distributedOnly || !Memo.pooled)
       compute
     else {
       val inv = Memo.invocation
